@@ -197,15 +197,15 @@ def _q_index_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Position-list matching from the ENCODED index (block-selective
     position decode) — merged row: variants 'phrase' and 'near', each
     identical to the full-scan path's output."""
-    from glug_spark.query import wand
+    from glug_spark.query.searcher import Searcher
 
-    idx = _index_dir(spark, sf_dir)
+    s = Searcher(spark, _index_dir(spark, sf_dir), persist=False)
     a, b, slop = Q_NEAR
     return (
-        wand.phrase_docs_indexed(spark, idx, Q_PHRASE, n_buckets=8)
+        s.phrase_docs(Q_PHRASE)
         .withColumn("variant", F.lit("phrase"))
         .unionByName(
-            wand.near_docs_indexed(spark, idx, a, b, slop=slop, n_buckets=8)
+            s.near_docs(a, b, slop=slop)
             .withColumn("variant", F.lit("near"))
         )
     )
@@ -215,10 +215,10 @@ def _q_index_glob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed glob expansion from the index: the matched vocabulary
     is broadcast-joined onto the posting scan (never collected to the
     driver). Oracle = the same SQL as bm25_glob (rank-identity)."""
-    from glug_spark.query import wand
+    from glug_spark.query.searcher import Searcher
 
-    return wand.glob_topk(
-        spark, _index_dir(spark, sf_dir), Q_GLOB, k=10, n_buckets=8
+    return Searcher(spark, _index_dir(spark, sf_dir), persist=False).glob_topk(
+        Q_GLOB, k=10
     )
 
 
@@ -227,10 +227,10 @@ def _q_search_mixed_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the encoded index with filters applied inside the MaxScore
     kernel (exact — no heuristic candidate pool). Oracle = the same SQL
     as search_mixed (the full-scan path's oracle)."""
-    from glug_spark.query.execute import search_indexed
+    from glug_spark.query.searcher import Searcher
 
-    return search_indexed(
-        spark, _index_dir(spark, sf_dir), SEARCH_MIXED_QUERY, k=10, n_buckets=8
+    return Searcher(spark, _index_dir(spark, sf_dir), persist=False).search(
+        SEARCH_MIXED_QUERY, k=10
     )
 
 
@@ -368,14 +368,14 @@ def _q_delete_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     θ-seeding) and over the physically purged copy (variant 'purged':
     bit-equal to an index freshly built on the corpus minus the
     deleted docs)."""
-    from glug_spark.query import wand
+    from glug_spark.query.searcher import Searcher
 
     mor, purged = _deletes_dirs(spark, sf_dir)
     return (
-        wand.wand_topk(spark, mor, Q_OR, k=10, n_buckets=8)
+        Searcher(spark, mor, persist=False).topk(Q_OR, k=10)
         .withColumn("variant", F.lit("mor"))
         .unionByName(
-            wand.wand_topk(spark, purged, Q_OR, k=10, n_buckets=8)
+            Searcher(spark, purged, persist=False).topk(Q_OR, k=10)
             .withColumn("variant", F.lit("purged"))
         )
     )

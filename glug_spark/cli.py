@@ -5,7 +5,8 @@ Usage (ships as ``spark-submit --py-files glug_spark.zip cli.py ...``):
     # build the index
     spark-submit ... -m glug_spark.cli build  --input DIR --output DIR [--resume]
 
-    # query it (glug-dialect query string)
+    # query it (glug-dialect query string; the bucket count is read
+    # from the index)
     spark-submit ... -m glug_spark.cli query  --index DIR "data join" -k 10
 
     # glug-compatible listing (select expression over the corpus paths)
@@ -67,7 +68,9 @@ def main(argv: list[str] | None = None) -> int:
     b = sub.add_parser("build", help="build the inverted index")
     b.add_argument("--input", required=True)
     b.add_argument("--output", required=True)
-    b.add_argument("--buckets", type=int, default=16)
+    b.add_argument("--buckets", type=int, default=16,
+                   help="term-bucket partitions of the postings (queries "
+                        "and ingest read it back from the index)")
     b.add_argument("--resume", action="store_true")
     b.add_argument(
         "--doc-store", action="store_true",
@@ -79,7 +82,6 @@ def main(argv: list[str] | None = None) -> int:
     q.add_argument("query")
     q.add_argument("--index", required=True)
     q.add_argument("-k", type=int, default=10)
-    q.add_argument("--buckets", type=int, default=16)
     q.add_argument(
         "--urls", action="store_true",
         help="append each hit's url from the index docmap "
@@ -99,7 +101,6 @@ def main(argv: list[str] | None = None) -> int:
     qm.add_argument("file")
     qm.add_argument("--index", required=True)
     qm.add_argument("-k", type=int, default=10)
-    qm.add_argument("--buckets", type=int, default=16)
 
     ls = sub.add_parser("list", help="glug-style select listing")
     ls.add_argument("expression")
@@ -159,7 +160,6 @@ def main(argv: list[str] | None = None) -> int:
     ing.add_argument("--input", required=True,
                      help="arrivals directory (watched recursively)")
     ing.add_argument("--index", required=True)
-    ing.add_argument("--buckets", type=int, default=16)
     ing.add_argument(
         "--no-validate-doc-ids", action="store_true",
         help="skip the unique-doc_id range check (caller guarantees "
@@ -226,31 +226,22 @@ def main(argv: list[str] | None = None) -> int:
             )
             print(json.dumps(summary))
         elif args.command == "query":
-            if args.urls or args.snippets:
-                from glug_spark.query.searcher import Searcher
+            from glug_spark.query.searcher import Searcher
 
-                with Searcher(spark, args.index, n_buckets=args.buckets,
-                              persist=False) as s:
-                    rows = (
-                        s.search(args.query, k=args.k, with_urls=True,
-                                 with_snippets=args.snippets)
-                        .orderBy("rank").collect()
-                    )
-                for r in rows:
-                    line = (f"{r['rank']}\t{r['doc_id']}\t{r['score']}"
-                            f"\t{r['url']}")
-                    if args.snippets:
-                        line += f"\t{r['snippet']}"
-                    print(line)
-            else:
-                from glug_spark.query.execute import search_indexed
-
-                rows = search_indexed(
-                    spark, args.index, args.query, k=args.k,
-                    n_buckets=args.buckets,
-                ).collect()
-                for r in rows:
-                    print(f"{r['rank']}\t{r['doc_id']}\t{r['score']}")
+            with Searcher(spark, args.index, persist=False) as s:
+                rows = (
+                    s.search(args.query, k=args.k,
+                             with_urls=args.urls or args.snippets,
+                             with_snippets=args.snippets)
+                    .orderBy("rank").collect()
+                )
+            for r in rows:
+                line = f"{r['rank']}\t{r['doc_id']}\t{r['score']}"
+                if args.urls or args.snippets:
+                    line += f"\t{r['url']}"
+                if args.snippets:
+                    line += f"\t{r['snippet']}"
+                print(line)
         elif args.command == "curate":
             from glug_spark.operators.curation import curate_docs
 
@@ -293,8 +284,7 @@ def main(argv: list[str] | None = None) -> int:
                             f"line {i + 1} of {args.file}"
                         )
                     queries[qid] = q
-            with Searcher(spark, args.index, n_buckets=args.buckets,
-                          persist=False) as s:
+            with Searcher(spark, args.index, persist=False) as s:
                 rows = (
                     s.search_many(queries, k=args.k)
                     .orderBy("query_id", "rank").collect()
@@ -305,7 +295,7 @@ def main(argv: list[str] | None = None) -> int:
             from glug_spark.streaming.ingest import ingest_available
 
             print(json.dumps(ingest_available(
-                spark, args.input, args.index, n_buckets=args.buckets,
+                spark, args.input, args.index,
                 validate_doc_ids=not args.no_validate_doc_ids,
                 probe_namespaces=args.probe_namespaces,
                 auto_compact_groups=args.auto_compact_groups,

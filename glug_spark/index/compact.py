@@ -29,7 +29,7 @@ Design (LSM-style segment coarsening):
    byte-identical on disk and simply co-group under the coarser key.
 
 Every query path maps ``segment → grp`` (identity when no ``segmap/``
-exists) before its ``groupBy`` — see ``query.wand.scoring_group_col``.
+exists) before its ``groupBy`` — see ``query.searcher.Searcher._with_grp``.
 The invariant "scoring groups partition doc space" therefore survives
 any number of compactions, for any mix of merged and unmerged terms.
 
@@ -403,8 +403,6 @@ def compact_index(
     applies unchanged. Pass ``min_groups=1`` to force full coarsening
     (tests / single-core tools).
     """
-    from glug_spark.query import wand as _wand  # segmap cache invalidation
-
     src = os.path.join(index_dir, "postings")
     enc = spark.read.parquet(src)
     ensure_stream_consistent(spark, enc, index_dir)
@@ -474,12 +472,10 @@ def compact_index(
     from glug_spark.index.pipeline import (
         consolidate_for_bucket_write,
         dir_bytes,
+        read_params,
     )
 
-    n_buckets = int(
-        spark.read.parquet(os.path.join(index_dir, "params"))
-        .collect()[0]["n_buckets"]
-    )
+    n_buckets = int(read_params(spark, index_dir)["n_buckets"])
     out_rows = consolidate_for_bucket_write(
         untouched.select(cols).unionByName(merged.select(cols)),
         n_buckets=n_buckets,
@@ -505,7 +501,6 @@ def compact_index(
 
     shutil.rmtree(src)
     os.rename(tmp, src)
-    _wand.invalidate_segmap_cache(index_dir)
     return {
         "rows_before": before,
         "rows_after": after,

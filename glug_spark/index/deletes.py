@@ -58,14 +58,11 @@ DELETES_DIR = "deletes"
 #: purged docs in every idf.
 PURGE_LEDGER = "purge_ledger"
 
-#: tombstone set per index_dir (sorted int64 array, or None when the
-#: index has no deletes) — same single-writer cache discipline as the
-#: segmap/collection caches in query.wand
-_DELETED_CACHE: dict[str, "np.ndarray | None"] = {}
-
 
 def invalidate_deletes_cache(index_dir: str) -> None:
-    _DELETED_CACHE.pop(index_dir, None)
+    """No-op: the tombstone set is read fresh by every
+    :func:`read_deleted_ids` call (a Searcher pins it at open). Kept
+    because the frozen ``bench.py`` still imports it."""
 
 
 def _deletes_path(index_dir: str) -> str:
@@ -103,8 +100,6 @@ def delete_docs(
         df = spark.createDataFrame([(d,) for d in ids], "doc_id long")
         n = len(ids)
         df.write.mode("append").parquet(_deletes_path(index_dir))
-    if n:
-        invalidate_deletes_cache(index_dir)
     return {"tombstoned": int(n)}
 
 
@@ -134,10 +129,7 @@ def delete_by_url_glob(spark: SparkSession, index_dir: str,
 def read_deleted_ids(spark: SparkSession,
                      index_dir: str) -> "np.ndarray | None":
     """The tombstone set as a sorted distinct int64 array (the scoring
-    workers' live-docs mask), or None when the index has no deletes.
-    Cached per index_dir; invalidated by delete/purge."""
-    if index_dir in _DELETED_CACHE:
-        return _DELETED_CACHE[index_dir]
+    workers' live-docs mask), or None when the index has no deletes."""
     path = _deletes_path(index_dir)
     out: "np.ndarray | None" = None
     if os.path.exists(path):
@@ -146,7 +138,6 @@ def read_deleted_ids(spark: SparkSession,
             out = np.sort(np.asarray(
                 [int(r["doc_id"]) for r in rows], dtype=np.int64
             ))
-    _DELETED_CACHE[index_dir] = out
     return out
 
 
@@ -478,7 +469,9 @@ def purge_deletes(spark: SparkSession, index_dir: str) -> dict:
     10^12 docs this runs per bucket partition, embarrassingly
     parallel, no shuffle."""
     from glug_spark.index.compact import ensure_stream_consistent
-    from glug_spark.index.pipeline import docmap_n_buckets, read_docmap
+    from glug_spark.index.pipeline import (
+        docmap_n_buckets, read_docmap, read_params,
+    )
     from glug_spark.streaming.ingest import (
         _done_batches, _idf, _stream_manifest_path, _write_stats,
     )
@@ -499,7 +492,8 @@ def purge_deletes(spark: SparkSession, index_dir: str) -> dict:
             f"{index_dir}/docmap does not exist — purge needs the docmap "
             "to account removed docs exactly (rebuild writes it)"
         )
-    n_dm_buckets = docmap_n_buckets(spark, index_dir)
+    params = read_params(spark, index_dir)
+    n_dm_buckets = docmap_n_buckets(params)
     aff_buckets = sorted({int(d) % n_dm_buckets for d in deleted})
     deleted_df = spark.createDataFrame(
         [(int(d),) for d in deleted], "doc_id long"
@@ -512,7 +506,6 @@ def purge_deletes(spark: SparkSession, index_dir: str) -> dict:
         .select("doc_id").distinct().count()
     )
 
-    params = spark.read.parquet(os.path.join(index_dir, "params")).collect()[0]
     n_buckets = int(params["n_buckets"])
 
     # --- 1. rewrite the postings in ONE pass: every row flows through
@@ -629,7 +622,6 @@ def purge_deletes(spark: SparkSession, index_dir: str) -> dict:
 
     # --- 4. tombstones are served — clear them -------------------------
     shutil.rmtree(_deletes_path(index_dir), ignore_errors=True)
-    invalidate_deletes_cache(index_dir)
 
     return {
         "purged_docs": int(n_removed),

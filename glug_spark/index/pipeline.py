@@ -38,6 +38,7 @@ Dataflow (the part that must survive 10^12 docs):
 from __future__ import annotations
 
 import os
+import shutil
 
 import numpy as np
 import pandas as pd
@@ -108,8 +109,6 @@ def write_docmap(docs: "DataFrame", out_dir: str, sb: int,
     only ``--snippets`` serving needs it. mode=overwrite per sb
     sub-tree makes stream-batch replays idempotent (no duplicate map
     rows)."""
-    import shutil as _shutil
-
     url = (
         F.col("source").cast("string") if "source" in docs.columns
         else F.lit(None).cast("string")
@@ -123,7 +122,7 @@ def write_docmap(docs: "DataFrame", out_dir: str, sb: int,
         cols.append(text.alias("text"))
     path = os.path.join(out_dir, DOCMAP_DIR, f"sb={int(sb)}")
     if os.path.exists(path):
-        _shutil.rmtree(path)
+        shutil.rmtree(path)
     (
         docs.select(*cols)
         .withColumn("doc_bucket", doc_bucket_col(n_doc_buckets))
@@ -150,24 +149,42 @@ def read_docmap(spark: SparkSession, index_dir: str) -> "DataFrame | None":
     return spark.read.parquet(path)
 
 
-def docmap_n_buckets(spark: SparkSession, index_dir: str) -> int:
+def read_params(spark: SparkSession, index_dir: str) -> dict:
+    """The index's build parameters: the one-row ``params/`` table that
+    :func:`build_index` writes before encoding starts."""
+    return spark.read.parquet(
+        os.path.join(index_dir, "params")
+    ).collect()[0].asDict()
+
+
+def checked_n_buckets(params: dict, n_buckets: int | None,
+                      index_dir: str) -> int:
+    """The term-bucket count the index was built with. ``n_buckets`` is
+    an optional caller expectation: a value that disagrees with
+    ``params/`` raises instead of hashing terms to the wrong bucket
+    partitions (a query would silently miss postings; an ingest would
+    write them where no query looks)."""
+    built = int(params["n_buckets"])
+    if n_buckets is not None and int(n_buckets) != built:
+        raise ValueError(
+            f"n_buckets={n_buckets} disagrees with {index_dir}/params "
+            f"(built with n_buckets={built}); omit it to use the "
+            "index's own"
+        )
+    return built
+
+
+def docmap_n_buckets(params: dict) -> int:
     """The doc_bucket modulus this index's docmap was written with."""
-    p = spark.read.parquet(os.path.join(index_dir, "params")).collect()[0]
-    try:
-        n = p["n_doc_buckets"]
-    except Exception:
-        n = None
+    n = params.get("n_doc_buckets")
     return int(n) if n is not None else N_DOC_BUCKETS
 
 
-def index_doc_store(spark: SparkSession, index_dir: str) -> bool:
+def index_doc_store(spark: SparkSession, index_dir: str,
+                    params: dict) -> bool:
     """Whether this index's docmap stores full text (params flag;
     pre-flag indexes are probed by the docmap schema)."""
-    p = spark.read.parquet(os.path.join(index_dir, "params")).collect()[0]
-    try:
-        v = p["doc_store"]
-    except Exception:
-        v = None
+    v = params.get("doc_store")
     if v is not None:
         return bool(v)
     dm = read_docmap(spark, index_dir)
@@ -444,6 +461,11 @@ def build_index(
                 "resumed_segments_skipped": len(done_lineages),
             }
     else:
+        if os.path.exists(params_path):
+            # a fresh build replaces the whole index: side tables the
+            # new build does not write (deletes/, segmap/, the stream
+            # manifest, the purge ledger) would otherwise apply to it
+            shutil.rmtree(out_dir)
         n_docs = docs.count()
         spark.createDataFrame(
             [(int(n_buckets), int(n_docs), os.path.abspath(sf_dir),

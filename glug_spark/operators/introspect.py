@@ -27,9 +27,9 @@ def _dir_bytes(path: str) -> int:
 
 def index_stats(spark: SparkSession, index_dir: str) -> dict:
     """One JSON-able dict: corpus size, layout, vocab, stream state."""
-    params = spark.read.parquet(
-        os.path.join(index_dir, "params")
-    ).collect()[0]
+    from glug_spark.index.pipeline import read_params
+
+    params = read_params(spark, index_dir)
     coll_path = os.path.join(index_dir, "collection")
     coll = (
         spark.read.parquet(coll_path).collect()[0]

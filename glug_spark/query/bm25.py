@@ -340,7 +340,7 @@ def near_docs(docs: DataFrame, term_a: str, term_b: str, slop: int = 3,
     term before the join (predicate pushes to the scan), so the
     self-join touches posting-sized, not corpus-sized, inputs and
     shuffles on doc_id (unskewed). The index path
-    (query.wand.near_docs_indexed) answers the same query from encoded
+    (query.searcher.Searcher.near_docs) answers the same query from encoded
     position lists without re-tokenizing.
     """
     toks = docs.select(

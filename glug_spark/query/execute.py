@@ -9,8 +9,9 @@ declarative plan over the full-scan scorer (the oracle-comparable path):
 - score = disjunctive BM25 over all positive terms (glob-matched terms
   score with their own idf).
 
-The same plan shape runs against the encoded index (query.wand) by
-swapping the scorer; rank-identity between the two is the parity gate.
+The same query runs against the encoded index through
+:meth:`glug_spark.query.searcher.Searcher.search`; rank-identity
+between the two is the parity gate.
 """
 
 from __future__ import annotations
@@ -77,33 +78,3 @@ def search(docs: DataFrame, query: str, k: int = 10) -> DataFrame:
 
     return bm25._ranked_topk(per_doc, k)
 
-
-def search_indexed(spark: SparkSession, index_dir: str, query: str,
-                   k: int = 10, n_buckets: int = 16) -> DataFrame:
-    """Index-backed :func:`search`: same glug-dialect queries answered
-    from the encoded index — EXACT and rank-identical to the full-scan
-    path (differential tests assert it).
-
-    One distributed pass (query.wand.composed_topk): term roles — group
-    bitmask, negation flag, phrase membership, idf — are computed
-    JVM-side on term_stats and broadcast-joined onto the posting scan
-    (globs expand against the vocabulary without any driver collect),
-    and the group/negation/phrase filters run INSIDE the MaxScore
-    kernel, before θ-seeding and before each doc-space group's local
-    top-k. A selective filter therefore can never starve the result —
-    there is no heuristic candidate pool to exhaust.
-    """
-    from glug_spark.query import wand
-    from glug_spark.query.parser import parse_query
-
-    plan = parse_query(query)
-    if not plan.groups and not plan.phrases and not plan.nears:
-        raise ValueError(f"query has no positive constraint: {query!r}")
-    return wand.composed_topk(
-        spark, index_dir,
-        groups=plan.groups,
-        negations=plan.negations,
-        phrases=plan.phrases,
-        nears=plan.nears,
-        k=k, n_buckets=n_buckets,
-    )

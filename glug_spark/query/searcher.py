@@ -1,12 +1,28 @@
-"""Query-many handle: one index opened once, many low-latency queries.
+"""Index-backed query engine: one index opened once, many queries.
 
-The module-level functions in :mod:`glug_spark.query.wand` re-read the
-index metadata per call — always correct, but each query pays parquet
-listing/footers, a stats lookup job and plan analysis again (~2× the
-latency of the query itself on a warm executor). A :class:`Searcher`
-is the service shape: it opens the index ONCE, pins the tiny metadata
-(collection stats, segment map) on the driver, keeps the postings /
+:class:`Searcher` is the only query front end over the encoded index.
+It opens the index ONCE and pins the tiny metadata on the driver —
+build parameters (term and doc bucket counts, from ``params/``),
+collection stats, segment map, tombstone set — keeps the postings /
 term_stats DataFrames analyzed, and optionally ``persist()``s them.
+Every query kind (plain, batched, composed, glob, phrase, NEAR) runs
+the same plan:
+
+1. term→bucket via the md5-derived bucket used at build
+   (``pipeline.python_bucket``, bucket count from ``params/``), so the
+   posting scan prunes to the query terms' bucket partitions; glob
+   members push a ``startswith`` conjunct instead (row-group skipping
+   on the term-sorted layout).
+2. term stats (idf, query roles) ride a broadcast join onto the posting
+   scan; glob members expand against term_stats JVM-side, never
+   collected to the driver.
+3. posting rows are exchanged on their SCORING GROUP
+   (:func:`scorer_partitions`) and ``applyInPandas`` runs a
+   :mod:`glug_spark.query.wand` kernel per doc-space group (groups
+   partition doc space — also after compaction, via the ``segmap``
+   segment→grp mapping — so per-group top-k sets cover the global
+   top-k exactly).
+4. one k-bounded rank window merges the per-group top-k.
 
 Scale posture: term_stats is vocab-sized (fine to persist); postings
 persist is a knob — on a 100 TB index you leave it off and let
@@ -14,18 +30,211 @@ executor-side page cache + bucket pruning do the work, on a hot-bucket
 service you persist just the DataFrame (partition-level MEMORY_AND_DISK
 eviction keeps it bounded). NOTHING corpus-sized is ever collected.
 
-A Searcher snapshots the index layout at open time: reopen after
+A Searcher snapshots the index at open time: reopen after a rebuild,
 ``compact_index``, stream ingestion, or ``delete_docs``/``purge_deletes``
 (the tombstone set is pinned with the rest of the metadata).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import functools
+import operator
+from typing import Callable
 
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+
+from glug_spark.index.deletes import not_deleted_mask, resolve_deleted
+from glug_spark.index.pipeline import (
+    checked_n_buckets,
+    docmap_n_buckets,
+    python_bucket,
+    read_params,
+)
 from glug_spark.query import wand
 from glug_spark.query.parser import parse_query
-from glug_spark.index.pipeline import python_bucket
+
+_SCORE_SCHEMA = "doc_id long, raw_score double"
+_QUERY_SCORE_SCHEMA = "query_id string, doc_id long, raw_score double"
+_MANY_SCHEMA = "query_id string, rank int, doc_id long, score double"
+
+#: posting columns the scorers read — the positions blob (the largest
+#: column) is pruned unless a phrase/NEAR needs it
+_SCORING_COLS = [
+    "term", "segment", "df_local", "doc_gaps", "tfs", "dls",
+    "block_last", "block_max_tf",
+    "gap_offsets", "tf_offsets", "dl_offsets",
+]
+
+Members = list[tuple[str, str]]
+Kernel = Callable[[pd.DataFrame], pd.DataFrame]
+
+
+def scorer_partitions(rows: DataFrame) -> DataFrame:
+    """EXPLICIT grp-hash exchange feeding every ``groupBy("grp")``
+    scorer: a query's posting rows are tiny (KBs), so AQE's partition
+    coalescing folds the scorer's shuffle into ONE post-shuffle
+    partition and every per-group Arrow kernel runs sequentially on a
+    single core — measured 9.5 s for the 32-query batch at 50 groups
+    (1600 kernel invocations × ~6 ms, one task). A user-specified
+    ``repartition(n, "grp")`` is exempt from AQE coalescing and
+    satisfies the grouped-map clustering requirement, so it is the ONLY
+    exchange on the path and the kernels fan out across the cluster.
+    ``n`` = the session's shuffle parallelism (cluster-sized knob, not
+    a local constant)."""
+    spark = rows.sparkSession
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return rows.repartition(n, "grp")
+
+
+def _ranked_top(rows: DataFrame, scorer: Kernel, k: int) -> DataFrame:
+    """One grp exchange, the kernel ``scorer`` per scoring group, then
+    the global top-k + rank over its K-BOUNDED results, in ONE job.
+
+    Every scoring group emits ≤k rows, so the single-partition window
+    input is n_groups × k NARROW rows — the same volume a TakeOrdered
+    driver merge would see — and compaction bounds n_groups. Expressing
+    the merge as one window (instead of ``orderBy().limit(k)`` followed
+    by a rank window) removes the AQE stage-materialization + limit
+    jobs: 3 Spark jobs → 1, measured 0.36 s → 0.20 s per query at
+    sf0.1 local[32]. Full-scan paths (per-doc rows NOT k-bounded) keep
+    TakeOrderedAndProject — a global window there would sort the corpus.
+    """
+    per_group = scorer_partitions(rows).groupBy("grp").applyInPandas(
+        lambda pdf: scorer(pdf), schema=_SCORE_SCHEMA
+    )
+    w = Window.orderBy(F.desc("raw_score"), F.asc("doc_id"))
+    return (
+        per_group.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("rank", "doc_id", F.round("raw_score", 6).alias("score"))
+    )
+
+
+def _ranked_many(rows: DataFrame, scorer_for: Callable[[str], Kernel],
+                 k: int) -> DataFrame:
+    """Batched tail shared by :meth:`Searcher.topk_many` and
+    :meth:`Searcher.search_many`: one grp exchange, the kernel
+    ``scorer_for(query_id)`` over each query's rows of a group, then a
+    per-query rank window → (query_id, rank, doc_id, score).
+    ``scorer_for`` ships to the Python workers: it must close over
+    plain values, never the Searcher."""
+
+    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        outs = []
+        for qid, qpdf in pdf.groupby("query_id", sort=False):
+            res = scorer_for(qid)(qpdf)
+            res.insert(0, "query_id", qid)
+            outs.append(res)
+        return pd.concat(outs) if outs else pd.DataFrame(
+            {"query_id": [], "doc_id": [], "raw_score": []}
+        ).astype({"query_id": "object", "doc_id": "int64",
+                  "raw_score": "float64"})
+
+    per_group = scorer_partitions(rows).groupBy("grp").applyInPandas(
+        score_group, schema=_QUERY_SCORE_SCHEMA
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("raw_score"), F.asc("doc_id")
+    )
+    return (
+        per_group.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "rank", "doc_id",
+                F.round("raw_score", 6).alias("score"))
+    )
+
+
+def _sorted_docs(matched: DataFrame) -> DataFrame:
+    """doc_id-sorted match set WITHOUT a range-partitioned global sort:
+    ``orderBy`` samples its child to pick range boundaries, which
+    re-executes the Arrow scorer a second time per query (measured ~2×
+    the phrase query's cost). The matches are a narrow doc_id column —
+    one round-robin exchange into a single in-partition sort gives the
+    same total order for half the compute. (At cluster scale a huge
+    match set would page through the driver anyway; phrase/NEAR match
+    sets are doc-subset-sized.)"""
+    return matched.repartition(1).sortWithinPartitions("doc_id")
+
+
+def _member_pred(members: Members) -> F.Column:
+    """stats/postings `term` column predicate for group members.
+
+    Glob members carry their literal prefix as a ``startswith``
+    conjunct: rlike can't reach the parquet scan, but StringStartsWith
+    can — with the term-sorted row-group layout the scan skips whole
+    groups for prefixed globs like ``dat*``."""
+    from glug_spark.semantics.glob import full_match_regex, literal_prefix
+
+    terms = [v for kind, v in members if kind == "term"]
+    pred = F.col("term").isin(terms) if terms else F.lit(False)
+    for kind, v in members:
+        if kind == "glob":
+            gp = F.col("term").rlike(full_match_regex(v))
+            prefix = literal_prefix(v)
+            if prefix:
+                gp = F.col("term").startswith(prefix) & gp
+            pred = pred | gp
+    return pred
+
+
+def _pushable_member_pred(members: Members) -> F.Column | None:
+    """Weakened member predicate made ONLY of parquet-pushable leaves
+    (In / StringStartsWith), or None when some member has no pushable
+    form (a prefixless glob). Redundant with the exact predicate — it
+    exists purely so the posting SCAN gets row-group skipping; the
+    broadcast join still applies the exact semantics."""
+    from glug_spark.semantics.glob import literal_prefix
+
+    terms = [v for kind, v in members if kind == "term"]
+    parts = []
+    if terms:
+        parts.append(F.col("term").isin(terms))
+    for kind, v in members:
+        if kind == "glob":
+            prefix = literal_prefix(v)
+            if not prefix:
+                return None
+            parts.append(F.col("term").startswith(prefix))
+    if not parts:
+        return None
+    return functools.reduce(operator.or_, parts)
+
+
+def build_members(stats_df: DataFrame,
+                  groups: list[Members],
+                  negations: Members,
+                  phrase_words: list[str]) -> DataFrame:
+    """Per-term query roles as a DataFrame over term_stats: idf, group
+    bitmask, negation flag, phrase membership — computed JVM-side so
+    glob expansion never reaches the driver."""
+    if len(groups) > 62:
+        raise ValueError("too many conjunct groups (max 62)")
+    gmask_col = F.lit(0).cast("long")
+    for i, grp in enumerate(groups):
+        gmask_col = gmask_col + F.when(_member_pred(grp), F.lit(1 << i)
+                                       ).otherwise(F.lit(0)).cast("long")
+    is_neg_col = _member_pred(negations) if negations else F.lit(False)
+    is_phrase_col = (F.col("term").isin(phrase_words) if phrase_words
+                     else F.lit(False))
+    return (
+        stats_df.select(
+            "term", "idf",
+            gmask_col.alias("gmask"),
+            is_neg_col.alias("is_neg"),
+            is_phrase_col.alias("is_phrase"),
+        )
+        .where((F.col("gmask") != 0) | F.col("is_neg") | F.col("is_phrase"))
+    )
+
+
+def _position_words(phrases: list[list[str]],
+                    nears: list[tuple[str, str, int, bool]]) -> list[str]:
+    return list(dict.fromkeys(
+        [w for ph in phrases for w in ph]
+        + [w for a, b, _, _ in nears for w in (a, b)]
+    ))
 
 
 class Searcher:
@@ -33,14 +242,21 @@ class Searcher:
         self,
         spark: SparkSession,
         index_dir: str,
-        n_buckets: int = 16,
+        n_buckets: int | None = None,
         persist: bool = True,
     ) -> None:
+        """Open ``index_dir``. The term-bucket count comes from the
+        index's ``params/``; ``n_buckets`` is an optional expectation
+        and a value that disagrees raises ``ValueError`` before any
+        query can run."""
         from glug_spark.index.compact import read_segmap
+        from glug_spark.index.deletes import read_deleted_ids
 
+        params = read_params(spark, index_dir)
+        self.n_buckets = checked_n_buckets(params, n_buckets, index_dir)
+        self.n_doc_buckets = docmap_n_buckets(params)
         self.spark = spark
         self.index_dir = index_dir
-        self.n_buckets = n_buckets
         self._persisted: list[DataFrame] = []
 
         self.postings = spark.read.parquet(f"{index_dir}/postings")
@@ -49,7 +265,6 @@ class Searcher:
         coll = spark.read.parquet(f"{index_dir}/collection").collect()[0]
         self.avgdl = float(coll["avgdl"])
         self.n_docs = int(coll["n_docs"])
-        from glug_spark.index.deletes import read_deleted_ids
 
         #: merge-on-read tombstone set, pinned at open like the segmap.
         #: Shipped as a Spark broadcast (torrent, cached per executor
@@ -75,8 +290,6 @@ class Searcher:
         job, and touch the postings parquet footers via a metadata-only
         count (column-pruned count-star — no posting blob is read, and
         the persisted cache is NOT materialized)."""
-        import pandas as pd  # noqa: F401 — worker-side import warm
-
         (
             self.spark.createDataFrame([(1,)], "x int")
             .groupBy("x")
@@ -102,11 +315,63 @@ class Searcher:
     # --- internals -------------------------------------------------------
 
     def _with_grp(self, rows: DataFrame) -> DataFrame:
+        """Attach the scoring-group key ``grp``: the segment itself on
+        an uncompacted index, else the broadcast ``segmap`` lookup, so
+        all runs of a coarsened group — merged or untouched — co-group."""
         if self.segmap is None:
             return rows.withColumn("grp", F.col("segment"))
         return rows.join(F.broadcast(self.segmap), "segment", "left").withColumn(
             "grp", F.coalesce("grp", F.col("segment"))
         )
+
+    def _pruned(self, df: DataFrame, terms: list[str]) -> DataFrame:
+        """Rows of ``terms`` from a bucket-partitioned table (postings or
+        term_stats): partition pruning plus the parquet term IN-list."""
+        buckets = sorted({python_bucket(t, self.n_buckets) for t in terms})
+        return df.where(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
+
+    def _member_rows(self, member_lists: list[Members], members: DataFrame,
+                     positions: bool) -> DataFrame:
+        """Posting rows joined to the broadcast query-role table
+        ``members`` (one member list per query), grp attached. The scan
+        prunes bucket partitions when EVERY member is an explicit term,
+        and takes the pushable (In|StartsWith) conjunct when every query
+        has one; the exact member semantics ride the join."""
+        postings = self.postings
+        flat = [m for lst in member_lists for m in lst]
+        if all(kind == "term" for kind, _ in flat):
+            buckets = sorted({
+                python_bucket(v, self.n_buckets) for _, v in flat
+            })
+            postings = postings.where(F.col("bucket").isin(buckets))
+        pushables = [_pushable_member_pred(lst) for lst in member_lists]
+        if all(p is not None for p in pushables):
+            postings = postings.where(functools.reduce(operator.or_, pushables))
+        cols = _SCORING_COLS + (["positions", "pos_offsets"] if positions else [])
+        return self._with_grp(
+            postings.select(*cols).join(F.broadcast(members), "term")
+        )
+
+    def _match_docs(self, terms: list[str],
+                    hits: Callable[[pd.DataFrame], np.ndarray]) -> DataFrame:
+        """doc_id-sorted matches of a position query: ``hits`` maps one
+        scoring group's posting rows to its matching doc ids (it ships
+        to the workers, so it closes over plain values only); tombstoned
+        docs are dropped in the kernel."""
+        rows = self._with_grp(
+            self._pruned(self.postings, list(dict.fromkeys(terms))).drop("bucket")
+        )
+        deleted = self.deleted
+
+        def match_segment(pdf: pd.DataFrame) -> pd.DataFrame:
+            found = hits(pdf)
+            found = found[not_deleted_mask(resolve_deleted(deleted), found)]
+            return pd.DataFrame({"doc_id": found}).astype({"doc_id": "int64"})
+
+        matched = scorer_partitions(rows).groupBy("grp").applyInPandas(
+            match_segment, schema="doc_id long"
+        )
+        return _sorted_docs(matched)
 
     def attach_urls(self, results: DataFrame,
                     snippet_terms: list[str] | None = None) -> DataFrame:
@@ -120,10 +385,7 @@ class Searcher:
         deterministic match window of query.snippet computed on the doc
         store's ``text`` column — read only for the pruned buckets, and
         not read at all for url-only lookups (parquet column pruning)."""
-        from glug_spark.index.pipeline import (
-            docmap_n_buckets,
-            read_docmap,
-        )
+        from glug_spark.index.pipeline import read_docmap
         from glug_spark.query.snippet import snippet_col
 
         dm = read_docmap(self.spark, self.index_dir)
@@ -133,10 +395,9 @@ class Searcher:
                 "predates docmap; rebuild (build_index writes it) to "
                 "use with_urls"
             )
-        n = docmap_n_buckets(self.spark, self.index_dir)
         res = results.withColumn(
             "doc_bucket",
-            F.pmod(F.col("doc_id"), F.lit(n)).cast("int"),
+            F.pmod(F.col("doc_id"), F.lit(self.n_doc_buckets)).cast("int"),
         )
         out_cols = [c for c in results.columns]
         side: list[F.Column] = [F.col("url")]
@@ -164,32 +425,23 @@ class Searcher:
              conjunctive: bool = False,
              with_urls: bool = False,
              with_snippets: bool = False) -> DataFrame:
-        """Rank-identical to wand.wand_topk over the same index.
+        """Top-k (rank, doc_id, score), rank-identical to the full-scan
+        query.bm25.bm25_topk over the same corpus.
 
         Single Spark job: idf rides a broadcast stats join instead of a
         separate driver lookup (a vocab-absent term simply joins to
         nothing; the conjunctive scorer already returns empty when a
         term's list is missing from its group)."""
         uniq = list(dict.fromkeys(terms))
-        buckets = sorted({python_bucket(t, self.n_buckets) for t in uniq})
-        stats = (
-            self.term_stats
-            .where(F.col("bucket").isin(buckets) & F.col("term").isin(uniq))
-            .select("term", "idf")
-        )
+        stats = self._pruned(self.term_stats, uniq).select("term", "idf")
         rows = self._with_grp(
-            self.postings
-            .where(F.col("bucket").isin(buckets) & F.col("term").isin(uniq))
-            .select(*wand._SCORING_COLS)
+            self._pruned(self.postings, uniq)
+            .select(*_SCORING_COLS)
             .join(F.broadcast(stats), "term")
         )
-        scorer = wand.make_segment_scorer(
+        out = _ranked_top(rows, wand.make_segment_scorer(
             uniq, None, self.avgdl, k, conjunctive, deleted=self.deleted
-        )
-        per_group = wand.scorer_partitions(rows).groupBy("grp").applyInPandas(
-            lambda pdf: scorer(pdf), schema=wand._SCORE_SCHEMA
-        )
-        out = wand._ranked_bounded(per_group, k)
+        ), k)
         if with_urls or with_snippets:
             return self.attach_urls(
                 out, snippet_terms=uniq if with_snippets else None
@@ -208,102 +460,71 @@ class Searcher:
         runs the MaxScore kernel per (query, group). Each query's
         result is rank-identical to :meth:`topk` (asserted by tests).
         """
-        import pandas as pd
-        from pyspark.sql import types as T
-
         qitems = [(qid, t) for qid, terms in queries.items()
                   for t in dict.fromkeys(terms)]
         if not qitems:
-            return self.spark.createDataFrame(
-                [], "query_id string, rank int, doc_id long, score double"
-            )
+            return self.spark.createDataFrame([], _MANY_SCHEMA)
         qterms = self.spark.createDataFrame(
             qitems, "query_id string, term string"
         )
         all_terms = sorted({t for _, t in qitems})
-        buckets = sorted({python_bucket(t, self.n_buckets) for t in all_terms})
-        stats = (
-            self.term_stats
-            .where(F.col("bucket").isin(buckets) & F.col("term").isin(all_terms))
-            .select("term", "idf")
-        )
+        stats = self._pruned(self.term_stats, all_terms).select("term", "idf")
         rows = self._with_grp(
-            self.postings
-            .where(F.col("bucket").isin(buckets) & F.col("term").isin(all_terms))
-            .select(*wand._SCORING_COLS)
+            self._pruned(self.postings, all_terms)
+            .select(*_SCORING_COLS)
             .join(F.broadcast(qterms), "term")
             .join(F.broadcast(stats), "term")
         )
         terms_by_query = {qid: list(dict.fromkeys(t)) for qid, t in queries.items()}
-        avgdl = self.avgdl
-        deleted = self.deleted
+        avgdl, deleted = self.avgdl, self.deleted
+        return _ranked_many(rows, lambda qid: wand.make_segment_scorer(
+            terms_by_query[qid], None, avgdl, k, False, deleted=deleted,
+        ), k)
 
-        schema = T.StructType([
-            T.StructField("query_id", T.StringType()),
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("raw_score", T.DoubleType()),
-        ])
-
-        def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            outs = []
-            for qid, qpdf in pdf.groupby("query_id", sort=False):
-                scorer = wand.make_segment_scorer(
-                    terms_by_query[qid], None, avgdl, k, False,
-                    deleted=deleted,
-                )
-                res = scorer(qpdf)
-                res.insert(0, "query_id", qid)
-                outs.append(res)
-            return pd.concat(outs) if outs else pd.DataFrame(
-                {"query_id": [], "doc_id": [], "raw_score": []}
-            ).astype({"query_id": "object", "doc_id": "int64",
-                      "raw_score": "float64"})
-
-        per_group = wand.scorer_partitions(rows).groupBy("grp").applyInPandas(score_group, schema=schema)
-        from pyspark.sql import Window as W
-
-        w = W.partitionBy("query_id").orderBy(
-            F.desc("raw_score"), F.asc("doc_id")
-        )
-        return (
-            per_group.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id",
-                    F.round("raw_score", 6).alias("score"))
-        )
-
-    def composed_topk(self, groups: list[list[tuple[str, str]]],
-                      negations: list[tuple[str, str]] | None = None,
+    def composed_topk(self, groups: list[Members],
+                      negations: Members | None = None,
                       phrases: list[list[str]] | None = None,
                       k: int = 10,
                       nears: list[tuple[str, str, int, bool]] | None = None,
                       ) -> DataFrame:
+        """Exact top-k for a composed query (AND of disjunctive groups,
+        minus negations, constrained by phrases and proximity windows).
+
+        Fully distributed glob expansion: the matched vocabulary never
+        reaches the driver — term_stats rows matching any member
+        predicate are broadcast-joined onto the posting scan,
+        delivering idf and the per-term role flags as columns. (The
+        broadcast side is the MATCHED vocabulary — query-sized for
+        explicit terms, at worst vocab-subset-sized for short-prefix
+        globs; the posting side is never shuffled before the grp
+        exchange.)"""
         negations = negations or []
         phrases = phrases or []
         nears = nears or []
-        pos_words = list(dict.fromkeys(
-            [w for ph in phrases for w in ph]
-            + [w for a, b, _, _ in nears for w in (a, b)]
-        ))
+        pos_words = _position_words(phrases, nears)
         if not groups and not pos_words:
             raise ValueError("composed query has no positive constraint")
-        members = wand.build_members(
-            self.term_stats, groups, negations, pos_words
-        )
-        return wand._composed_from_parts(
-            self.spark, self.postings, members, self._with_grp, self.avgdl,
-            groups, negations, phrases, k, self.n_buckets,
-            nears=nears,
+        members = build_members(self.term_stats, groups, negations, pos_words)
+        all_members = ([m for g in groups for m in g] + negations
+                       + [("term", w) for w in pos_words])
+        rows = self._member_rows([all_members], members,
+                                 positions=bool(phrases or nears))
+        return _ranked_top(rows, wand.make_composed_scorer(
+            len(groups), phrases, self.avgdl, k, nears=nears,
             deleted=self.deleted,
-        )
+        ), k)
 
     def glob_topk(self, glob: str, k: int = 10) -> DataFrame:
+        """Glob-pattern top-k: one single-member group through the
+        composed path (the pattern expands against the vocabulary
+        distributed; nothing is collected)."""
         return self.composed_topk(groups=[[("glob", glob)]], k=k)
 
     def search(self, query: str, k: int = 10,
                with_urls: bool = False,
                with_snippets: bool = False) -> DataFrame:
-        """glug-dialect query string → exact top-k (see execute.search).
+        """glug-dialect query string → exact top-k, rank-identical to the
+        full-scan execute.search.
 
         Snippets use the query's literal positive terms plus its phrase
         words (a glob's matched vocabulary is per-doc, so glob-only
@@ -333,9 +554,6 @@ class Searcher:
         broadcast members table; the exact filtered MaxScore kernel
         runs per (query, doc-group). Each slice is rank-identical to
         :meth:`search` (asserted by tests)."""
-        import pandas as pd
-        from pyspark.sql import types as T
-
         plans = {}
         for qid, q in queries.items():
             plan = parse_query(q)
@@ -343,152 +561,49 @@ class Searcher:
                 raise ValueError(f"query has no positive constraint: {q!r}")
             plans[qid] = plan
         if not plans:
-            return self.spark.createDataFrame(
-                [], "query_id string, rank int, doc_id long, score double"
-            )
+            return self.spark.createDataFrame([], _MANY_SCHEMA)
 
         members = None
-        any_positions = False
-        all_member_lists = []
+        member_lists = []
         for qid, plan in plans.items():
-            pw = list(dict.fromkeys(
-                [w for ph in plan.phrases for w in ph] + plan.near_words
-            ))
-            any_positions = any_positions or bool(pw)
-            m = wand.build_members(
+            pw = _position_words(plan.phrases, plan.nears)
+            m = build_members(
                 self.term_stats, plan.groups, plan.negations, pw
             ).withColumn("query_id", F.lit(qid))
             members = m if members is None else members.unionByName(m)
-            all_member_lists.append(
+            member_lists.append(
                 [mm for g in plan.groups for mm in g] + plan.negations
                 + [("term", w) for w in pw]
             )
-
-        # scan pruning, same as composed_topk but unioned across the
-        # batch: bucket partitions prune when EVERY query's members are
-        # explicit terms; the pushable (In|StartsWith) conjunct applies
-        # when every query has a pushable form — row-group skipping on
-        # the term-sorted layout, exact semantics still ride the join
-        postings = self.postings
-        flat = [m for lst in all_member_lists for m in lst]
-        if all(kind == "term" for kind, _ in flat):
-            buckets = sorted({
-                python_bucket(v, self.n_buckets) for _, v in flat
-            })
-            postings = postings.where(F.col("bucket").isin(buckets))
-        pushables = [wand._pushable_member_pred(lst) for lst in all_member_lists]
-        if all(p is not None for p in pushables):
-            pred = pushables[0]
-            for p in pushables[1:]:
-                pred = pred | p
-            postings = postings.where(pred)
-
-        cols = wand._SCORING_COLS + (
-            ["positions", "pos_offsets"] if any_positions else []
+        rows = self._member_rows(
+            member_lists, members,
+            positions=any(p.phrases or p.nears for p in plans.values()),
         )
-        rows = self._with_grp(
-            postings.select(*cols).join(F.broadcast(members), "term")
-        )
-
         meta = {
             qid: (len(plan.groups), plan.phrases, plan.nears)
             for qid, plan in plans.items()
         }
-        avgdl = self.avgdl
-        deleted = self.deleted
-
-        schema = T.StructType([
-            T.StructField("query_id", T.StringType()),
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("raw_score", T.DoubleType()),
-        ])
-
-        def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            outs = []
-            for qid, qpdf in pdf.groupby("query_id", sort=False):
-                n_groups, phrases, nears = meta[qid]
-                scorer = wand.make_composed_scorer(n_groups, phrases, avgdl,
-                                                   k, nears=nears,
-                                                   deleted=deleted)
-                res = scorer(qpdf)
-                res.insert(0, "query_id", qid)
-                outs.append(res)
-            return pd.concat(outs) if outs else pd.DataFrame(
-                {"query_id": [], "doc_id": [], "raw_score": []}
-            ).astype({"query_id": "object", "doc_id": "int64",
-                      "raw_score": "float64"})
-
-        per_group = wand.scorer_partitions(rows).groupBy("grp").applyInPandas(score_group, schema=schema)
-        from pyspark.sql import Window as W
-
-        w = W.partitionBy("query_id").orderBy(
-            F.desc("raw_score"), F.asc("doc_id")
-        )
-        return (
-            per_group.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id",
-                    F.round("raw_score", 6).alias("score"))
-        )
+        avgdl, deleted = self.avgdl, self.deleted
+        return _ranked_many(rows, lambda qid: wand.make_composed_scorer(
+            meta[qid][0], meta[qid][1], avgdl, k, nears=meta[qid][2],
+            deleted=deleted,
+        ), k)
 
     def phrase_docs(self, phrase: list[str]) -> DataFrame:
-        uniq = list(dict.fromkeys(phrase))
-        buckets = sorted({python_bucket(t, self.n_buckets) for t in uniq})
-        rows = self._with_grp(
-            self.postings
-            .where(F.col("bucket").isin(buckets) & F.col("term").isin(uniq))
-            .drop("bucket")
-        )
+        """doc_ids containing the exact adjacent-token phrase, sorted;
+        identical to query.bm25.phrase_docs over the same corpus."""
         words = list(phrase)
-        deleted = self.deleted
-
-        import pandas as pd
-        from pyspark.sql import types as T
-
-        def match_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            from glug_spark.index.deletes import (
-                not_deleted_mask, resolve_deleted,
-            )
-
-            hits = wand._phrase_hits_segment(pdf, words)
-            hits = hits[not_deleted_mask(resolve_deleted(deleted), hits)]
-            return pd.DataFrame({"doc_id": hits}).astype({"doc_id": "int64"})
-
-        matched = wand.scorer_partitions(rows).groupBy("grp").applyInPandas(
-            match_segment,
-            schema=T.StructType([T.StructField("doc_id", T.LongType())]),
+        return self._match_docs(
+            words, lambda pdf: wand._phrase_hits_segment(pdf, words)
         )
-        return wand._sorted_docs(matched)
 
     def near_docs(self, term_a: str, term_b: str, slop: int = 3,
                   ordered: bool = False) -> DataFrame:
-        """Proximity (NEAR) match over the pinned postings — same
-        output as wand.near_docs_indexed on this index."""
-        uniq = list(dict.fromkeys([term_a, term_b]))
-        buckets = sorted({python_bucket(t, self.n_buckets) for t in uniq})
-        rows = self._with_grp(
-            self.postings
-            .where(F.col("bucket").isin(buckets) & F.col("term").isin(uniq))
-            .drop("bucket")
+        """doc_ids where ``term_b`` occurs within ``slop`` tokens of
+        ``term_a`` (NEAR), sorted; identical to query.bm25.near_docs
+        over the same corpus."""
+        return self._match_docs(
+            [term_a, term_b],
+            lambda pdf: wand._near_hits_segment(pdf, term_a, term_b, slop,
+                                                ordered),
         )
-
-        import pandas as pd
-        from pyspark.sql import types as T
-
-        deleted = self.deleted
-
-        def match_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            from glug_spark.index.deletes import (
-                not_deleted_mask, resolve_deleted,
-            )
-
-            hits = wand._near_hits_segment(pdf, term_a, term_b, slop,
-                                           ordered)
-            hits = hits[not_deleted_mask(resolve_deleted(deleted), hits)]
-            return pd.DataFrame({"doc_id": hits}).astype({"doc_id": "int64"})
-
-        matched = wand.scorer_partitions(rows).groupBy("grp").applyInPandas(
-            match_segment,
-            schema=T.StructType([T.StructField("doc_id", T.LongType())]),
-        )
-        return wand._sorted_docs(matched)

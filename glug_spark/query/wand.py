@@ -1,21 +1,12 @@
-"""Index-backed top-k: group-distributed MaxScore with block-max skip.
+"""Scoring and matching kernels for the index query path.
 
-Query plan:
+Pure NumPy/pandas: every function here runs inside a Python worker on
+the posting rows of ONE doc-space scoring group, as delivered by the
+``applyInPandas`` plans that :class:`glug_spark.query.searcher.Searcher`
+builds. Spark planning (bucket pruning, stats joins, the group
+exchange, the final rank merge) lives in the Searcher.
 
-1. term→bucket via the same md5-derived bucket used at build
-   (``pipeline.bucket_col`` / ``python_bucket`` — driver-computable, so
-   the posting scan prunes to the query terms' bucket partitions with
-   zero planning cost; everything else is never read).
-2. term stats (df, idf): explicit terms close over a handful of
-   collected rows; glob queries stay fully distributed — the matched
-   vocabulary is joined in as an ``idf`` column, never collected.
-3. posting rows group by their SCORING GROUP → ``applyInPandas`` scores
-   each doc-space group independently (groups partition doc space —
-   also after compaction, via the ``segmap`` segment→grp mapping — so
-   per-group top-k sets cover the global top-k superset exactly).
-4. global ``orderBy(score desc, doc_id).limit(k)`` → TakeOrdered merge.
-
-Inside a group (NumPy, vectorized):
+Inside a group (vectorized):
 
 - conjunctive: block-level skip — only blocks whose doc ranges can
   intersect every term's covered range are decoded
@@ -26,10 +17,14 @@ Inside a group (NumPy, vectorized):
   enter the top-k (docs absent from all essential lists are bounded by
   Σ non-essential ubs < θ). Exact, with whole lists of frequent terms
   skipped at the candidate-generation stage.
-- composed (``composed_topk``): group/negation/phrase filters are
-  applied INSIDE the scorer, before θ-seeding and before the per-group
-  top-k — the returned top-k is exact under filtering (no heuristic
-  candidate pool; a selective filter can never starve the result).
+- composed (``make_composed_scorer``): group/negation/phrase filters
+  are applied INSIDE the scorer, before θ-seeding and before the
+  per-group top-k — the returned top-k is exact under filtering (no
+  heuristic candidate pool; a selective filter can never starve the
+  result).
+- phrase / NEAR matching (``_phrase_hits_segment``,
+  ``_near_hits_segment``): doc-id intersection first, then
+  block-selective position decode over the candidates only.
 
 Scores are the same double math as the full-scan reference scorer
 (query.bm25) — rank-identical output is asserted by tests, mirroring
@@ -40,85 +35,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
 from glug_spark.index import codec
 from glug_spark.index.build import K1, B
-from glug_spark.index.deletes import (
-    not_deleted_mask,
-    read_deleted_ids,
-    resolve_deleted,
-)
-from glug_spark.index.pipeline import python_bucket
-
-_SCORE_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("raw_score", T.DoubleType()),
-])
-
-#: collection stats are immutable per index build → cache per index_dir
-_COLLECTION_CACHE: dict[str, dict] = {}
-#: segment→grp map (None = never compacted); invalidated by compaction
-_SEGMAP_CACHE: dict[str, object] = {}
-
-
-def _collection(spark: SparkSession, index_dir: str) -> dict:
-    row = _COLLECTION_CACHE.get(index_dir)
-    if row is None:
-        row = spark.read.parquet(f"{index_dir}/collection").collect()[0].asDict()
-        _COLLECTION_CACHE[index_dir] = row
-    return row
-
-
-def invalidate_segmap_cache(index_dir: str) -> None:
-    _SEGMAP_CACHE.pop(index_dir, None)
-
-
-def invalidate_collection_cache(index_dir: str) -> None:
-    """Collection stats change when docs are ingested (n_docs/avgdl) —
-    streaming refresh calls this so later module-function queries in the
-    same process don't score with stale normalization."""
-    _COLLECTION_CACHE.pop(index_dir, None)
-
-
-def with_scoring_group(spark: SparkSession, index_dir: str, rows: DataFrame) -> DataFrame:
-    """Attach the scoring-group key ``grp``.
-
-    Uncompacted index: grp = segment (identity, no join). Compacted:
-    broadcast-join the tiny ``segmap/`` (one row per original segment)
-    so all runs of a coarsened group — merged or untouched — co-group.
-    """
-    if index_dir not in _SEGMAP_CACHE:
-        from glug_spark.index.compact import read_segmap
-
-        _SEGMAP_CACHE[index_dir] = read_segmap(spark, index_dir)
-    m = _SEGMAP_CACHE[index_dir]
-    if m is None:
-        return rows.withColumn("grp", F.col("segment"))
-    return rows.join(F.broadcast(m), "segment", "left").withColumn(
-        "grp", F.coalesce("grp", F.col("segment"))
-    )
-
-
-def _term_buckets(spark: SparkSession, terms: list[str], n_buckets: int) -> dict[str, int]:
-    return {t: python_bucket(t, n_buckets) for t in terms}
-
-
-def scorer_partitions(rows: DataFrame) -> DataFrame:
-    """EXPLICIT grp-hash exchange feeding every ``groupBy("grp")``
-    scorer: a query's posting rows are tiny (KBs), so AQE's partition
-    coalescing folds the scorer's shuffle into ONE post-shuffle
-    partition and every per-group Arrow kernel runs sequentially on a
-    single core — measured 9.5 s for the 32-query batch at 50 groups
-    (1600 kernel invocations × ~6 ms, one task). A user-specified
-    ``repartition(n, "grp")`` is exempt from AQE coalescing and
-    satisfies the grouped-map clustering requirement, so it is the ONLY
-    exchange on the path and the kernels fan out across the cluster.
-    ``n`` = the session's shuffle parallelism (cluster-sized knob, not
-    a local constant)."""
-    spark = rows.sparkSession
-    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return rows.repartition(n, "grp")
+from glug_spark.index.deletes import not_deleted_mask, resolve_deleted
 
 
 def _contribution(tfs: np.ndarray, dls: np.ndarray, idf: float, avgdl: float) -> np.ndarray:
@@ -414,137 +334,6 @@ def make_segment_scorer(
     return score_segment
 
 
-def _ranked(topk: DataFrame) -> DataFrame:
-    # row_number over ≤k already-limited rows — the "No Partition
-    # Defined" WindowExec warning is expected and harmless here
-    w = Window.orderBy(F.desc("raw_score"), F.asc("doc_id"))
-    return topk.select(
-        F.row_number().over(w).alias("rank"),
-        F.col("doc_id"),
-        F.round(F.col("raw_score"), 6).alias("score"),
-    )
-
-
-def _ranked_bounded(per_group: DataFrame, k: int) -> DataFrame:
-    """Global top-k + rank over K-BOUNDED per-group results, in ONE job.
-
-    Every scoring group emits ≤k rows, so the single-partition window
-    input is n_groups × k NARROW rows — the same volume a TakeOrdered
-    driver merge would see — and compaction bounds n_groups. Expressing
-    the merge as one window (instead of ``orderBy().limit(k)`` followed
-    by a rank window) removes the AQE stage-materialization + limit
-    jobs: 3 Spark jobs → 1, measured 0.36 s → 0.20 s per query at
-    sf0.1 local[32]. Full-scan paths (per-doc rows NOT k-bounded) keep
-    TakeOrderedAndProject — a global window there would sort the corpus.
-    """
-    w = Window.orderBy(F.desc("raw_score"), F.asc("doc_id"))
-    return (
-        per_group.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("rank", "doc_id", F.round("raw_score", 6).alias("score"))
-    )
-
-
-_SCORING_COLS = [
-    "term", "segment", "df_local", "doc_gaps", "tfs", "dls",
-    "block_last", "block_max_tf",
-    "gap_offsets", "tf_offsets", "dl_offsets",
-]
-
-
-def wand_topk(
-    spark: SparkSession,
-    index_dir: str,
-    terms: list[str],
-    k: int = 10,
-    conjunctive: bool = False,
-    n_buckets: int = 16,
-) -> DataFrame:
-    """Top-k (rank, doc_id, score) from the encoded index — must be
-    rank-identical to query.bm25.bm25_topk on the same corpus."""
-    uniq = list(dict.fromkeys(terms))
-    buckets = sorted(set(_term_buckets(spark, uniq, n_buckets).values()))
-
-    stats = (
-        spark.read.parquet(f"{index_dir}/term_stats")
-        .where(F.col("bucket").isin(buckets) & F.col("term").isin(uniq))
-        .select("term", "df", "idf")
-        .collect()  # O(query terms), never corpus-sized
-    )
-    idfs = {r["term"]: r["idf"] for r in stats}
-    if conjunctive and len(idfs) < len(uniq):
-        return spark.createDataFrame([], "rank int, doc_id long, score double")
-    avgdl = _collection(spark, index_dir)["avgdl"]
-
-    rows = (
-        spark.read.parquet(f"{index_dir}/postings")
-        .where(F.col("bucket").isin(buckets) & F.col("term").isin(list(idfs)))
-        # column-prune the positions blob (the largest column): scoring
-        # never touches it — only the phrase path reads positions
-        .select(*_SCORING_COLS)
-    )
-    rows = with_scoring_group(spark, index_dir, rows)
-    scorer = make_segment_scorer(
-        uniq, idfs, avgdl, k, conjunctive,
-        deleted=read_deleted_ids(spark, index_dir),
-    )
-    per_group = scorer_partitions(rows).groupBy("grp").applyInPandas(
-        lambda pdf: scorer(pdf), schema=_SCORE_SCHEMA
-    )
-    return _ranked_bounded(per_group, k)
-
-
-# --- composed queries: groups + negation + phrase, filters exact --------
-
-def _member_pred(members: list[tuple[str, str]]) -> F.Column:
-    """stats/postings `term` column predicate for group members.
-
-    Glob members carry their literal prefix as a ``startswith``
-    conjunct: rlike can't reach the parquet scan, but StringStartsWith
-    can — with the term-sorted row-group layout the scan skips whole
-    groups for prefixed globs like ``dat*``."""
-    from glug_spark.semantics.glob import full_match_regex, literal_prefix
-
-    terms = [v for kind, v in members if kind == "term"]
-    pred = F.col("term").isin(terms) if terms else F.lit(False)
-    for kind, v in members:
-        if kind == "glob":
-            gp = F.col("term").rlike(full_match_regex(v))
-            prefix = literal_prefix(v)
-            if prefix:
-                gp = F.col("term").startswith(prefix) & gp
-            pred = pred | gp
-    return pred
-
-
-def _pushable_member_pred(
-    members: list[tuple[str, str]],
-) -> F.Column | None:
-    """Weakened member predicate made ONLY of parquet-pushable leaves
-    (In / StringStartsWith), or None when some member has no pushable
-    form (a prefixless glob). Redundant with the exact predicate — it
-    exists purely so the posting SCAN gets row-group skipping; the
-    broadcast join still applies the exact semantics."""
-    from glug_spark.semantics.glob import literal_prefix
-
-    terms = [v for kind, v in members if kind == "term"]
-    parts = []
-    if terms:
-        parts.append(F.col("term").isin(terms))
-    for kind, v in members:
-        if kind == "glob":
-            prefix = literal_prefix(v)
-            if not prefix:
-                return None
-            parts.append(F.col("term").startswith(prefix))
-    if not parts:
-        return None
-    pred = parts[0]
-    for p in parts[1:]:
-        pred = pred | p
-    return pred
-
-
 def _phrase_doc_ids(per_word: dict[str, dict], words: list[str]) -> np.ndarray:
     """doc_ids containing the exact adjacent phrase — fully vectorized.
 
@@ -752,217 +541,6 @@ def make_composed_scorer(
     return score_group
 
 
-def build_members(stats_df: DataFrame,
-                  groups: list[list[tuple[str, str]]],
-                  negations: list[tuple[str, str]],
-                  phrase_words: list[str]) -> DataFrame:
-    """Per-term query roles as a DataFrame over term_stats: idf, group
-    bitmask, negation flag, phrase membership — computed JVM-side so
-    glob expansion never reaches the driver."""
-    if len(groups) > 62:
-        raise ValueError("too many conjunct groups (max 62)")
-    gmask_col = F.lit(0).cast("long")
-    for i, grp in enumerate(groups):
-        gmask_col = gmask_col + F.when(_member_pred(grp), F.lit(1 << i)
-                                       ).otherwise(F.lit(0)).cast("long")
-    is_neg_col = _member_pred(negations) if negations else F.lit(False)
-    is_phrase_col = (F.col("term").isin(phrase_words) if phrase_words
-                     else F.lit(False))
-    return (
-        stats_df.select(
-            "term", "idf",
-            gmask_col.alias("gmask"),
-            is_neg_col.alias("is_neg"),
-            is_phrase_col.alias("is_phrase"),
-        )
-        .where((F.col("gmask") != 0) | F.col("is_neg") | F.col("is_phrase"))
-    )
-
-
-def _composed_from_parts(
-    spark: SparkSession, postings: DataFrame, members: DataFrame,
-    grp_mapper: "Callable[[DataFrame], DataFrame]", avgdl: float,
-    groups: list[list[tuple[str, str]]],
-    negations: list[tuple[str, str]],
-    phrases: list[list[str]], k: int,
-    n_buckets: int,
-    nears: "list[tuple[str, str, int, bool]] | None" = None,
-    deleted: "object | None" = None,
-) -> DataFrame:
-    """Shared tail of the composed path (module function + Searcher)."""
-    nears = nears or []
-    pos_words = list(dict.fromkeys(
-        [w for ph in phrases for w in ph]
-        + [w for a, b, _, _ in nears for w in (a, b)]
-    ))
-    # bucket pruning: only possible when every member is an explicit term
-    all_members = ([m for g in groups for m in g] + negations
-                   + [("term", w) for w in pos_words])
-    explicit_only = all(kind == "term" for kind, _ in all_members)
-    if explicit_only:
-        terms = [v for _, v in all_members]
-        buckets = sorted({python_bucket(t, n_buckets) for t in terms})
-        postings = postings.where(F.col("bucket").isin(buckets))
-    # redundant pushable conjunct → parquet row-group skipping on the
-    # term-sorted layout (the exact member semantics ride the join)
-    pushable = _pushable_member_pred(all_members)
-    if pushable is not None:
-        postings = postings.where(pushable)
-
-    # column-prune positions unless a phrase/near actually needs them
-    cols = _SCORING_COLS + (
-        ["positions", "pos_offsets"] if (phrases or nears) else []
-    )
-    rows = grp_mapper(postings.select(*cols).join(F.broadcast(members), "term"))
-
-    scorer = make_composed_scorer(len(groups), phrases, avgdl, k, nears=nears,
-                                  deleted=deleted)
-    per_group = scorer_partitions(rows).groupBy("grp").applyInPandas(
-        lambda pdf: scorer(pdf), schema=_SCORE_SCHEMA
-    )
-    return _ranked_bounded(per_group, k)
-
-
-def composed_topk(
-    spark: SparkSession,
-    index_dir: str,
-    groups: list[list[tuple[str, str]]],
-    negations: list[tuple[str, str]] | None = None,
-    phrases: list[list[str]] | None = None,
-    k: int = 10,
-    n_buckets: int = 16,
-    nears: "list[tuple[str, str, int, bool]] | None" = None,
-) -> DataFrame:
-    """Exact top-k for a composed query (AND of disjunctive groups,
-    minus negations, constrained by phrases and proximity windows),
-    straight from the index.
-
-    Fully distributed glob expansion: the matched vocabulary never
-    reaches the driver — term_stats rows matching any member predicate
-    are broadcast-joined onto the posting scan, delivering idf and the
-    per-term role flags as columns. (The broadcast side is the MATCHED
-    vocabulary — query-sized for explicit terms, at worst vocab-subset-
-    sized for short-prefix globs; the posting side is never shuffled.)
-    """
-    negations = negations or []
-    phrases = phrases or []
-    nears = nears or []
-    pos_words = list(dict.fromkeys(
-        [w for ph in phrases for w in ph]
-        + [w for a, b, _, _ in nears for w in (a, b)]
-    ))
-    if not groups and not pos_words:
-        raise ValueError("composed query has no positive constraint")
-
-    members = build_members(
-        spark.read.parquet(f"{index_dir}/term_stats"),
-        groups, negations, pos_words,
-    )
-    return _composed_from_parts(
-        spark,
-        spark.read.parquet(f"{index_dir}/postings"),
-        members,
-        lambda rows: with_scoring_group(spark, index_dir, rows),
-        _collection(spark, index_dir)["avgdl"],
-        groups, negations, phrases, k, n_buckets,
-        nears=nears,
-        deleted=read_deleted_ids(spark, index_dir),
-    )
-
-
-def docs_with_any(
-    spark: SparkSession,
-    index_dir: str,
-    terms: list[str],
-    n_buckets: int = 16,
-) -> DataFrame:
-    """Distinct doc_ids containing ANY of ``terms`` — the semi/anti-join
-    building block for composed queries (group filters, negation)."""
-    uniq = list(dict.fromkeys(terms))
-    if not uniq:
-        return spark.createDataFrame([], "doc_id long")
-    buckets = sorted({python_bucket(t, n_buckets) for t in uniq})
-    rows = (
-        spark.read.parquet(f"{index_dir}/postings")
-        .where(F.col("bucket").isin(buckets) & F.col("term").isin(uniq))
-        .select("segment", "doc_gaps")
-    )
-    rows = with_scoring_group(spark, index_dir, rows)
-    deleted = read_deleted_ids(spark, index_dir)
-
-    def decode(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = [
-            codec.delta_decode(codec.varbyte_decode(g)).astype(np.int64)
-            for g in pdf["doc_gaps"]
-        ]
-        out = np.unique(np.concatenate(ids)) if ids else np.zeros(0, np.int64)
-        out = out[not_deleted_mask(deleted, out)]
-        return pd.DataFrame({"doc_id": out})
-
-    return scorer_partitions(rows).groupBy("grp").applyInPandas(
-        lambda pdf: decode(pdf),
-        schema=T.StructType([T.StructField("doc_id", T.LongType())]),
-    ).distinct()
-
-
-def glob_topk(
-    spark: SparkSession,
-    index_dir: str,
-    glob: str,
-    k: int = 10,
-    n_buckets: int = 16,
-) -> DataFrame:
-    """Glob-pattern query from the index — one single-member group
-    through the composed path: the pattern expands against the
-    vocabulary DISTRIBUTED (term_stats join; nothing is collected)."""
-    return composed_topk(
-        spark, index_dir, groups=[[("glob", glob)]], k=k, n_buckets=n_buckets
-    )
-
-
-def phrase_docs_indexed(
-    spark: SparkSession,
-    index_dir: str,
-    phrase: list[str],
-    n_buckets: int = 16,
-) -> DataFrame:
-    """Phrase match from position lists — doc_ids containing the exact
-    adjacent-token phrase; rank-identical to query.bm25.phrase_docs."""
-    uniq = list(dict.fromkeys(phrase))
-    buckets = sorted(set(_term_buckets(spark, uniq, n_buckets).values()))
-    rows = (
-        spark.read.parquet(f"{index_dir}/postings")
-        .where(F.col("bucket").isin(buckets) & F.col("term").isin(uniq))
-        .drop("bucket")
-    )
-    rows = with_scoring_group(spark, index_dir, rows)
-
-    words = list(phrase)
-    deleted = read_deleted_ids(spark, index_dir)
-
-    def match_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        hits = _phrase_hits_segment(pdf, words)
-        hits = hits[not_deleted_mask(deleted, hits)]
-        return pd.DataFrame({"doc_id": hits}).astype({"doc_id": "int64"})
-
-    matched = scorer_partitions(rows).groupBy("grp").applyInPandas(
-        match_segment, schema=T.StructType([T.StructField("doc_id", T.LongType())])
-    )
-    return _sorted_docs(matched)
-
-
-def _sorted_docs(matched: DataFrame) -> DataFrame:
-    """doc_id-sorted match set WITHOUT a range-partitioned global sort:
-    ``orderBy`` samples its child to pick range boundaries, which
-    re-executes the Arrow scorer a second time per query (measured ~2×
-    the phrase query's cost). The matches are a narrow doc_id column —
-    one round-robin exchange into a single in-partition sort gives the
-    same total order for half the compute. (At cluster scale a huge
-    match set would page through the driver anyway; phrase/NEAR match
-    sets are doc-subset-sized.)"""
-    return matched.repartition(1).sortWithinPartitions("doc_id")
-
-
 def _near_doc_ids(per_word: dict[str, dict], term_a: str, term_b: str,
                   slop: int, ordered: bool) -> np.ndarray:
     """doc_ids where b occurs within ``slop`` positions of a — the
@@ -1023,36 +601,3 @@ def _near_hits_segment(pdf: pd.DataFrame, term_a: str, term_b: str,
         for w in {term_a, term_b}
     }
     return _near_doc_ids(per_word, term_a, term_b, slop, ordered)
-
-
-def near_docs_indexed(
-    spark: SparkSession,
-    index_dir: str,
-    term_a: str,
-    term_b: str,
-    slop: int = 3,
-    ordered: bool = False,
-    n_buckets: int = 16,
-) -> DataFrame:
-    """Proximity (NEAR) match from position lists — doc_ids where
-    ``term_b`` occurs within ``slop`` tokens of ``term_a``; identical
-    output to query.bm25.near_docs over the same corpus."""
-    uniq = list(dict.fromkeys([term_a, term_b]))
-    buckets = sorted(set(_term_buckets(spark, uniq, n_buckets).values()))
-    rows = (
-        spark.read.parquet(f"{index_dir}/postings")
-        .where(F.col("bucket").isin(buckets) & F.col("term").isin(uniq))
-        .drop("bucket")
-    )
-    rows = with_scoring_group(spark, index_dir, rows)
-    deleted = read_deleted_ids(spark, index_dir)
-
-    def match_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        hits = _near_hits_segment(pdf, term_a, term_b, slop, ordered)
-        hits = hits[not_deleted_mask(deleted, hits)]
-        return pd.DataFrame({"doc_id": hits}).astype({"doc_id": "int64"})
-
-    matched = scorer_partitions(rows).groupBy("grp").applyInPandas(
-        match_segment, schema=T.StructType([T.StructField("doc_id", T.LongType())])
-    )
-    return _sorted_docs(matched)

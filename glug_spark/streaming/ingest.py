@@ -71,7 +71,10 @@ from glug_spark.index.pipeline import (
     ENCODED_SCHEMA,
     _make_partition_encoder,
     bucket_col,
+    checked_n_buckets,
     docmap_n_buckets,
+    index_doc_store,
+    read_params,
     write_docmap,
 )
 
@@ -249,14 +252,11 @@ def _write_stats(spark: SparkSession, index_dir: str, stats: DataFrame,
 
 def _write_collection(spark: SparkSession, index_dir: str,
                       n_docs: int, total_tokens: int) -> dict:
-    from glug_spark.query import wand as _wand
-
     avgdl = total_tokens / n_docs if n_docs else 0.0
     spark.createDataFrame(
         [(int(n_docs), avgdl, int(total_tokens))],
         "n_docs long, avgdl double, total_tokens long",
     ).write.mode("overwrite").parquet(os.path.join(index_dir, "collection"))
-    _wand.invalidate_collection_cache(index_dir)
     return {"n_docs": n_docs, "avgdl": avgdl, "total_tokens": total_tokens}
 
 
@@ -284,7 +284,7 @@ def refresh_stats(spark: SparkSession, index_dir: str) -> dict:
     ``ingest_batch`` users). Compaction itself never changes df/cf
     totals, so already-folded stats stay exact under any layout.
     """
-    params = spark.read.parquet(os.path.join(index_dir, "params")).collect()[0]
+    params = read_params(spark, index_dir)
     n_buckets = int(params["n_buckets"])
     n_docs = int(params["n_docs"])
     done: set[int] = set()
@@ -392,7 +392,7 @@ def _adopt_or_none(spark: SparkSession, index_dir: str, batch_id: int,
 
 
 def ingest_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
-                 index_dir: str, n_buckets: int,
+                 index_dir: str, n_buckets: int | None = None,
                  ranges: DocRanges | None = None,
                  done: set[int] | None = None,
                  probe_namespaces: bool = False) -> int:
@@ -406,8 +406,12 @@ def ingest_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
     per-batch re-read would be quadratic. The namespace probe runs only
     when this batch's attempt marker already exists (a prior attempt
     may have crashed mid-append) or ``probe_namespaces`` forces it —
-    the happy path never scans postings metadata per batch. Returns
-    docs ingested (0 when skipped/empty)."""
+    the happy path never scans postings metadata per batch.
+    ``n_buckets`` comes from the index's ``params/``; a caller value
+    that disagrees raises ``ValueError`` before anything is written.
+    Returns docs ingested (0 when skipped/empty)."""
+    params = read_params(spark, index_dir)
+    n_buckets = checked_n_buckets(params, n_buckets, index_dir)
     if done is None:
         done = _done_batches(spark, index_dir)
     if int(batch_id) in done:
@@ -472,11 +476,9 @@ def ingest_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
     # docmap (no sb=-1 base): a partial map would silently serve NULL
     # urls for build-corpus docs.
     if os.path.exists(os.path.join(index_dir, _DOCMAP_DIR)):
-        from glug_spark.index.pipeline import index_doc_store
-
         write_docmap(batch_df, index_dir, sb=int(batch_id),
-                     n_doc_buckets=docmap_n_buckets(spark, index_dir),
-                     doc_store=index_doc_store(spark, index_dir))
+                     n_doc_buckets=docmap_n_buckets(params),
+                     doc_store=index_doc_store(spark, index_dir, params))
     spark.createDataFrame(
         [(int(batch_id), int(n_new), int(agg["lo"]), int(agg["hi"]))],
         "batch_id long, n_docs long, lo_doc long, hi_doc long",
@@ -495,7 +497,7 @@ def ingest_available(
     spark: SparkSession,
     input_dir: str,
     index_dir: str,
-    n_buckets: int = 16,
+    n_buckets: int | None = None,
     checkpoint: str | None = None,
     validate_doc_ids: bool = True,
     probe_namespaces: bool = False,
@@ -511,6 +513,8 @@ def ingest_available(
     make the sink exactly-once at micro-batch granularity.
     ``probe_namespaces=True`` forces the orphan probe on every batch
     (needed only for crash debris from pre-marker versions).
+    ``n_buckets`` comes from the index's ``params/``; a caller value
+    that disagrees raises ``ValueError`` before the stream starts.
 
     ``auto_compact_groups``: compaction POLICY — after the drain's
     stats fold, run ``compact_index`` iff the scoring-group count
@@ -528,6 +532,8 @@ def ingest_available(
     so the rewrite works on the coarsened layout. Summary gains a
     ``purged`` key (None when the policy did not trigger).
     """
+    n_buckets = checked_n_buckets(read_params(spark, index_dir), n_buckets,
+                                  index_dir)
     checkpoint = checkpoint or os.path.join(index_dir, "stream_checkpoint")
     # recursive lookup: arrivals land as whole parquet DIRECTORIES
     # (one per upstream write), not bare files

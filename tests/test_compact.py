@@ -13,8 +13,9 @@ from pyspark.sql import functions as F
 
 from glug_spark.index.compact import compact_index, read_segmap
 from glug_spark.index.pipeline import build_index
-from glug_spark.query import bm25, wand
-from glug_spark.query.execute import search, search_indexed
+from glug_spark.query import bm25
+from glug_spark.query.execute import search
+from glug_spark.query.searcher import Searcher
 from tests.conftest import SF_DIR
 
 QUERIES = [
@@ -87,8 +88,9 @@ def test_compacted_rank_identical(spark, compacted_index, terms, k, conjunctive)
     ]
     actual = [
         tuple(r)
-        for r in wand.wand_topk(spark, d, terms, k=k, conjunctive=conjunctive,
-                                n_buckets=8).collect()
+        for r in Searcher(spark, d, persist=False).topk(
+            terms, k=k, conjunctive=conjunctive
+        ).collect()
     ]
     assert actual == expected
 
@@ -99,7 +101,9 @@ def test_compacted_phrase_identical(spark, compacted_index):
     expected = [r["doc_id"] for r in bm25.phrase_docs(docs, ["table", "scan"]).collect()]
     actual = [
         r["doc_id"]
-        for r in wand.phrase_docs_indexed(spark, d, ["table", "scan"], n_buckets=8).collect()
+        for r in Searcher(spark, d, persist=False).phrase_docs(
+            ["table", "scan"]
+        ).collect()
     ]
     assert actual == expected
 
@@ -156,8 +160,9 @@ def test_mixed_compacted_uncompacted_rank_identical(
     ]
     actual = [
         tuple(r)
-        for r in wand.wand_topk(spark, d, terms, k=k, conjunctive=conjunctive,
-                                n_buckets=8).collect()
+        for r in Searcher(spark, d, persist=False).topk(
+            terms, k=k, conjunctive=conjunctive
+        ).collect()
     ]
     assert actual == expected
 
@@ -165,24 +170,20 @@ def test_mixed_compacted_uncompacted_rank_identical(
 def test_mixed_phrase_identical(spark, mixed_index):
     d, _ = mixed_index
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    s = Searcher(spark, d, persist=False)
     for phrase in (["table", "scan"], ["the", "the"]):
         expected = [r["doc_id"] for r in bm25.phrase_docs(docs, phrase).collect()]
-        actual = [
-            r["doc_id"]
-            for r in wand.phrase_docs_indexed(spark, d, phrase, n_buckets=8).collect()
-        ]
+        actual = [r["doc_id"] for r in s.phrase_docs(phrase).collect()]
         assert actual == expected, phrase
 
 
 def test_mixed_composed_search_identical(spark, mixed_index):
     d, _ = mixed_index
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    s = Searcher(spark, d, persist=False)
     for q in ('the "table scan"', "dat* -noise", "the -data", "data join"):
         expected = [tuple(r) for r in search(docs, q, k=10).collect()]
-        actual = [
-            tuple(r)
-            for r in search_indexed(spark, d, q, k=10, n_buckets=8).collect()
-        ]
+        actual = [tuple(r) for r in s.search(q, k=10).collect()]
         assert actual == expected, q
 
 
@@ -201,8 +202,9 @@ def test_recompaction_composes(spark, mixed_index):
         ]
         actual = [
             tuple(r)
-            for r in wand.wand_topk(spark, d, terms, k=k, conjunctive=conj,
-                                    n_buckets=8).collect()
+            for r in Searcher(spark, d, persist=False).topk(
+                terms, k=k, conjunctive=conj
+            ).collect()
         ]
         assert actual == expected, terms
 
@@ -245,17 +247,15 @@ def test_random_compaction_states_rank_identical(spark, seed, tmp_path):
     phrase = rng.sample(vocab, 2)
 
     def check(tag):
+        s = Searcher(spark, index_dir, persist=False)
         for terms, k, conj in queries:
             want = [tuple(r) for r in
                     bm25.bm25_topk(stored, terms, k=k, conjunctive=conj).collect()]
             got = [tuple(r) for r in
-                   wand.wand_topk(spark, index_dir, terms, k=k,
-                                  conjunctive=conj, n_buckets=4).collect()]
+                   s.topk(terms, k=k, conjunctive=conj).collect()]
             assert got == want, (tag, terms, conj)
         want_p = [r["doc_id"] for r in bm25.phrase_docs(stored, phrase).collect()]
-        got_p = [r["doc_id"]
-                 for r in wand.phrase_docs_indexed(spark, index_dir, phrase,
-                                                   n_buckets=4).collect()]
+        got_p = [r["doc_id"] for r in s.phrase_docs(phrase).collect()]
         assert got_p == want_p, (tag, phrase)
 
     check("fresh")
@@ -297,8 +297,9 @@ def test_default_min_groups_floor_preserves_parallelism(spark, tmp_path):
         want = [tuple(r) for r in
                 bm25.bm25_topk(docs, terms, k=k, conjunctive=conj).collect()]
         got = [tuple(r) for r in
-               wand.wand_topk(spark, d, terms, k=k, conjunctive=conj,
-                              n_buckets=8).collect()]
+               Searcher(spark, d, persist=False).topk(
+                   terms, k=k, conjunctive=conj
+               ).collect()]
         assert got == want, terms
     # explicit full coarsening overrides the floor
     summary2 = compact_index(spark, d, min_run=1000, merge_factor=1000,

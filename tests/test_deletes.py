@@ -34,8 +34,6 @@ from glug_spark.index.deletes import (
     read_deleted_ids,
 )
 from glug_spark.index.pipeline import build_index, read_docmap
-from glug_spark.query import wand
-from glug_spark.query.execute import search_indexed
 from glug_spark.query.searcher import Searcher
 from tests.conftest import SF_DIR
 
@@ -70,31 +68,21 @@ def mor(spark):
     _build(spark, SF_DIR, idx)
 
     # delete docs that OCCUPY the current top ranks (θ-shadowing bait)
-    top = wand.wand_topk(spark, idx, ["data"], k=10, n_buckets=8).collect()
+    s = Searcher(spark, idx, persist=False)
+    top = s.topk(["data"], k=10).collect()
     deleted = sorted({r["doc_id"] for r in top[:5]} | {3, 7, 450})
     kbig = 10 + len(deleted)
 
     base_rows: dict[str, list] = {}
     for terms, conj in TERM_QUERIES:
-        base_rows[f"t:{' '.join(terms)}:{conj}"] = wand.wand_topk(
-            spark, idx, terms, k=kbig, conjunctive=conj, n_buckets=8
+        base_rows[f"t:{' '.join(terms)}:{conj}"] = s.topk(
+            terms, k=kbig, conjunctive=conj
         ).collect()
     for q in COMPOSED:
-        base_rows[f"c:{q}"] = search_indexed(
-            spark, idx, q, k=kbig, n_buckets=8
-        ).collect()
-    base_rows["g:dat*"] = wand.glob_topk(
-        spark, idx, "dat*", k=kbig, n_buckets=8
-    ).collect()
-    base_rows["phrase"] = wand.phrase_docs_indexed(
-        spark, idx, ["table", "scan"], n_buckets=8
-    ).collect()
-    base_rows["near"] = wand.near_docs_indexed(
-        spark, idx, "table", "merge", slop=3, n_buckets=8
-    ).collect()
-    base_rows["any"] = wand.docs_with_any(
-        spark, idx, ["data", "dup"], n_buckets=8
-    ).collect()
+        base_rows[f"c:{q}"] = s.search(q, k=kbig).collect()
+    base_rows["g:dat*"] = s.glob_topk("dat*", k=kbig).collect()
+    base_rows["phrase"] = s.phrase_docs(["table", "scan"]).collect()
+    base_rows["near"] = s.near_docs("table", "merge", slop=3).collect()
 
     s = delete_docs(spark, idx, deleted + [999_999])  # unknown id: harmless
     assert s["tombstoned"] == len(deleted) + 1
@@ -106,8 +94,8 @@ def mor(spark):
 
 @pytest.mark.parametrize("terms,conj", TERM_QUERIES)
 def test_mor_topk_excludes_without_shadowing(spark, mor, terms, conj):
-    got = [tuple(r) for r in wand.wand_topk(
-        spark, mor["idx"], terms, k=10, conjunctive=conj, n_buckets=8
+    got = [tuple(r) for r in Searcher(spark, mor["idx"], persist=False).topk(
+        terms, k=10, conjunctive=conj
     ).collect()]
     expected = _rerank(
         mor["base"][f"t:{' '.join(terms)}:{conj}"], mor["deleted"], 10
@@ -117,27 +105,22 @@ def test_mor_topk_excludes_without_shadowing(spark, mor, terms, conj):
 
 @pytest.mark.parametrize("q", COMPOSED)
 def test_mor_composed(spark, mor, q):
-    got = [tuple(r) for r in search_indexed(
-        spark, mor["idx"], q, k=10, n_buckets=8
-    ).collect()]
+    got = [tuple(r) for r in Searcher(spark, mor["idx"], persist=False)
+           .search(q, k=10).collect()]
     assert got == _rerank(mor["base"][f"c:{q}"], mor["deleted"], 10)
 
 
 def test_mor_glob(spark, mor):
-    got = [tuple(r) for r in wand.glob_topk(
-        spark, mor["idx"], "dat*", k=10, n_buckets=8
-    ).collect()]
+    got = [tuple(r) for r in Searcher(spark, mor["idx"], persist=False)
+           .glob_topk("dat*", k=10).collect()]
     assert got == _rerank(mor["base"]["g:dat*"], mor["deleted"], 10)
 
 
 def test_mor_positional_and_membership(spark, mor):
+    s = Searcher(spark, mor["idx"], persist=False)
     for key, df in [
-        ("phrase", wand.phrase_docs_indexed(
-            spark, mor["idx"], ["table", "scan"], n_buckets=8)),
-        ("near", wand.near_docs_indexed(
-            spark, mor["idx"], "table", "merge", slop=3, n_buckets=8)),
-        ("any", wand.docs_with_any(
-            spark, mor["idx"], ["data", "dup"], n_buckets=8)),
+        ("phrase", s.phrase_docs(["table", "scan"])),
+        ("near", s.near_docs("table", "merge", slop=3)),
     ]:
         got = sorted(r["doc_id"] for r in df.collect())
         expected = sorted(
@@ -149,21 +132,20 @@ def test_mor_positional_and_membership(spark, mor):
 
 def test_mor_searcher_paths(spark, mor):
     """Searcher pins the tombstone set at open; every method matches
-    the (delete-aware) module path and never surfaces a deleted doc."""
+    the pristine baseline with the deleted docs dropped and never
+    surfaces a deleted doc."""
     idx, deleted = mor["idx"], mor["deleted"]
     with Searcher(spark, idx, n_buckets=8, persist=False) as s:
         for terms, conj in TERM_QUERIES:
             assert (
                 [tuple(r) for r in s.topk(terms, k=10, conjunctive=conj)
                  .collect()]
-                == [tuple(r) for r in wand.wand_topk(
-                    spark, idx, terms, k=10, conjunctive=conj, n_buckets=8
-                ).collect()]
+                == _rerank(mor["base"][f"t:{' '.join(terms)}:{conj}"],
+                           deleted, 10)
             )
         for q in COMPOSED:
             got = [tuple(r) for r in s.search(q, k=10).collect()]
-            assert got == [tuple(r) for r in search_indexed(
-                spark, idx, q, k=10, n_buckets=8).collect()]
+            assert got == _rerank(mor["base"][f"c:{q}"], deleted, 10)
             assert not {d for _, d, _ in got} & deleted
         many = s.topk_many({"a": ["data"], "b": ["the", "dup"]}, k=10)
         assert not {r["doc_id"] for r in many.collect()} & deleted
@@ -200,7 +182,7 @@ def purged(spark):
     _build(spark, SF_DIR, idx_a)
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    top = wand.wand_topk(spark, idx_a, ["data"], k=10, n_buckets=8).collect()
+    top = Searcher(spark, idx_a, persist=False).topk(["data"], k=10).collect()
     deleted = sorted({r["doc_id"] for r in top[:5]} | {3, 7, 450})
 
     os.makedirs(src_b)
@@ -245,21 +227,21 @@ def test_purge_stats_match_fresh_build(spark, purged):
 
 @pytest.mark.parametrize("terms,conj", TERM_QUERIES)
 def test_purge_topk_matches_fresh_build(spark, purged, terms, conj):
-    a = [tuple(r) for r in wand.wand_topk(
-        spark, purged["a"], terms, k=10, conjunctive=conj, n_buckets=8
+    a = [tuple(r) for r in Searcher(spark, purged["a"], persist=False).topk(
+        terms, k=10, conjunctive=conj
     ).collect()]
-    b = [tuple(r) for r in wand.wand_topk(
-        spark, purged["b"], terms, k=10, conjunctive=conj, n_buckets=8
+    b = [tuple(r) for r in Searcher(spark, purged["b"], persist=False).topk(
+        terms, k=10, conjunctive=conj
     ).collect()]
     assert a == b
 
 
 @pytest.mark.parametrize("q", COMPOSED)
 def test_purge_composed_matches_fresh_build(spark, purged, q):
-    a = [tuple(r) for r in search_indexed(
-        spark, purged["a"], q, k=10, n_buckets=8).collect()]
-    b = [tuple(r) for r in search_indexed(
-        spark, purged["b"], q, k=10, n_buckets=8).collect()]
+    a = [tuple(r) for r in Searcher(spark, purged["a"], persist=False)
+         .search(q, k=10).collect()]
+    b = [tuple(r) for r in Searcher(spark, purged["b"], persist=False)
+         .search(q, k=10).collect()]
     assert a == b
 
 
@@ -332,13 +314,13 @@ def test_ingest_after_purge_stats_exact(spark, tmp_path):
     b = sorted(tuple(r) for r in spark.read.parquet(f"{ref_idx}/term_stats")
                .select("term", "df", "idf").collect())
     assert a == b
+    sa = Searcher(spark, idx, persist=False)
+    sb = Searcher(spark, ref_idx, persist=False)
     for terms, conj in TERM_QUERIES:
-        qa = [tuple(r) for r in wand.wand_topk(
-            spark, idx, terms, k=10, conjunctive=conj, n_buckets=8
-        ).collect()]
-        qb = [tuple(r) for r in wand.wand_topk(
-            spark, ref_idx, terms, k=10, conjunctive=conj, n_buckets=8
-        ).collect()]
+        qa = [tuple(r) for r in
+              sa.topk(terms, k=10, conjunctive=conj).collect()]
+        qb = [tuple(r) for r in
+              sb.topk(terms, k=10, conjunctive=conj).collect()]
         assert qa == qb, terms
 
 
@@ -405,18 +387,18 @@ def test_purge_random_differential(spark, tmp_path, seed):
     cb = spark.read.parquet(f"{ref_idx}/collection").collect()[0]
     assert (ca["n_docs"], ca["total_tokens"]) == (cb["n_docs"],
                                                   cb["total_tokens"])
+    sa = Searcher(spark, idx, persist=False)
+    sb = Searcher(spark, ref_idx, persist=False)
     for terms, conj in TERM_QUERIES:
-        qa = [tuple(r) for r in wand.wand_topk(
-            spark, idx, terms, k=20, conjunctive=conj, n_buckets=8
-        ).collect()]
-        qb = [tuple(r) for r in wand.wand_topk(
-            spark, ref_idx, terms, k=20, conjunctive=conj, n_buckets=8
-        ).collect()]
+        qa = [tuple(r) for r in
+              sa.topk(terms, k=20, conjunctive=conj).collect()]
+        qb = [tuple(r) for r in
+              sb.topk(terms, k=20, conjunctive=conj).collect()]
         assert qa == qb, (seed, terms)
-    pa = sorted(r["doc_id"] for r in wand.phrase_docs_indexed(
-        spark, idx, ["table", "scan"], n_buckets=8).collect())
-    pb = sorted(r["doc_id"] for r in wand.phrase_docs_indexed(
-        spark, ref_idx, ["table", "scan"], n_buckets=8).collect())
+    pa = sorted(r["doc_id"] for r in
+                sa.phrase_docs(["table", "scan"]).collect())
+    pb = sorted(r["doc_id"] for r in
+                sb.phrase_docs(["table", "scan"]).collect())
     assert pa == pb
 
 
@@ -428,15 +410,15 @@ def test_deletes_survive_compaction(spark, tmp_path):
 
     idx = str(tmp_path / "index")
     _build(spark, SF_DIR, idx)
-    base = wand.wand_topk(spark, idx, ["data"], k=30, n_buckets=8).collect()
+    base = Searcher(spark, idx, persist=False).topk(["data"], k=30).collect()
     deleted = sorted({r["doc_id"] for r in base[:6]})
 
     delete_docs(spark, idx, deleted)
-    before = [tuple(r) for r in wand.wand_topk(
-        spark, idx, ["data"], k=10, n_buckets=8).collect()]
+    before = [tuple(r) for r in Searcher(spark, idx, persist=False)
+              .topk(["data"], k=10).collect()]
     compact_index(spark, idx, min_run=8, merge_factor=4, min_groups=1)
-    after = [tuple(r) for r in wand.wand_topk(
-        spark, idx, ["data"], k=10, n_buckets=8).collect()]
+    after = [tuple(r) for r in Searcher(spark, idx, persist=False)
+             .topk(["data"], k=10).collect()]
     assert before == after
     assert not {d for _, d, _ in after} & set(deleted)
 
@@ -446,9 +428,37 @@ def test_deletes_survive_compaction(spark, tmp_path):
     n = spark.read.parquet(f"{idx}/collection").collect()[0]["n_docs"]
     total = spark.read.parquet(f"{SF_DIR}/documents.parquet").count()
     assert n == total - len(deleted)
-    final = [tuple(r) for r in wand.wand_topk(
-        spark, idx, ["data"], k=10, n_buckets=8).collect()]
+    final = [tuple(r) for r in Searcher(spark, idx, persist=False)
+             .topk(["data"], k=10).collect()]
     assert not {d for _, d, _ in final} & set(deleted)
+
+
+def test_fresh_build_drops_old_tombstones(spark, tmp_path):
+    """A non-resume build over an existing index replaces it whole:
+    the old index's tombstones and segment map must not apply to the
+    new one, where they would hide the tombstoned doc."""
+    from glug_spark.index.compact import compact_index
+    from glug_spark.query import bm25
+
+    idx = str(tmp_path / "index")
+    _build(spark, SF_DIR, idx)
+    top = Searcher(spark, idx, n_buckets=8, persist=False).topk(
+        ["data"], k=10
+    ).collect()
+    gone = top[0]["doc_id"]
+    delete_docs(spark, idx, [gone])
+    compact_index(spark, idx, min_run=8, merge_factor=4, min_groups=1)
+
+    _build(spark, SF_DIR, idx)
+    assert not os.path.exists(os.path.join(idx, "deletes"))
+    assert not os.path.exists(os.path.join(idx, "segmap"))
+    assert read_deleted_ids(spark, idx) is None
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    want = [tuple(r) for r in bm25.bm25_topk(docs, ["data"], k=10).collect()]
+    got = [tuple(r) for r in Searcher(spark, idx, n_buckets=8, persist=False)
+           .topk(["data"], k=10).collect()]
+    assert got == want
+    assert got[0][1] == gone
 
 
 def test_purge_crash_before_stats_write_converges(spark, tmp_path,

@@ -14,7 +14,8 @@ import tempfile
 import pytest
 
 from glug_spark.index.pipeline import build_index
-from glug_spark.query import bm25, wand
+from glug_spark.query import bm25
+from glug_spark.query.searcher import Searcher
 from tests.conftest import SF_DIR
 
 
@@ -52,8 +53,8 @@ def test_wand_rank_identical(spark, index_dir, terms, k, conjunctive):
     ]
     actual = [
         tuple(r)
-        for r in wand.wand_topk(
-            spark, index_dir, terms, k=k, conjunctive=conjunctive, n_buckets=8
+        for r in Searcher(spark, index_dir, persist=False).topk(
+            terms, k=k, conjunctive=conjunctive
         ).collect()
     ]
     assert actual == expected
@@ -68,7 +69,7 @@ def test_phrase_rank_identical(spark, index_dir, phrase):
     expected = [r["doc_id"] for r in bm25.phrase_docs(docs, phrase).collect()]
     actual = [
         r["doc_id"]
-        for r in wand.phrase_docs_indexed(spark, index_dir, phrase, n_buckets=8).collect()
+        for r in Searcher(spark, index_dir, persist=False).phrase_docs(phrase).collect()
     ]
     assert actual == expected
 
@@ -94,8 +95,8 @@ def test_near_identical_to_full_scan(spark, index_dir, a, b, slop, ordered):
     ]
     actual = [
         r["doc_id"]
-        for r in wand.near_docs_indexed(
-            spark, index_dir, a, b, slop=slop, ordered=ordered, n_buckets=8
+        for r in Searcher(spark, index_dir, persist=False).near_docs(
+            a, b, slop=slop, ordered=ordered
         ).collect()
     ]
     assert actual == expected
@@ -114,9 +115,9 @@ def test_near_ordered_slop1_equals_phrase(spark, index_dir):
     ]
     near_idx = [
         r["doc_id"]
-        for r in wand.near_docs_indexed(spark, index_dir, "table", "scan",
-                                        slop=1, ordered=True,
-                                        n_buckets=8).collect()
+        for r in Searcher(spark, index_dir, persist=False).near_docs(
+            "table", "scan", slop=1, ordered=True
+        ).collect()
     ]
     assert near_scan == phrase
     assert near_idx == phrase
@@ -143,8 +144,8 @@ def test_near_python_reference(spark, index_dir):
             expected.append(r["doc_id"])
     actual = [
         r["doc_id"]
-        for r in wand.near_docs_indexed(
-            spark, index_dir, a, b, slop=slop, n_buckets=8
+        for r in Searcher(spark, index_dir, persist=False).near_docs(
+            a, b, slop=slop
         ).collect()
     ]
     assert actual == expected
@@ -195,13 +196,15 @@ def test_resume_after_interruption(spark):
         for terms, k, conj in [(["data"], 10, False), (["data", "join"], 10, True)]:
             want = [
                 tuple(r)
-                for r in wand.wand_topk(spark, clean, terms, k=k,
-                                        conjunctive=conj, n_buckets=8).collect()
+                for r in Searcher(spark, clean, persist=False).topk(
+                    terms, k=k, conjunctive=conj
+                ).collect()
             ]
             got = [
                 tuple(r)
-                for r in wand.wand_topk(spark, broken, terms, k=k,
-                                        conjunctive=conj, n_buckets=8).collect()
+                for r in Searcher(spark, broken, persist=False).topk(
+                    terms, k=k, conjunctive=conj
+                ).collect()
             ]
             assert got == want
             full = [
@@ -303,35 +306,13 @@ def test_degenerate_identical_corpus(spark, tmp_path):
         ]
         got = [
             tuple(r)
-            for r in wand.wand_topk(spark, index_dir, terms, k=k,
-                                    conjunctive=conj, n_buckets=4).collect()
+            for r in Searcher(spark, index_dir, persist=False).topk(
+                terms, k=k, conjunctive=conj
+            ).collect()
         ]
         assert got == expected, terms
         # ties → doc_id ascending
         assert [r[1] for r in got] == sorted(r[1] for r in got)
-
-
-def test_docs_with_any_matches_full_scan(spark, index_dir):
-    """The doc-set primitive (semi/anti-join building block exposed for
-    external composition) returns exactly the docs containing any query
-    term."""
-    from pyspark.sql import functions as F
-
-    from glug_spark.index.build import token_array
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    for terms in (["data"], ["data", "join"], ["nosuchterm"], ["dup", "the"]):
-        want = {
-            r["doc_id"]
-            for r in docs.select(
-                "doc_id", F.explode(token_array()).alias("term")
-            ).where(F.col("term").isin(terms)).select("doc_id").distinct().collect()
-        }
-        got = {
-            r["doc_id"]
-            for r in wand.docs_with_any(spark, index_dir, terms, n_buckets=8).collect()
-        }
-        assert got == want, terms
 
 
 def test_index_stats_introspection(spark, index_dir):

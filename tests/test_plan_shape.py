@@ -14,7 +14,6 @@ import tempfile
 import pytest
 
 from glug_spark.index.pipeline import build_index
-from glug_spark.query import wand
 from glug_spark.query.searcher import Searcher
 from tests.conftest import SF_DIR
 
@@ -57,7 +56,7 @@ def test_explicit_topk_plan(spark, plan_index):
 
 def test_glob_plan_distributed_expansion(spark, plan_index):
     plan = _formatted(
-        wand.glob_topk(spark, plan_index, "dat*", k=10, n_buckets=8)
+        Searcher(spark, plan_index, persist=False).glob_topk("dat*", k=10)
     )
     # literal prefix reaches the scan as a pushable StartsWith
     assert "StringStartsWith(term,dat)" in plan, plan
@@ -223,6 +222,3 @@ def test_deletes_add_no_plan_overhead(spark, plan_index):
         assert ops(before) == ops(after)
     finally:
         _sh.rmtree(os.path.join(plan_index, "deletes"), ignore_errors=True)
-        from glug_spark.index.deletes import invalidate_deletes_cache
-
-        invalidate_deletes_cache(plan_index)

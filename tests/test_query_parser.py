@@ -209,12 +209,14 @@ def search_index(spark):
 
 @pytest.mark.parametrize("query", QUERIES)
 def test_search_indexed_matches_full_scan(spark, search_index, query):
-    from glug_spark.query.execute import search_indexed
+    from glug_spark.query.searcher import Searcher
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     expected = [tuple(r) for r in search(docs, query, k=10).collect()]
     actual = [
         tuple(r)
-        for r in search_indexed(spark, search_index, query, k=10, n_buckets=8).collect()
+        for r in Searcher(spark, search_index, persist=False).search(
+            query, k=10
+        ).collect()
     ]
     assert actual == expected, query

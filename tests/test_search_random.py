@@ -11,7 +11,8 @@ import random
 import pytest
 
 from glug_spark.index.pipeline import build_index
-from glug_spark.query.execute import search, search_indexed
+from glug_spark.query.execute import search
+from glug_spark.query.searcher import Searcher
 
 VOCAB = ["data", "join", "scan", "table", "merge", "index", "sort",
          "row", "key", "hash"]
@@ -66,12 +67,9 @@ def test_search_indexed_random_differential(spark, seed, tmp_path):
         spark.conf.set(key, prev)
 
     stored = spark.read.parquet(f"{corpus_dir}/documents.parquet")
+    s = Searcher(spark, index_dir, persist=False)
     for q_i in range(5):
         query = _random_query(rng)
         expected = [tuple(r) for r in search(stored, query, k=8).collect()]
-        got = [
-            tuple(r)
-            for r in search_indexed(spark, index_dir, query, k=8,
-                                    n_buckets=4).collect()
-        ]
+        got = [tuple(r) for r in s.search(query, k=8).collect()]
         assert got == expected, f"seed={seed} q={query!r}"

@@ -1,6 +1,6 @@
-"""Searcher (query-many handle) must be rank-identical to the
-module-level paths and to the full-scan scorer, including on a
-compacted index and for composed queries."""
+"""Searcher (the index query engine) must be rank-identical to the
+full-scan scorer, including on a compacted index and for composed
+queries, and its batched calls must equal the individual ones."""
 
 from __future__ import annotations
 
@@ -160,6 +160,43 @@ def test_searcher_on_stream_ingested_index(spark, tmp_path):
             assert got == want, terms
 
 
+def test_searcher_bucket_mismatch_raises(spark, searcher):
+    """The bucket counts are the index's own (params/): a caller value
+    that disagrees raises instead of hashing query terms to buckets
+    that do not hold them, which would return a plausible but wrong
+    top-k."""
+    from glug_spark.index.pipeline import N_DOC_BUCKETS
+
+    with pytest.raises(ValueError, match="n_buckets=16"):
+        Searcher(spark, searcher.index_dir, n_buckets=16, persist=False)
+    s = Searcher(spark, searcher.index_dir, persist=False)
+    assert (s.n_buckets, s.n_doc_buckets) == (8, N_DOC_BUCKETS)
+
+
+def test_searcher_after_in_place_rebuild(spark, tmp_path):
+    """Rebuild an index in place, in the same process, on a different
+    corpus and bucket count: a Searcher opened afterwards uses the new
+    params, collection stats and layout — equal to the full scan."""
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    small, index = str(tmp_path / "small"), str(tmp_path / "x")
+    docs.where(F.col("doc_id") < 300).write.parquet(
+        f"{small}/documents.parquet"
+    )
+    build_index(spark, small, index, n_buckets=8)
+    compact_index(spark, index, min_run=8, merge_factor=4, min_groups=1)
+    queries = ["data join", "dat* -noise", 'the "table scan"']
+    with Searcher(spark, index, persist=False) as s:
+        for q in queries:
+            s.search(q, k=10).collect()
+
+    build_index(spark, SF_DIR, index, n_buckets=4)
+    with Searcher(spark, index, persist=False) as s:
+        assert s.n_buckets == 4
+        for q in queries:
+            want = [tuple(r) for r in search(docs, q, k=10).collect()]
+            assert [tuple(r) for r in s.search(q, k=10).collect()] == want, q
+
+
 def test_topk_with_urls_matches_corpus_join(spark, searcher):
     """with_urls=True appends each hit's url (documents.source) without
     changing ranks — checked against a corpus join of the plain result."""
@@ -310,13 +347,13 @@ def test_unicode_corpus_end_to_end(spark, tmp_path):
     index = str(tmp_path / "x")
     build_index(spark, corpus_dir, index, n_buckets=4)
     stored = spark.read.parquet(f"{corpus_dir}/documents.parquet")
-    from glug_spark.query import wand
     for terms, k, conj in [(["λέξη"], 10, False),
                            (["мова", "текст"], 10, True),
                            (["한국어", "Ελληνική", "text"], 20, False)]:
         want = [tuple(r) for r in
                 bm25.bm25_topk(stored, terms, k=k, conjunctive=conj).collect()]
         got = [tuple(r) for r in
-               wand.wand_topk(spark, index, terms, k=k, conjunctive=conj,
-                              n_buckets=4).collect()]
+               Searcher(spark, index, persist=False).topk(
+                   terms, k=k, conjunctive=conj
+               ).collect()]
         assert got == want, terms

@@ -12,7 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from glug_spark.index.pipeline import build_index
-from glug_spark.query import bm25, wand
+from glug_spark.query import bm25
+from glug_spark.query.searcher import Searcher
 from glug_spark.streaming.ingest import ingest_available, refresh_stats
 from tests.conftest import SF_DIR
 
@@ -64,8 +65,9 @@ def test_ingested_rank_identical(spark, ingested, terms, k, conjunctive):
     ]
     actual = [
         tuple(r)
-        for r in wand.wand_topk(spark, index, terms, k=k,
-                                conjunctive=conjunctive, n_buckets=8).collect()
+        for r in Searcher(spark, index, persist=False).topk(
+            terms, k=k, conjunctive=conjunctive
+        ).collect()
     ]
     assert actual == expected
 
@@ -87,8 +89,9 @@ def test_ingested_phrase_identical(spark, ingested):
     expected = [r["doc_id"] for r in bm25.phrase_docs(docs, ["table", "scan"]).collect()]
     actual = [
         r["doc_id"]
-        for r in wand.phrase_docs_indexed(spark, index, ["table", "scan"],
-                                          n_buckets=8).collect()
+        for r in Searcher(spark, index, persist=False).phrase_docs(
+            ["table", "scan"]
+        ).collect()
     ]
     assert actual == expected
 
@@ -184,8 +187,9 @@ def test_crash_between_append_and_manifest_is_adopted(spark, tmp_path):
         want = [tuple(r) for r in
                 bm25.bm25_topk(docs, terms, k=k, conjunctive=conj).collect()]
         got = [tuple(r) for r in
-               wand.wand_topk(spark, index, terms, k=k, conjunctive=conj,
-                              n_buckets=8).collect()]
+               Searcher(spark, index, persist=False).topk(
+                   terms, k=k, conjunctive=conj
+               ).collect()]
         assert got == want, terms
 
 
@@ -262,8 +266,9 @@ def test_out_of_order_disjoint_batches_accepted(spark, tmp_path):
         want = [tuple(r) for r in
                 bm25.bm25_topk(docs, terms, k=k, conjunctive=conj).collect()]
         got = [tuple(r) for r in
-               wand.wand_topk(spark, index, terms, k=k, conjunctive=conj,
-                              n_buckets=8).collect()]
+               Searcher(spark, index, persist=False).topk(
+                   terms, k=k, conjunctive=conj
+               ).collect()]
         assert got == want, terms
 
 
@@ -300,8 +305,9 @@ def test_compact_refuses_unrecovered_stream_namespace(spark, tmp_path):
         want = [tuple(r) for r in
                 bm25.bm25_topk(docs, terms, k=k, conjunctive=conj).collect()]
         got = [tuple(r) for r in
-               wand.wand_topk(spark, index, terms, k=k, conjunctive=conj,
-                              n_buckets=8).collect()]
+               Searcher(spark, index, persist=False).topk(
+                   terms, k=k, conjunctive=conj
+               ).collect()]
         assert got == want, terms
 
 
@@ -345,8 +351,9 @@ def test_compact_folds_committed_but_unfolded_batch(spark, tmp_path):
         want = [tuple(r) for r in
                 bm25.bm25_topk(docs, terms, k=k, conjunctive=conj).collect()]
         got = [tuple(r) for r in
-               wand.wand_topk(spark, index, terms, k=k, conjunctive=conj,
-                              n_buckets=8).collect()]
+               Searcher(spark, index, persist=False).topk(
+                   terms, k=k, conjunctive=conj
+               ).collect()]
         assert got == want, terms
 
 
@@ -396,8 +403,9 @@ def test_auto_compact_policy(spark, tmp_path):
         want = [tuple(r) for r in
                 bm25.bm25_topk(docs, terms, k=k, conjunctive=conj).collect()]
         got = [tuple(r) for r in
-               wand.wand_topk(spark, index, terms, k=k, conjunctive=conj,
-                              n_buckets=8).collect()]
+               Searcher(spark, index, persist=False).topk(
+                   terms, k=k, conjunctive=conj
+               ).collect()]
         assert got == want, terms
 
 
@@ -465,8 +473,9 @@ def test_compact_ingest_compact_interplay(spark, tmp_path):
             want = [tuple(r) for r in
                     bm25.bm25_topk(docs, terms, k=k, conjunctive=conj).collect()]
             got = [tuple(r) for r in
-                   wand.wand_topk(spark, index, terms, k=k, conjunctive=conj,
-                                  n_buckets=8).collect()]
+                   Searcher(spark, index, persist=False).topk(
+                       terms, k=k, conjunctive=conj
+                   ).collect()]
             assert got == want, (tag, terms)
 
     check("after-ingest")
@@ -484,9 +493,9 @@ def test_compact_ingest_compact_interplay(spark, tmp_path):
 
 
 def test_query_before_and_after_ingest_no_stale_cache(spark, tmp_path):
-    """A module-function query issued BEFORE ingest populates the
-    per-process collection cache; the post-ingest query must use the
-    REFRESHED n_docs/avgdl (regression: the cache used to go stale)."""
+    """A query issued BEFORE ingest reads the 300-doc collection
+    stats; a Searcher opened after the ingest must use the REFRESHED
+    n_docs/avgdl, never stats held over from the earlier query."""
     initial = str(tmp_path / "initial")
     arrivals = str(tmp_path / "arrivals")
     index = str(tmp_path / "index")
@@ -496,8 +505,7 @@ def test_query_before_and_after_ingest_no_stale_cache(spark, tmp_path):
         os.path.join(initial, "documents.parquet")
     )
     build_index(spark, initial, index, n_buckets=8)
-    # populate the collection cache with the 300-doc stats
-    wand.wand_topk(spark, index, ["data"], k=5, n_buckets=8).collect()
+    Searcher(spark, index, persist=False).topk(["data"], k=5).collect()
 
     docs.where(F.col("doc_id") >= 300).write.parquet(
         os.path.join(arrivals, "wave.parquet")
@@ -506,7 +514,7 @@ def test_query_before_and_after_ingest_no_stale_cache(spark, tmp_path):
 
     want = [tuple(r) for r in bm25.bm25_topk(docs, ["data"], k=10).collect()]
     got = [tuple(r) for r in
-           wand.wand_topk(spark, index, ["data"], k=10, n_buckets=8).collect()]
+           Searcher(spark, index, persist=False).topk(["data"], k=10).collect()]
     assert got == want
 
 
@@ -557,3 +565,66 @@ def test_doc_ranges_legacy_fallback():
     with pytest.raises(ValueError, match="watermark"):
         dr.validate(50, 60, batch_id=1)   # ≤ global_hi → strict refusal
     dr.validate(100, 110, batch_id=1)     # above global watermark: ok
+
+
+def _tree_bytes(root: str) -> dict[str, bytes]:
+    out = {}
+    for d, _, names in os.walk(root):
+        for n in names:
+            p = os.path.join(d, n)
+            with open(p, "rb") as f:
+                out[os.path.relpath(p, root)] = f.read()
+    return out
+
+
+def test_ingest_bucket_mismatch_raises_before_writing(spark, tmp_path):
+    """An ingest told a bucket count the index was not built with must
+    refuse before the stream starts: postings hashed with another count
+    land in buckets no query reads."""
+    initial = str(tmp_path / "initial")
+    arrivals = str(tmp_path / "arrivals")
+    index = str(tmp_path / "index")
+    os.makedirs(arrivals)
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    docs.where(F.col("doc_id") < 300).write.parquet(
+        os.path.join(initial, "documents.parquet")
+    )
+    build_index(spark, initial, index, n_buckets=8)
+    docs.where(F.col("doc_id") >= 300).write.parquet(
+        os.path.join(arrivals, "wave.parquet")
+    )
+    before = _tree_bytes(os.path.join(index, "postings"))
+    with pytest.raises(ValueError, match="n_buckets=16"):
+        ingest_available(spark, arrivals, index, n_buckets=16)
+    assert _tree_bytes(os.path.join(index, "postings")) == before
+    assert not os.path.exists(os.path.join(index, "stream_checkpoint"))
+    assert not os.path.exists(os.path.join(index, "stream_manifest"))
+
+
+def test_ingest_reads_bucket_count_from_index(spark, tmp_path):
+    """Without ``n_buckets`` the ingest hashes into the index's own 8
+    buckets, so the ingested docs are found: rank-identical to the
+    full scan over base + wave."""
+    initial = str(tmp_path / "initial")
+    arrivals = str(tmp_path / "arrivals")
+    index = str(tmp_path / "index")
+    os.makedirs(arrivals)
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    docs.where(F.col("doc_id") < 300).write.parquet(
+        os.path.join(initial, "documents.parquet")
+    )
+    build_index(spark, initial, index, n_buckets=8)
+    docs.where(F.col("doc_id") >= 300).write.parquet(
+        os.path.join(arrivals, "wave.parquet")
+    )
+    assert ingest_available(spark, arrivals, index)["n_docs"] == docs.count()
+    s = Searcher(spark, index, n_buckets=8, persist=False)
+    hits: set[int] = set()
+    for terms, k, conj in QUERIES:
+        want = [tuple(r) for r in
+                bm25.bm25_topk(docs, terms, k=k, conjunctive=conj).collect()]
+        got = [tuple(r) for r in
+               s.topk(terms, k=k, conjunctive=conj).collect()]
+        assert got == want, terms
+        hits |= {d for _, d, _ in got}
+    assert any(d >= 300 for d in hits)  # the wave's docs are reachable

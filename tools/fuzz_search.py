@@ -6,7 +6,7 @@ multi-phrases), compared across FOUR implementations that must agree
 exactly:
 
   1. full-scan executor (execute.search)
-  2. index path (execute.search_indexed) — uncompacted
+  2. index path (Searcher.search) — uncompacted
   3. index path after compaction (mixed / fully-merged layouts)
   4. batched path (Searcher.search_many) slices
 
@@ -63,7 +63,7 @@ def main() -> int:
 
     from glug_spark.index.compact import compact_index
     from glug_spark.index.pipeline import build_index
-    from glug_spark.query.execute import search, search_indexed
+    from glug_spark.query.execute import search
     from glug_spark.query.searcher import Searcher
     from glug_spark.session import get_spark
 
@@ -110,17 +110,11 @@ def main() -> int:
                         print(f"DIVERGE corpus={c} {tag} q={q!r}\n"
                               f"  want={expected}\n  got ={got}")
 
+            s = Searcher(spark, f"{tmp}/index", persist=False)
             check("index", lambda q: [
-                tuple(r) for r in search_indexed(
-                    spark, f"{tmp}/index", q, k=7,
-                    n_buckets=spark.read.parquet(
-                        f"{tmp}/index/params").collect()[0]["n_buckets"],
-                ).collect()])
+                tuple(r) for r in s.search(q, k=7).collect()])
 
-            nb = int(spark.read.parquet(
-                f"{tmp}/index/params").collect()[0]["n_buckets"])
-            with Searcher(spark, f"{tmp}/index", n_buckets=nb,
-                          persist=False) as s:
+            with Searcher(spark, f"{tmp}/index", persist=False) as s:
                 res = s.search_many(
                     {qid: q for qid, (q, _) in queries.items()}, k=7
                 ).collect()
@@ -140,10 +134,9 @@ def main() -> int:
                           min_run=rng.choice([8, 1000]),
                           merge_factor=rng.choice([2, 4, 1000]),
                           min_groups=rng.choice([1, 8]))
+            s = Searcher(spark, f"{tmp}/index", persist=False)
             check("compacted", lambda q: [
-                tuple(r) for r in search_indexed(
-                    spark, f"{tmp}/index", q, k=7, n_buckets=nb
-                ).collect()])
+                tuple(r) for r in s.search(q, k=7).collect()])
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
         print(f"corpus {c}: ok ({checked} checks, {bad} diverging)")
