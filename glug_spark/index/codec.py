@@ -1,8 +1,9 @@
 """Posting-list codec: delta-gap + varbyte + block-max metadata.
 
-Pure NumPy, fully vectorized (no per-element Python loops on the hot
-path) — this code runs inside Arrow-batched ``applyInPandas`` workers, so
-its per-batch cost is what bounds index-build throughput.
+Pure NumPy over Arrow buffers, fully vectorized (no per-element Python
+loops on the hot path) — this code runs inside the Arrow-batched
+workers of index build, compaction, purge and every query kernel, so
+its per-batch cost bounds their throughput.
 
 Layout per (term, segment) row:
 
@@ -102,16 +103,56 @@ def gather_segments(values: np.ndarray, starts: np.ndarray,
 
 
 def binary_stream(arr: "object") -> "tuple[np.ndarray, np.ndarray]":
-    """(uint8 value stream, int64 per-row offsets) of an Arrow
-    BinaryArray, zero-copy: binary arrays store row values contiguously
+    """(uint8 value stream, int64 per-row offsets) of an Arrow binary or
+    string array, zero-copy: such arrays store row values contiguously
     in row order, so the sliced stream IS the concatenation of the
     rows' blobs (varbyte values are self-delimiting, value counts per
-    row come from the schema's count columns)."""
-    offs = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
+    row come from the schema's count columns). ``large_binary`` /
+    ``large_string`` (Spark's ``arrow.useLargeVarTypes``) carry int64
+    offsets; any other type raises ``TypeError``."""
+    import pyarrow as pa
+
+    t = arr.type
+    if pa.types.is_large_binary(t) or pa.types.is_large_string(t):
+        width = np.int64
+    elif pa.types.is_binary(t) or pa.types.is_string(t):
+        width = np.int32
+    else:
+        raise TypeError(f"binary_stream needs a binary or string array, got {t}")
+    offs = np.frombuffer(arr.buffers()[1], dtype=width)[
         arr.offset : arr.offset + len(arr) + 1
     ].astype(np.int64)
     data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
     return data[offs[0]:offs[-1]], offs - offs[0]
+
+
+def list_values(arr: "object") -> "tuple[np.ndarray, np.ndarray]":
+    """(int64 flat values, int64 per-row offsets rebased to 0) of an
+    Arrow ``list<int64>`` / ``large_list<int64>`` array; a sliced array
+    yields only its own rows' values."""
+    offs = arr.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    vals = arr.values.to_numpy(zero_copy_only=False)[offs[0]:offs[-1]]
+    return vals.astype(np.int64, copy=False), offs - offs[0]
+
+
+def first_doc_ids(stream: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    """First doc_id of every encoded run of a ``doc_gaps`` stream (run
+    i's blob starts at ``stream[starts[i]]``; first gap = doc_id + 1),
+    decoded for ALL runs at once: one masked pass per byte position,
+    ≤ 10 passes for any int64 — no full decode of any run."""
+    n_rows = len(starts)
+    val = np.zeros(n_rows, dtype=np.uint64)
+    ptr = starts.astype(np.int64)
+    active = np.ones(n_rows, dtype=bool)
+    shift = np.uint64(0)
+    while active.any():
+        idx = np.flatnonzero(active)
+        b = stream[ptr[idx]].astype(np.uint64)
+        val[idx] |= (b & np.uint64(0x7F)) << shift
+        ptr[idx] += 1
+        active[idx] = (b & np.uint64(0x80)) != 0
+        shift += np.uint64(7)
+    return val.astype(np.int64) - 1
 
 
 def delta_encode(sorted_ids: np.ndarray) -> np.ndarray:
@@ -409,62 +450,143 @@ def decode_segment(row: "dict | pd.Series") -> tuple[np.ndarray, np.ndarray, np.
     return doc_ids, tfs, dls
 
 
-def decode_position_blocks(row: "dict | pd.Series", blocks: np.ndarray,
-                           tfs_concat: np.ndarray,
-                           block: int = BLOCK) -> list[np.ndarray]:
-    """Per-doc position lists for the given blocks ONLY — skipped
-    blocks' position bytes are never touched (``pos_offsets`` gives
-    each block's byte start; deltas restart per doc, so any block
-    decodes standalone). ``tfs_concat`` is the tf array
-    :func:`decode_blocks` returned for the same ``blocks``."""
-    get = row.get if hasattr(row, "get") else row.__getitem__
-    pos_off = get("pos_offsets")
-    pblob = get("positions")
-    n = int(get("df_local"))
-    n_blocks = len(get("gap_offsets"))
-    out: list[np.ndarray] = []
-    k = 0
-    for b in [int(x) for x in blocks]:
-        rows_in_b = min(block, n - b * block)
-        tfs_b = np.asarray(tfs_concat[k:k + rows_in_b], dtype=np.int64)
-        k += rows_in_b
-        end = pos_off[b + 1] if b + 1 < n_blocks else len(pblob)
-        out.extend(decode_positions(pblob[pos_off[b]:end], tfs_b))
-    return out
+def run_starts(batch: "object", keys: "list[str]") -> np.ndarray:
+    """Row indices where a new run of equal ``keys`` begins in a
+    key-sorted Arrow batch. Integer keys compare by value, string keys
+    by per-batch dictionary code (only adjacency matters)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    change = np.zeros(batch.num_rows, dtype=bool)
+    change[:1] = True
+    for key in keys:
+        col = batch.column(key)
+        if not pa.types.is_integer(col.type):
+            col = pc.dictionary_encode(col).indices
+        v = col.to_numpy(zero_copy_only=False)
+        change[1:] |= v[1:] != v[:-1]
+    return np.flatnonzero(change)
 
 
-def decode_blocks(row: "dict | pd.Series", blocks: np.ndarray,
-                  block: int = BLOCK) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Selective decode of the given block indices (sorted, unique).
+def _concat_batches(batches: "list") -> "object":
+    if len(batches) == 1:
+        return batches[0]
+    import pyarrow as pa
 
-    Skipped blocks' bytes are never touched — this is the WAND skip.
-    """
-    get = row.get if hasattr(row, "get") else row.__getitem__
-    n = int(get("df_local"))
-    gap_off = get("gap_offsets")
-    tf_off = get("tf_offsets")
-    dl_off = get("dl_offsets")
-    block_last = get("block_last")
-    doc_gaps, tf_blob, dl_blob = get("doc_gaps"), get("tfs"), get("dls")
-    n_blocks = len(gap_off)
+    return pa.Table.from_batches(batches).combine_chunks().to_batches()[0]
 
-    def _slice(blob: bytes, offsets: np.ndarray, b: int) -> bytes:
-        end = offsets[b + 1] if b + 1 < n_blocks else len(blob)
-        return blob[offsets[b] : end]
 
-    ids_parts, tf_parts, dl_parts = [], [], []
-    for b in [int(b) for b in blocks]:
-        gaps = varbyte_decode(_slice(doc_gaps, gap_off, b))
-        base = np.uint64(block_last[b - 1] + 1) if b > 0 else np.uint64(0)
-        ids = (base + np.cumsum(gaps, dtype=np.uint64) - np.uint64(1)).astype(np.int64)
-        ids_parts.append(ids)
-        tf_parts.append(varbyte_decode(_slice(tf_blob, tf_off, b)).astype(np.int64))
-        dl_parts.append(varbyte_decode(_slice(dl_blob, dl_off, b)).astype(np.int64))
-    if not ids_parts:
-        z = np.zeros(0, dtype=np.int64)
-        return z, z.copy(), z.copy()
-    return (
-        np.concatenate(ids_parts),
-        np.concatenate(tf_parts),
-        np.concatenate(dl_parts),
-    )
+def complete_runs(batches: "Iterator", keys: "list[str]") -> "Iterator":
+    """Re-cut key-sorted Arrow batches, split by Spark at arbitrary
+    rows, into batches that each hold only COMPLETE runs of equal
+    ``keys`` (the shape a ``sortWithinPartitions`` → ``mapInArrow``
+    kernel needs). A batch's trailing run may continue in the next
+    batch, so it is carried: carried slices collect in a list and are
+    concatenated ONCE, when their run completes, so a run spanning B
+    batches costs O(B) copies, not O(B²). Whether the next batch
+    continues the carried run is decided on the two boundary rows."""
+    carry: list = []
+    for batch in batches:
+        if not batch.num_rows:
+            continue
+        if carry:
+            tail = carry[-1]
+            edge = _concat_batches([tail.slice(tail.num_rows - 1),
+                                    batch.slice(0, 1)])
+            if len(run_starts(edge, keys)) > 1:
+                yield _concat_batches(carry)
+                carry = []
+        starts = run_starts(batch, keys)
+        if len(starts) == 1:
+            carry.append(batch)
+            continue
+        cut = int(starts[-1])
+        yield _concat_batches(carry + [batch.slice(0, cut)])
+        carry = [batch.slice(cut)]
+    if carry:
+        yield _concat_batches(carry)
+
+
+class PostingBlocks:
+    """Block-addressable view of a batch of encoded posting rows (Arrow
+    columns, zero-copy): every 128-posting block of every row gets one
+    index, row-major. :meth:`decode` reads exactly the selected blocks
+    — across any number of rows and terms — with ONE varbyte pass per
+    column: the block byte ranges are gathered from the column's value
+    stream (:func:`gather_segments`), decoded together, and absolute
+    doc ids rebuilt per block by :func:`segmented_abs_decode`, seeded
+    from the previous block's ``block_last`` (delta gaps restart at
+    every block boundary, see :func:`encode_segment`)."""
+
+    _COLUMNS = (("doc_gaps", "gap_offsets"), ("tfs", "tf_offsets"),
+                ("dls", "dl_offsets"))
+
+    def __init__(self, batch: "object", positions: bool = False) -> None:
+        df = batch.column("df_local").to_numpy(
+            zero_copy_only=False
+        ).astype(np.int64)
+        #: per block: last doc id, max tf, owning row, index in its row
+        self.last, boffs = list_values(batch.column("block_last"))
+        self.max_tf, _ = list_values(batch.column("block_max_tf"))
+        n_blk = np.diff(boffs)
+        self.row = np.repeat(np.arange(len(n_blk)), n_blk)
+        self.index = np.arange(len(self.last)) - boffs[:-1][self.row]
+        self.count = np.minimum(BLOCK, df[self.row] - self.index * BLOCK)
+        prev = np.zeros(len(self.last), dtype=np.int64)
+        prev[1:] = self.last[:-1] + 1
+        #: doc id every block's first gap is relative to (+1 folded in)
+        self.base = np.where(self.index > 0, prev, 0)
+        row_end = self.index == n_blk[self.row] - 1
+        cols = self._COLUMNS + ((("positions", "pos_offsets"),)
+                                if positions else ())
+        self._spans = {}
+        for col, off_col in cols:
+            stream, roffs = binary_stream(batch.column(col))
+            off, _ = list_values(batch.column(off_col))
+            start = roffs[:-1][self.row] + off
+            end = np.empty_like(start)
+            end[:-1] = start[1:]
+            end[row_end] = roffs[1:][self.row[row_end]]
+            self._spans[col] = (stream, start, end - start)
+
+    def first(self) -> np.ndarray:
+        """Smallest doc id each block can hold: exact for a row's first
+        block (its leading varbyte), ``block_last[b-1] + 1`` after."""
+        stream, start, _ = self._spans["doc_gaps"]
+        heads = np.flatnonzero(self.index == 0)
+        first = self.base.copy()
+        first[heads] = first_doc_ids(stream, start[heads])
+        return first
+
+    def covering(self, blocks: np.ndarray, targets: np.ndarray) -> np.ndarray:
+        """Those of ``blocks`` whose doc range (block_last[b-1],
+        block_last[b]] holds at least one of the SORTED ``targets``."""
+        lo = np.where(self.index[blocks] > 0, self.last[blocks - 1], -1)
+        hi = self.last[blocks]
+        hit = (np.searchsorted(targets, hi, side="right")
+               > np.searchsorted(targets, lo, side="right"))
+        return blocks[hit]
+
+    def _values(self, col: str, blocks: np.ndarray) -> np.ndarray:
+        stream, start, lens = self._spans[col]
+        return varbyte_decode(gather_segments(stream, start[blocks],
+                                              lens[blocks]))
+
+    def decode(self, blocks: np.ndarray,
+               positions: bool = False) -> "dict[str, np.ndarray]":
+        """Postings of ``blocks`` in block order: int64 ``ids``, ``tfs``,
+        ``dls`` and, with ``positions``, the flat absolute ``pos`` (each
+        posting owns ``tf`` consecutive values)."""
+        counts = self.count[blocks]
+        ids = segmented_abs_decode(self._values("doc_gaps", blocks), counts)
+        ids += np.repeat(self.base[blocks], counts).astype(np.uint64)
+        out = {
+            "ids": ids.astype(np.int64),
+            "tfs": self._values("tfs", blocks).astype(np.int64),
+            "dls": self._values("dls", blocks).astype(np.int64),
+        }
+        if positions:
+            out["pos"] = segmented_abs_decode(
+                self._values("positions", blocks), out["tfs"]
+            ).astype(np.int64)
+        return out

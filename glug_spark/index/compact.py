@@ -7,7 +7,7 @@ but TAIL terms produce one tiny run per segment they appear in: at
 of a few postings each.
 
 Correctness invariant (why the obvious fix is wrong): the query path
-scores doc-space partitions independently (``groupBy`` on a segment
+scores doc-space partitions independently (one kernel run per segment
 key), so ALL terms' postings for one doc must land under the SAME key.
 Merging a tail term's runs into a synthetic global segment while head
 terms keep their per-segment rows would split a doc's postings across
@@ -29,7 +29,7 @@ Design (LSM-style segment coarsening):
    byte-identical on disk and simply co-group under the coarser key.
 
 Every query path maps ``segment → grp`` (identity when no ``segmap/``
-exists) before its ``groupBy`` — see ``query.searcher.Searcher._with_grp``.
+exists) before its grp exchange — see ``query.searcher.Searcher._with_grp``.
 The invariant "scoring groups partition doc space" therefore survives
 any number of compactions, for any mix of merged and unmerged terms.
 
@@ -44,7 +44,6 @@ import os
 import shutil
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import SparkSession, functions as F
 
 from glug_spark.index import codec
@@ -53,66 +52,8 @@ from glug_spark.index.pipeline import ENCODED_SCHEMA
 SEGMAP_DIR = "segmap"
 
 
-def _merge_term(pdf: pd.DataFrame) -> pd.DataFrame:
-    """All fragmented runs of one (bucket, term, grp) → one merged run."""
-    bucket = int(pdf["bucket"].iloc[0])
-    term = pdf["term"].iloc[0]
-    grp = int(pdf["grp"].iloc[0])
-
-    ids_l, tfs_l, dls_l, pos_l = [], [], [], []
-    for row in pdf.to_dict("records"):
-        ids, tfs, dls = codec.decode_segment(row)
-        plists = codec.decode_positions(row["positions"], tfs)
-        ids_l.append(ids)
-        tfs_l.append(tfs)
-        dls_l.append(dls)
-        pos_l.extend(plists)
-    ids = np.concatenate(ids_l)
-    tfs = np.concatenate(tfs_l)
-    dls = np.concatenate(dls_l)
-    order = np.argsort(ids, kind="stable")
-    pos_sorted = [pos_l[i] for i in order]
-    ids, tfs, dls = ids[order], tfs[order], dls[order]
-
-    pos_flat = (
-        np.concatenate(pos_sorted).astype(np.uint64)
-        if pos_sorted else np.zeros(0, np.uint64)
-    )
-    runs = codec.encode_runs(
-        np.zeros(len(ids), dtype=np.int64), ids, tfs, dls, pos_flat
-    )
-    assert len(runs) == 1
-    run = runs[0]
-    run.pop("run_start")
-    return pd.DataFrame([{
-        "bucket": bucket, "term": term, "segment": grp,
-        "cf_local": int(tfs.sum()),
-        # lineage/n_docs_batch are build-resume metadata; the manifest
-        # (not the postings) is resume's source of truth, so merged
-        # rows carry inert values
-        "lineage": None, "n_docs_batch": 0,
-        **run,
-    }])
-
-
-def _group_starts(rows: "pa.RecordBatch") -> np.ndarray:
-    """Row indices where a new (bucket, term, grp) group begins, for
-    rows sorted by those keys (term compared via per-batch dictionary
-    codes — only adjacency matters)."""
-    import pyarrow.compute as pc
-
-    n = rows.num_rows
-    bucket = rows.column("bucket").to_numpy(zero_copy_only=False)
-    grp = rows.column("grp").to_numpy(zero_copy_only=False)
-    tcode = pc.dictionary_encode(
-        rows.column("term")
-    ).indices.to_numpy(zero_copy_only=False)
-    change = np.ones(n, dtype=bool)
-    change[1:] = (
-        (bucket[1:] != bucket[:-1]) | (grp[1:] != grp[:-1])
-        | (tcode[1:] != tcode[:-1])
-    )
-    return np.flatnonzero(change)
+#: a merge group: every run of one term in one scoring group
+_MERGE_KEYS = ["bucket", "term", "grp"]
 
 
 def _merge_rows_arrow(rows: "pa.RecordBatch",
@@ -127,11 +68,11 @@ def _merge_rows_arrow(rows: "pa.RecordBatch",
     merged run re-encodes through ONE :func:`codec.encode_runs_table`
     call (term_codes = group index, so run/block structure restarts
     exactly where the per-group encoder restarted it — byte-identical,
-    differentially tested against :func:`_merge_term`)."""
+    differentially tested against the per-group reference merge)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    gstarts = _group_starts(rows)
+    gstarts = codec.run_starts(rows, _MERGE_KEYS)
     counts = rows.column("df_local").to_numpy(
         zero_copy_only=False
     ).astype(np.int64)
@@ -204,9 +145,8 @@ def _make_merge_kernel(
 ) -> "Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]":
     """mapInArrow worker: key-sorted encoded rows → one merged run per
     (bucket, term, grp) group. Arrow batches split at arbitrary row
-    boundaries, so the tail group of each batch (possibly incomplete)
-    is CARRIED into the next batch; group size is bounded by the
-    segment count, so the carry stays small. Replaces a
+    boundaries, so :func:`codec.complete_runs` carries each batch's
+    possibly incomplete tail group into the next. Replaces a
     groupBy.applyInPandas whose per-group pandas kernel paid ~0.5 ms
     of Python per group — ~800k fragmented groups made the 2M-doc
     compaction a 250 s Python loop."""
@@ -214,28 +154,8 @@ def _make_merge_kernel(
     def merge(
         batches: "Iterator[pa.RecordBatch]",
     ) -> "Iterator[pa.RecordBatch]":
-        import pyarrow as pa
-
-        carry: "pa.RecordBatch | None" = None
-        for batch in batches:
-            if carry is not None and carry.num_rows:
-                tbl = pa.concat_tables([
-                    pa.Table.from_batches([carry]),
-                    pa.Table.from_batches([batch]),
-                ]).combine_chunks()
-                batch = tbl.to_batches()[0]
-            carry = None
-            if not batch.num_rows:
-                continue
-            gstarts = _group_starts(batch)
-            if len(gstarts) == 1:
-                carry = batch  # one (possibly incomplete) group
-                continue
-            cut = int(gstarts[-1])
-            carry = batch.slice(cut)
-            yield _merge_rows_arrow(batch.slice(0, cut), names)
-        if carry is not None and carry.num_rows:
-            yield _merge_rows_arrow(carry, names)
+        for batch in codec.complete_runs(batches, _MERGE_KEYS):
+            yield _merge_rows_arrow(batch, names)
 
     return merge
 
@@ -448,14 +368,13 @@ def compact_index(
         .where((F.col("n_runs") > 1) & (F.col("df") / F.col("n_runs") < min_run))
         .select("bucket", "term", "grp")
     )
-    keys = ["bucket", "term", "grp"]
+    keys = _MERGE_KEYS
     fragmented = enc_g.join(F.broadcast(tail), keys, "left_semi")
     untouched = enc_g.join(F.broadcast(tail), keys, "left_anti")
 
     # one explicit-width shuffle (exempt from AQE coalescing — the
     # scorer-fan-out lesson) + in-partition key sort feeds the batch
-    # merge kernel; _merge_term (per-group pandas) is retained as its
-    # differential twin
+    # merge kernel
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     merged = (
         fragmented.repartition(n_shuffle, *keys)

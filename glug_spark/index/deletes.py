@@ -42,7 +42,6 @@ import os
 import shutil
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from glug_spark.index import codec
@@ -184,7 +183,7 @@ _FIRST_DOC_BYTES = 9
 def first_doc_col(gaps_col: "F.Column") -> "F.Column":
     """First doc_id of an encoded run, computed IN THE JVM from the
     run's leading varbyte (first gap = doc_id + 1) — the expression
-    twin of ``query.wand._first_doc_id``. Lets the purge prune rows
+    twin of ``codec.first_doc_ids``. Lets the purge prune rows
     entirely above the deleted range out of the Python rewrite path
     with a scan predicate instead of shipping them through Arrow."""
     def byte(i: int) -> "F.Column":
@@ -204,96 +203,11 @@ def first_doc_col(gaps_col: "F.Column") -> "F.Column":
     return expr - F.lit(1).cast("long")
 
 
-def _make_purge_rewriter_rowwise(
-    deleted: np.ndarray,
-) -> "Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]":
-    """The previous-generation per-row purge rewriter (decode → mask →
-    re-encode one posting row at a time) — kept as the differential
-    twin :func:`_make_purge_rewriter` is tested byte-identical
-    against."""
-    from glug_spark.query.wand import _first_doc_id
-
-    max_del = int(deleted[-1])
-    cols = [f.name for f in ENCODED_SCHEMA]
-
-    def rewrite(
-        batches: "Iterator[pd.DataFrame]",
-    ) -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            out_rows = []
-            for row in pdf.to_dict("records"):
-                # cheap in-kernel prune: the JVM predicate checked
-                # max(run) >= min(deleted); here check min(run) too
-                if _first_doc_id(row["doc_gaps"]) > max_del:
-                    out_rows.append(row)
-                    continue
-                ids, tfs, dls = codec.decode_segment(row)
-                keep = not_deleted_mask(deleted, ids)
-                if keep.all():
-                    out_rows.append(row)
-                    continue
-                if not keep.any():
-                    continue  # run fully deleted → drop the row
-                plists = codec.decode_positions(row["positions"], tfs)
-                keep_idx = np.flatnonzero(keep)
-                kept_pos = [plists[i] for i in keep_idx]
-                pos_flat = (
-                    np.concatenate(kept_pos).astype(np.uint64)
-                    if kept_pos and sum(len(p) for p in kept_pos)
-                    else np.zeros(0, np.uint64)
-                )
-                runs = codec.encode_runs(
-                    np.zeros(int(keep.sum()), dtype=np.int64),
-                    ids[keep], tfs[keep], dls[keep], pos_flat,
-                )
-                run = runs[0]
-                run.pop("run_start")
-                out_rows.append({
-                    "bucket": row["bucket"],
-                    "term": row["term"],
-                    "segment": row["segment"],
-                    "cf_local": int(tfs[keep].sum()),
-                    "lineage": row["lineage"],
-                    "n_docs_batch": row["n_docs_batch"],
-                    **run,
-                })
-            yield pd.DataFrame(out_rows, columns=cols)
-
-    return rewrite
-
-
-#: shared zero-copy Arrow/varbyte batch helpers live in the codec
-#: (compaction's batch merge kernel uses the same primitives)
-_segmented_cumsum_abs = codec.segmented_abs_decode
-_binary_stream = codec.binary_stream
-
-
 def _gather_rows(stream: np.ndarray, offs: np.ndarray,
                  idx: np.ndarray) -> np.ndarray:
     """Concatenation of the selected rows' byte slices of a blob
     stream, fully vectorized (no per-row Python)."""
     return codec.gather_segments(stream, offs[idx], offs[idx + 1] - offs[idx])
-
-
-def _first_docs_vec(stream: np.ndarray, offs: np.ndarray,
-                    n_rows: int) -> np.ndarray:
-    """First doc_id of every encoded run in the batch — the leading
-    varbyte of each row's gap blob (first gap = doc_id + 1), decoded
-    for ALL rows at once: one masked pass per byte position, ≤ 10
-    passes for any int64. The NumPy twin of the retired JVM
-    ``first_doc_col`` WHEN-cascade."""
-    val = np.zeros(n_rows, dtype=np.uint64)
-    ptr = offs[:-1].copy()
-    active = np.ones(n_rows, dtype=bool)
-    shift = np.uint64(0)
-    while active.any():
-        idx = np.flatnonzero(active)
-        b = stream[ptr[idx]].astype(np.uint64)
-        val[idx] |= (b & np.uint64(0x7F)) << shift
-        ptr[idx] += 1
-        active[idx] = (b & np.uint64(0x80)) != 0
-        shift += np.uint64(7)
-    return val.astype(np.int64) - 1
 
 
 def _make_purge_rewriter(
@@ -341,17 +255,13 @@ def _make_purge_rewriter(
             # (A compacted index's runs span narrow doc-group windows,
             # so at takedown-shaped contiguous deletes ~98% of rows
             # skip the gap decode entirely.)
-            bl = batch.column("block_last")
-            bo = np.frombuffer(bl.buffers()[1], dtype=np.int32)[
-                bl.offset : bl.offset + n_rows + 1
-            ].astype(np.int64)
-            bv = bl.values.to_numpy(zero_copy_only=False)
+            bv, bo = codec.list_values(batch.column("block_last"))
             last = bv[bo[1:] - 1]
             if last.max() < min_del:
                 yield batch
                 continue
-            gaps_stream, offs_g = _binary_stream(batch.column("doc_gaps"))
-            first = _first_docs_vec(gaps_stream, offs_g, n_rows)
+            gaps_stream, offs_g = codec.binary_stream(batch.column("doc_gaps"))
+            first = codec.first_doc_ids(gaps_stream, offs_g[:-1])
             at = np.searchsorted(deleted, first)
             cand = (at < len(deleted)) & (
                 deleted[np.minimum(at, len(deleted) - 1)] <= last
@@ -364,7 +274,7 @@ def _make_purge_rewriter(
             ).astype(np.int64)
             cidx = np.flatnonzero(cand)
             c_counts = counts[cidx]
-            ids = _segmented_cumsum_abs(
+            ids = codec.segmented_abs_decode(
                 codec.varbyte_decode(_gather_rows(gaps_stream, offs_g, cidx)),
                 c_counts,
             ).astype(np.int64)
@@ -387,16 +297,16 @@ def _make_purge_rewriter(
             # decode tf/dl/position blobs for REWRITE rows only
             ridx = cidx[c_rewrite]
             r_counts = counts[ridx]
-            tfs_stream, offs_t = _binary_stream(batch.column("tfs"))
-            dls_stream, offs_d = _binary_stream(batch.column("dls"))
-            pos_stream, offs_p = _binary_stream(batch.column("positions"))
+            tfs_stream, offs_t = codec.binary_stream(batch.column("tfs"))
+            dls_stream, offs_d = codec.binary_stream(batch.column("dls"))
+            pos_stream, offs_p = codec.binary_stream(batch.column("positions"))
             tfs = codec.varbyte_decode(
                 _gather_rows(tfs_stream, offs_t, ridx)
             ).astype(np.int64)
             dls = codec.varbyte_decode(
                 _gather_rows(dls_stream, offs_d, ridx)
             ).astype(np.int64)
-            abs_pos = _segmented_cumsum_abs(
+            abs_pos = codec.segmented_abs_decode(
                 codec.varbyte_decode(_gather_rows(pos_stream, offs_p, ridx)),
                 tfs,
             )
@@ -432,8 +342,10 @@ def _make_purge_rewriter(
                 "dl_offsets": pa.array(runs["dl_offsets"], type=lst),
                 "pos_offsets": pa.array(runs["pos_offsets"], type=lst),
             }
+            # built blobs are plain binary: match the input's Arrow types
+            # (large_binary under arrow.useLargeVarTypes)
             arrays = [
-                built[f.name] if f.name in built
+                built[f.name].cast(f.type) if f.name in built
                 else pc.take(batch.column(f.name), src_idx)
                 for f in batch.schema
             ]

@@ -17,8 +17,9 @@ the same plan:
    scan; glob members expand against term_stats JVM-side, never
    collected to the driver.
 3. posting rows are exchanged on their SCORING GROUP
-   (:func:`scorer_partitions`) and ``applyInPandas`` runs a
-   :mod:`glug_spark.query.wand` kernel per doc-space group (groups
+   (:func:`scorer_partitions`) and a grouped Arrow map runs a
+   :mod:`glug_spark.query.wand` kernel straight on each group's Arrow
+   rows, once per query on a batched plan (:func:`_kernel_node`; groups
    partition doc space — also after compaction, via the ``segmap``
    segment→grp mapping — so per-group top-k sets cover the global
    top-k exactly).
@@ -42,9 +43,9 @@ import operator
 from typing import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from glug_spark.index import codec
 from glug_spark.index.deletes import not_deleted_mask, resolve_deleted
 from glug_spark.index.pipeline import (
     checked_n_buckets,
@@ -68,29 +69,73 @@ _SCORING_COLS = [
 ]
 
 Members = list[tuple[str, str]]
-Kernel = Callable[[pd.DataFrame], pd.DataFrame]
+#: a wand kernel: one run's Arrow rows -> (doc_id, raw_score) arrays
+Kernel = Callable[[object], "tuple[np.ndarray, np.ndarray]"]
 
 
 def scorer_partitions(rows: DataFrame) -> DataFrame:
-    """EXPLICIT grp-hash exchange feeding every ``groupBy("grp")``
-    scorer: a query's posting rows are tiny (KBs), so AQE's partition
-    coalescing folds the scorer's shuffle into ONE post-shuffle
-    partition and every per-group Arrow kernel runs sequentially on a
-    single core — measured 9.5 s for the 32-query batch at 50 groups
-    (1600 kernel invocations × ~6 ms, one task). A user-specified
+    """EXPLICIT grp-hash exchange feeding every query kernel: a query's
+    posting rows are tiny (KBs), so AQE's partition coalescing would
+    fold an ordinary shuffle into ONE post-shuffle partition and every
+    per-group Arrow kernel would run sequentially on a single core —
+    measured 9.5 s for the 32-query batch at 50 groups (1600 kernel
+    invocations × ~6 ms, one task). A user-specified
     ``repartition(n, "grp")`` is exempt from AQE coalescing and
-    satisfies the grouped-map clustering requirement, so it is the ONLY
-    exchange on the path and the kernels fan out across the cluster.
-    ``n`` = the session's shuffle parallelism (cluster-sized knob, not
-    a local constant)."""
+    co-locates each scoring group's rows, so it is the ONLY exchange on
+    the path and the kernels fan out across the cluster. ``n`` = the
+    session's shuffle parallelism (cluster-sized knob, not a local
+    constant)."""
     spark = rows.sparkSession
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return rows.repartition(n, "grp")
 
 
+def _kernel_node(rows: DataFrame, keys: list[str],
+                 per_run: Callable[[object], tuple], schema: str) -> DataFrame:
+    """The kernel node of every index query: the grp exchange
+    (:func:`scorer_partitions`), then a grouped Arrow map
+    (``groupBy("grp").applyInArrow``). Each scoring group's rows arrive
+    as one Arrow table and are sorted on (``keys``, term), so each run
+    of equal ``keys`` — the group, or one query's rows of it on a
+    batched plan — is contiguous, and ``per_run`` runs on each run's
+    rows. ``per_run`` returns the output's value columns as NumPy
+    arrays; the output's leading key columns (``keys`` other than grp)
+    repeat the run's key. ``per_run`` ships to the Python workers: it
+    must close over plain values, never the Searcher.
+
+    A grouped map rather than ``mapInArrow``: the exchange is
+    shuffle-partitions wide while a query touches a few groups, and
+    Spark skips the Python round trip of an empty partition only for
+    grouped maps — ``mapInArrow`` measured ~1 s slower per point query
+    (8 partitions, 4 groups, local[2])."""
+    carried = [k for k in keys if k != "grp"]
+    order = [(k, "ascending") for k in keys + ["term"]]
+    names = [f.split()[0] for f in schema.split(",")]
+
+    def kernel(table: "pa.Table") -> "pa.Table":
+        import pyarrow as pa
+
+        batch = table.sort_by(order).combine_chunks().to_batches()[0]
+        starts = codec.run_starts(batch, carried)
+        ends = np.append(starts[1:], batch.num_rows)
+        outs = [per_run(batch.slice(s, e - s)) for s, e in zip(starts, ends)]
+        at = np.repeat(starts, [len(o[0]) for o in outs])
+        # grouped maps check the output against plain Arrow types, even
+        # when arrow.useLargeVarTypes delivers large_string keys
+        arrays = [batch.column(k).take(at).cast(pa.string())
+                  for k in carried] + [
+            pa.array(np.concatenate(col)) for col in zip(*outs)
+        ]
+        return pa.Table.from_arrays(arrays, names=names)
+
+    return scorer_partitions(rows).groupBy("grp").applyInArrow(
+        kernel, schema=schema
+    )
+
+
 def _ranked_top(rows: DataFrame, scorer: Kernel, k: int) -> DataFrame:
-    """One grp exchange, the kernel ``scorer`` per scoring group, then
-    the global top-k + rank over its K-BOUNDED results, in ONE job.
+    """The kernel node running ``scorer`` per scoring group, then the
+    global top-k + rank over its K-BOUNDED results, in ONE job.
 
     Every scoring group emits ≤k rows, so the single-partition window
     input is n_groups × k NARROW rows — the same volume a TakeOrdered
@@ -101,9 +146,7 @@ def _ranked_top(rows: DataFrame, scorer: Kernel, k: int) -> DataFrame:
     sf0.1 local[32]. Full-scan paths (per-doc rows NOT k-bounded) keep
     TakeOrderedAndProject — a global window there would sort the corpus.
     """
-    per_group = scorer_partitions(rows).groupBy("grp").applyInPandas(
-        lambda pdf: scorer(pdf), schema=_SCORE_SCHEMA
-    )
+    per_group = _kernel_node(rows, ["grp"], scorer, _SCORE_SCHEMA)
     w = Window.orderBy(F.desc("raw_score"), F.asc("doc_id"))
     return (
         per_group.withColumn("rank", F.row_number().over(w))
@@ -115,26 +158,17 @@ def _ranked_top(rows: DataFrame, scorer: Kernel, k: int) -> DataFrame:
 def _ranked_many(rows: DataFrame, scorer_for: Callable[[str], Kernel],
                  k: int) -> DataFrame:
     """Batched tail shared by :meth:`Searcher.topk_many` and
-    :meth:`Searcher.search_many`: one grp exchange, the kernel
+    :meth:`Searcher.search_many`: the kernel node running
     ``scorer_for(query_id)`` over each query's rows of a group, then a
     per-query rank window → (query_id, rank, doc_id, score).
     ``scorer_for`` ships to the Python workers: it must close over
     plain values, never the Searcher."""
 
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        outs = []
-        for qid, qpdf in pdf.groupby("query_id", sort=False):
-            res = scorer_for(qid)(qpdf)
-            res.insert(0, "query_id", qid)
-            outs.append(res)
-        return pd.concat(outs) if outs else pd.DataFrame(
-            {"query_id": [], "doc_id": [], "raw_score": []}
-        ).astype({"query_id": "object", "doc_id": "int64",
-                  "raw_score": "float64"})
+    def score_run(run: object) -> tuple:
+        return scorer_for(run.column("query_id")[0].as_py())(run)
 
-    per_group = scorer_partitions(rows).groupBy("grp").applyInPandas(
-        score_group, schema=_QUERY_SCORE_SCHEMA
-    )
+    per_group = _kernel_node(rows, ["grp", "query_id"], score_run,
+                             _QUERY_SCORE_SCHEMA)
     w = Window.partitionBy("query_id").orderBy(
         F.desc("raw_score"), F.asc("doc_id")
     )
@@ -286,14 +320,14 @@ class Searcher:
     def _warm(self) -> None:
         """Front-load the first query's fixed costs at open time (the
         service shape pays them once per handle, not on a user query):
-        spin up the Arrow Python workers with a one-row groupBy kernel
-        job, and touch the postings parquet footers via a metadata-only
+        spin up the Arrow Python workers with a one-row grouped Arrow
+        map, the queries' kernel node, and touch the postings parquet footers via a metadata-only
         count (column-pruned count-star — no posting blob is read, and
         the persisted cache is NOT materialized)."""
         (
             self.spark.createDataFrame([(1,)], "x int")
             .groupBy("x")
-            .applyInPandas(lambda p: p, schema="x int")
+            .applyInArrow(lambda table: table, schema="x int")
             .count()
         )
         self.spark.read.parquet(f"{self.index_dir}/postings").count()
@@ -353,7 +387,7 @@ class Searcher:
         )
 
     def _match_docs(self, terms: list[str],
-                    hits: Callable[[pd.DataFrame], np.ndarray]) -> DataFrame:
+                    hits: Callable[[object], np.ndarray]) -> DataFrame:
         """doc_id-sorted matches of a position query: ``hits`` maps one
         scoring group's posting rows to its matching doc ids (it ships
         to the workers, so it closes over plain values only); tombstoned
@@ -363,15 +397,13 @@ class Searcher:
         )
         deleted = self.deleted
 
-        def match_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            found = hits(pdf)
-            found = found[not_deleted_mask(resolve_deleted(deleted), found)]
-            return pd.DataFrame({"doc_id": found}).astype({"doc_id": "int64"})
+        def match_segment(run: object) -> tuple:
+            found = hits(run)
+            return (found[not_deleted_mask(resolve_deleted(deleted), found)],)
 
-        matched = scorer_partitions(rows).groupBy("grp").applyInPandas(
-            match_segment, schema="doc_id long"
+        return _sorted_docs(
+            _kernel_node(rows, ["grp"], match_segment, "doc_id long")
         )
-        return _sorted_docs(matched)
 
     def attach_urls(self, results: DataFrame,
                     snippet_terms: list[str] | None = None) -> DataFrame:
@@ -440,7 +472,7 @@ class Searcher:
             .join(F.broadcast(stats), "term")
         )
         out = _ranked_top(rows, wand.make_segment_scorer(
-            uniq, None, self.avgdl, k, conjunctive, deleted=self.deleted
+            uniq, self.avgdl, k, conjunctive, deleted=self.deleted
         ), k)
         if with_urls or with_snippets:
             return self.attach_urls(
@@ -452,7 +484,7 @@ class Searcher:
         """MANY disjunctive top-k queries in ONE Spark job:
         (query_id, rank, doc_id, score).
 
-        The per-query latency floor at local[*] is the Arrow groupBy
+        The per-query latency floor at local[*] is the Arrow kernel
         round trip (~0.3 s regardless of data); batching amortizes it —
         the rows of each query's terms are tagged with query_id via a
         broadcast join (a term shared by multiple queries fans out one
@@ -478,7 +510,7 @@ class Searcher:
         terms_by_query = {qid: list(dict.fromkeys(t)) for qid, t in queries.items()}
         avgdl, deleted = self.avgdl, self.deleted
         return _ranked_many(rows, lambda qid: wand.make_segment_scorer(
-            terms_by_query[qid], None, avgdl, k, False, deleted=deleted,
+            terms_by_query[qid], avgdl, k, False, deleted=deleted,
         ), k)
 
     def composed_topk(self, groups: list[Members],
@@ -594,7 +626,7 @@ class Searcher:
         identical to query.bm25.phrase_docs over the same corpus."""
         words = list(phrase)
         return self._match_docs(
-            words, lambda pdf: wand._phrase_hits_segment(pdf, words)
+            words, lambda run: wand.phrase_hits(run, words)
         )
 
     def near_docs(self, term_a: str, term_b: str, slop: int = 3,
@@ -604,6 +636,5 @@ class Searcher:
         over the same corpus."""
         return self._match_docs(
             [term_a, term_b],
-            lambda pdf: wand._near_hits_segment(pdf, term_a, term_b, slop,
-                                                ordered),
+            lambda run: wand.near_hits(run, term_a, term_b, slop, ordered),
         )

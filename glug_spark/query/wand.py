@@ -1,16 +1,23 @@
 """Scoring and matching kernels for the index query path.
 
-Pure NumPy/pandas: every function here runs inside a Python worker on
-the posting rows of ONE doc-space scoring group, as delivered by the
-``applyInPandas`` plans that :class:`glug_spark.query.searcher.Searcher`
-builds. Spark planning (bucket pruning, stats joins, the group
-exchange, the final rank merge) lives in the Searcher.
+Pure NumPy over Arrow: every kernel here runs inside a Python worker on
+the posting rows of ONE doc-space scoring group (one query's rows of
+it, on a batched plan), as the grouped Arrow kernel node of
+:class:`glug_spark.query.searcher.Searcher` delivers them, wrapped as a
+:class:`PostingRun`. Spark planning (bucket pruning, stats joins, the
+group exchange, the final rank merge) lives in the Searcher.
+
+Decode is batched: each kernel step names the terms it needs and,
+optionally, the sorted doc ids they must cover; the run selects the
+matching 128-posting blocks of ALL those terms' rows at once and
+decodes them with one varbyte pass per column
+(:class:`glug_spark.index.codec.PostingBlocks`).
 
 Inside a group (vectorized):
 
 - conjunctive: block-level skip — only blocks whose doc ranges can
-  intersect every term's covered range are decoded
-  (``codec.decode_blocks``), then exact id intersection, full scoring.
+  intersect every term's covered range are decoded, then exact id
+  intersection, full scoring.
 - disjunctive: MaxScore — score the highest-upper-bound term's docs
   exactly to seed the threshold θ; terms whose upper-bound suffix sum
   < θ become non-essential; only docs present in essential lists can
@@ -22,9 +29,9 @@ Inside a group (vectorized):
   per-group top-k — the returned top-k is exact under filtering (no
   heuristic candidate pool; a selective filter can never starve the
   result).
-- phrase / NEAR matching (``_phrase_hits_segment``,
-  ``_near_hits_segment``): doc-id intersection first, then
-  block-selective position decode over the candidates only.
+- phrase / NEAR matching (:func:`phrase_hits`, :func:`near_hits`):
+  doc-id intersection first, then block-selective position decode over
+  the candidates only.
 
 Scores are the same double math as the full-scan reference scorer
 (query.bm25) — rank-identical output is asserted by tests, mirroring
@@ -34,11 +41,13 @@ the reference's differential parity strategy.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from glug_spark.index import codec
 from glug_spark.index.build import K1, B
 from glug_spark.index.deletes import not_deleted_mask, resolve_deleted
+
+#: a kernel's per-group result: (doc_id int64, raw_score float64)
+Scored = tuple[np.ndarray, np.ndarray]
 
 
 def _contribution(tfs: np.ndarray, dls: np.ndarray, idf: float, avgdl: float) -> np.ndarray:
@@ -51,69 +60,93 @@ def _upper_bound(max_tf: float, idf: float) -> float:
     return idf * (max_tf * (K1 + 1.0)) / (max_tf + K1 * (1.0 - B))
 
 
-def _sorted_lists(parts: tuple[list, list, list]) -> dict:
-    ids_l, tfs_l, dls_l = parts
-    if not ids_l:
-        z = np.zeros(0, np.int64)
-        return {"ids": z, "tfs": z.copy(), "dls": z.copy()}
-    ids = np.concatenate(ids_l)
-    order = np.argsort(ids, kind="stable")
-    return {
-        "ids": ids[order],
-        "tfs": np.concatenate(tfs_l)[order],
-        "dls": np.concatenate(dls_l)[order],
-    }
+class PostingRun:
+    """The posting rows of one scoring group as NumPy views of an Arrow
+    record batch: per-term role columns, block-max metadata, and
+    batched block-selective decode of any subset of the terms."""
 
+    def __init__(self, batch: "object", positions: bool = False) -> None:
+        import pyarrow.compute as pc
 
-def _decode_full(grp: pd.DataFrame) -> dict:
-    """All rows of one term fully decoded, doc_id-sorted."""
-    ids_l, tfs_l, dls_l = [], [], []
-    for gaps, tfb, dlb in zip(grp["doc_gaps"], grp["tfs"], grp["dls"]):
-        ids_l.append(codec.delta_decode(codec.varbyte_decode(gaps)).astype(np.int64))
-        tfs_l.append(codec.varbyte_decode(tfb).astype(np.int64))
-        dls_l.append(codec.varbyte_decode(dlb).astype(np.int64))
-    return _sorted_lists((ids_l, tfs_l, dls_l))
+        enc = pc.dictionary_encode(batch.column("term"))
+        #: the run's terms, in order of first appearance
+        self.terms: list[str] = enc.dictionary.to_pylist()
+        self._code = {t: i for i, t in enumerate(self.terms)}
+        row_term = enc.indices.to_numpy(zero_copy_only=False)
+        self._first_row = np.unique(row_term, return_index=True)[1]
+        self._batch = batch
+        self.blocks = codec.PostingBlocks(batch, positions)
+        self.block_term = row_term[self.blocks.row]
 
+    def has(self, term: str) -> bool:
+        return term in self._code
 
-def _decode_covering(grp: pd.DataFrame, targets: np.ndarray) -> dict:
-    """Block-selective decode: only the blocks that can contain a target
-    doc_id are touched (the block-max skip — a frequent term's long list
-    is read a few 128-posting blocks at a time, not end to end)."""
-    if not len(targets):
-        return _sorted_lists(([], [], []))
-    ids_l, tfs_l, dls_l = [], [], []
-    for row in grp.to_dict("records"):
-        block_last = np.asarray(row["block_last"], dtype=np.int64)
-        if not len(block_last):
-            continue
-        blocks = np.unique(np.searchsorted(block_last, targets, side="left"))
-        blocks = blocks[blocks < len(block_last)]
-        if not len(blocks):
-            continue
-        ids, tfs, dls = codec.decode_blocks(row, blocks)
-        ids_l.append(ids)
-        tfs_l.append(tfs)
-        dls_l.append(dls)
-    return _sorted_lists((ids_l, tfs_l, dls_l))
+    def meta(self, col: str) -> dict:
+        """Per-term value of a role column (``idf``, ``gmask``,
+        ``is_neg``): constant across a term's rows, read from its first."""
+        vals = self._batch.column(col).take(self._first_row).to_pylist()
+        return dict(zip(self.terms, vals))
 
+    def max_tf(self) -> dict[str, int]:
+        """Per-term max tf over every block — metadata only, no decode."""
+        m = np.zeros(len(self.terms), dtype=np.int64)
+        np.maximum.at(m, self.block_term, self.blocks.max_tf)
+        return dict(zip(self.terms, m.tolist()))
 
-def _term_max_tf(grp: pd.DataFrame) -> int:
-    maxtf = 0
-    for bmt in grp["block_max_tf"]:
-        if len(bmt):
-            maxtf = max(maxtf, int(max(bmt)))
-    return maxtf
+    def decode(self, terms: list[str], targets: np.ndarray | None = None,
+               positions: bool = False) -> dict[str, dict]:
+        """doc_id-sorted decoded lists of ``terms``: all their blocks, or
+        with ``targets`` (sorted doc ids) only the blocks that can hold
+        one of them — a frequent term's long list is read a few
+        128-posting blocks at a time, not end to end. Every returned
+        posting is real, so membership tests on a covering list are
+        exact for the targets. ``positions`` adds the flat ``pos``
+        array and each posting's ``pstart`` into it."""
+        if not terms:
+            return {}
+        codes = [self._code.get(t, -1) for t in terms]
+        blocks = np.flatnonzero(np.isin(self.block_term, codes))
+        if targets is not None:
+            blocks = self.blocks.covering(blocks, targets)
+        return self._split(blocks, terms, codes, positions)
 
+    def conjunctive(self, terms: list[str]) -> dict[str, dict] | None:
+        """Block-skip decode for AND queries (None when a term has no
+        posting here): a term's block is decoded only if its doc range
+        can intersect every other term's covered range.
 
-def _first_doc_id(doc_gaps: bytes) -> int:
-    """First doc_id of a run = first varbyte value − 1 (no full decode)."""
-    val, shift = 0, 0
-    for byte in doc_gaps:
-        val |= (byte & 0x7F) << shift
-        if not byte & 0x80:
-            break
-        shift += 7
-    return val - 1
+        The candidate doc range is [lo, hi] where lo = max over terms of
+        the term's smallest covered doc_id (true first id, decoded from
+        each run's first varbyte — no sentinel) and hi = min over terms
+        of the term's largest covered doc_id. Blocks outside [lo, hi]
+        are skipped without touching their bytes."""
+        if not all(self.has(t) for t in terms):
+            return None
+        codes = [self._code[t] for t in terms]
+        first, last = self.blocks.first(), self.blocks.last
+        lo = max(int(first[self.block_term == c].min()) for c in codes)
+        hi = min(int(last[self.block_term == c].max()) for c in codes)
+        blocks = np.flatnonzero(
+            np.isin(self.block_term, codes) & (last >= lo) & (first <= hi)
+        )
+        return self._split(blocks, terms, codes, False)
+
+    def _split(self, blocks: np.ndarray, terms: list[str], codes: list[int],
+               positions: bool) -> dict[str, dict]:
+        d = self.blocks.decode(blocks, positions)
+        tcode = np.repeat(self.block_term[blocks], self.blocks.count[blocks])
+        order = np.lexsort((d["ids"], tcode))
+        tcode = tcode[order]
+        cols = {c: d[c][order] for c in ("ids", "tfs", "dls")}
+        if positions:
+            cols["pstart"] = (np.cumsum(d["tfs"]) - d["tfs"])[order]
+        bounds = np.searchsorted(tcode, [[c, c + 1] for c in codes])
+        out = {}
+        for t, (lo, hi) in zip(terms, bounds):
+            out[t] = {c: v[lo:hi] for c, v in cols.items()}
+            if positions:
+                out[t]["pos"] = d["pos"]
+        return out
 
 
 def _member_mask(lst: dict, cand: np.ndarray) -> np.ndarray:
@@ -139,75 +172,16 @@ def _score_candidates(cand: np.ndarray, lists: dict[str, dict],
     return scores
 
 
-def _conjunctive_blocks(rows_by_term: pd.DataFrame, terms: list[str]) -> dict[str, dict]:
-    """Block-skip decode for AND queries: a term's block is decoded only
-    if its doc range can intersect every other term's covered range.
-
-    The candidate doc range is [lo, hi] where lo = max over terms of the
-    term's smallest covered doc_id (true first id, decoded from the
-    run's first varbyte — no sentinel) and hi = min over terms of the
-    term's largest covered doc_id. Blocks outside [lo, hi] are skipped
-    without touching their bytes.
-    """
-    metas = {}
-    for term, grp in rows_by_term.groupby("term", sort=False):
-        # (row, block_first_lower_bound, block_last) per block across runs
-        entries = []
-        for row in grp.to_dict("records"):
-            last = np.asarray(row["block_last"], dtype=np.int64)
-            if not len(last):
-                continue
-            first = np.empty_like(last)
-            first[0] = _first_doc_id(row["doc_gaps"])
-            first[1:] = last[:-1] + 1
-            entries.append((row, first, last))
-        metas[term] = entries
-
-    term_mins, term_maxs = [], []
-    for entries in metas.values():
-        if entries:
-            term_mins.append(min(int(e[1][0]) for e in entries))
-            term_maxs.append(max(int(e[2][-1]) for e in entries))
-    lo = max(term_mins, default=0)
-    hi = min(term_maxs, default=-1)
-
-    decoded: dict[str, dict] = {}
-    for term, entries in metas.items():
-        ids_l, tfs_l, dls_l, maxtf = [], [], [], 0
-        for row, first, last in entries:
-            keep = np.flatnonzero((last >= lo) & (first <= hi))
-            if not len(keep):
-                continue
-            ids, tfs, dls = codec.decode_blocks(row, keep)
-            ids_l.append(ids)
-            tfs_l.append(tfs)
-            dls_l.append(dls)
-            maxtf = max(maxtf, int(max(row["block_max_tf"])))
-        if not ids_l:
-            decoded[term] = {"ids": np.zeros(0, np.int64),
-                             "tfs": np.zeros(0, np.int64),
-                             "dls": np.zeros(0, np.int64), "max_tf": 0}
-            continue
-        ids = np.concatenate(ids_l)
-        order = np.argsort(ids, kind="stable")
-        decoded[term] = {"ids": ids[order],
-                         "tfs": np.concatenate(tfs_l)[order],
-                         "dls": np.concatenate(dls_l)[order],
-                         "max_tf": maxtf}
-    return decoded
-
-
-def _empty_scores() -> pd.DataFrame:
-    return pd.DataFrame({"doc_id": [], "raw_score": []}).astype(
-        {"doc_id": "int64", "raw_score": "float64"}
-    )
+def _empty() -> Scored:
+    return np.zeros(0, np.int64), np.zeros(0, np.float64)
 
 
 def _maxscore_pass(
-    groups: dict, idfs: dict[str, float], avgdl: float, k: int,
-    passes_filter: "Callable[[np.ndarray], np.ndarray] | None" = None,
+    run: PostingRun, terms: list[str], idfs: dict[str, float], avgdl: float,
+    k: int,
+    passes_filter: "Callable[[np.ndarray, dict], np.ndarray] | None" = None,
     predecoded: dict | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
+) -> Scored:
     """Shared MaxScore kernel: exact top-k candidates + scores for one
     doc-space group, with an optional doc-level filter applied BEFORE
     θ-seeding and before the local top-k (keeps filtered top-k exact:
@@ -221,21 +195,17 @@ def _maxscore_pass(
     Returns (cand, scores) filtered, unsorted.
     """
     predecoded = predecoded or {}
-    ubs = {
-        t: _upper_bound(_term_max_tf(g), idfs[t])
-        for t, g in groups.items()  # metadata only, no blob decode
-    }
-    by_ub = sorted(groups, key=lambda t: -ubs[t])
+    max_tf = run.max_tf()  # metadata only, no blob decode
+    ubs = {t: _upper_bound(max_tf[t], idfs[t]) for t in terms}
+    by_ub = sorted(terms, key=lambda t: -ubs[t])
 
     # pass 1: fully decode ONLY the top-ub term; its docs seed θ.
     lists = dict(predecoded)
     top = by_ub[0]
     if top not in lists:
-        lists[top] = _decode_full(groups[top])
+        lists.update(run.decode([top]))
     seed = lists[top]["ids"]
-    for t in by_ub[1:]:
-        if t not in lists:
-            lists[t] = _decode_covering(groups[t], seed)
+    lists.update(run.decode([t for t in by_ub[1:] if t not in lists], seed))
     seed_scores = _score_candidates(seed, lists, idfs, avgdl)
     if passes_filter is not None:
         ok = passes_filter(seed, lists)
@@ -259,13 +229,13 @@ def _maxscore_pass(
 
     # essential terms (candidate generators) need their full lists;
     # non-essential terms only need blocks covering the candidates
-    for t in essential:
-        if t != top and t not in predecoded:
-            lists[t] = _decode_full(groups[t])
+    lists.update(run.decode(
+        [t for t in essential if t != top and t not in predecoded]
+    ))
     cand = np.unique(np.concatenate([lists[t]["ids"] for t in essential]))
-    for t in by_ub:
-        if t not in essential and t not in predecoded:
-            lists[t] = _decode_covering(groups[t], cand)
+    lists.update(run.decode(
+        [t for t in by_ub if t not in essential and t not in predecoded], cand
+    ))
     if passes_filter is not None:
         # refresh non-essential coverage for the wider candidate set,
         # then keep only filter-passing candidates
@@ -275,63 +245,73 @@ def _maxscore_pass(
     return cand, scores
 
 
-def _local_topk(cand: np.ndarray, scores: np.ndarray, k: int) -> pd.DataFrame:
+def _local_topk(cand: np.ndarray, scores: np.ndarray, k: int) -> Scored:
     # group-local top-k in the GLOBAL order (score desc, doc_id asc):
     # the global top-k takes at most k rows from this group, and they
     # are exactly the group's first k under the same order.
     if len(cand) > k:
         order = np.lexsort((cand, -scores))[:k]
         cand, scores = cand[order], scores[order]
-    return pd.DataFrame({"doc_id": cand.astype("int64"),
-                         "raw_score": scores.astype("float64")})
+    return cand.astype(np.int64), scores.astype(np.float64)
 
 
 def make_segment_scorer(
-    terms: list[str], idfs: dict[str, float] | None,
-    avgdl: float, k: int, conjunctive: bool,
+    terms: list[str], avgdl: float, k: int, conjunctive: bool,
     deleted: "object | None" = None,
-) -> "Callable[[pd.DataFrame], pd.DataFrame]":
-    """Plain top-k scorer for one doc-space group. ``idfs=None`` reads
-    idf from an ``idf`` row column instead (stats delivered by a
-    broadcast join — saves the separate stats-lookup job). ``deleted``
-    is the sorted tombstone set (merge-on-read) — a plain array or a
-    Spark Broadcast of it (see deletes.resolve_deleted): filtered
-    BEFORE θ-seeding and top-k selection, so a deleted doc can neither
-    appear nor shadow a live doc out of the exact top-k."""
+) -> "Callable[[object], Scored]":
+    """Plain top-k scorer for one doc-space group's Arrow rows; idf is
+    read from the rows' ``idf`` column (stats delivered by a broadcast
+    join — saves a separate stats-lookup job). ``deleted`` is the
+    sorted tombstone set (merge-on-read) — a plain array or a Spark
+    Broadcast of it (see deletes.resolve_deleted): filtered BEFORE
+    θ-seeding and top-k selection, so a deleted doc can neither appear
+    nor shadow a live doc out of the exact top-k."""
     uniq_terms = list(dict.fromkeys(terms))
-    static_idfs = idfs
 
-    def score_segment(pdf: pd.DataFrame) -> pd.DataFrame:
+    def score_segment(batch: "object") -> Scored:
+        run = PostingRun(batch)
         tombs = resolve_deleted(deleted)
-        tomb_filter = (
-            None if tombs is None
-            else (lambda cand, lists: not_deleted_mask(tombs, cand))
-        )
-        idfs = static_idfs
-        if idfs is None:
-            meta = pdf.drop_duplicates("term").set_index("term")
-            idfs = meta["idf"].astype(float).to_dict()
-        if conjunctive:
-            lists = _conjunctive_blocks(pdf, uniq_terms)
-            present = [lists[t] for t in uniq_terms if t in lists]
-            if len(present) < len(uniq_terms) or any(
-                len(p["ids"]) == 0 for p in present
-            ):
-                return _empty_scores()
-            cand = present[0]["ids"]
-            for p in present[1:]:
-                cand = cand[np.isin(cand, p["ids"], assume_unique=True)]
-            if tombs is not None:
-                cand = cand[not_deleted_mask(tombs, cand)]
-            scores = _score_candidates(cand, lists, idfs, avgdl)
-        else:
-            groups = {t: g for t, g in pdf.groupby("term", sort=False)}
-            cand, scores = _maxscore_pass(
-                groups, idfs, avgdl, k, passes_filter=tomb_filter
+        idfs = run.meta("idf")
+        if not conjunctive:
+            tomb_filter = (
+                None if tombs is None
+                else (lambda cand, lists: not_deleted_mask(tombs, cand))
             )
+            cand, scores = _maxscore_pass(
+                run, run.terms, idfs, avgdl, k, passes_filter=tomb_filter
+            )
+            return _local_topk(cand, scores, k)
+        lists = run.conjunctive(uniq_terms)
+        if lists is None or any(not len(p["ids"]) for p in lists.values()):
+            return _empty()
+        present = list(lists.values())
+        cand = present[0]["ids"]
+        for p in present[1:]:
+            cand = cand[np.isin(cand, p["ids"], assume_unique=True)]
+        if tombs is not None:
+            cand = cand[not_deleted_mask(tombs, cand)]
+        scores = _score_candidates(cand, lists, idfs, avgdl)
         return _local_topk(cand, scores, k)
 
     return score_segment
+
+
+def _candidates(lists: dict[str, dict], words: list[str]) -> np.ndarray:
+    """Sorted doc ids present in every word's decoded list."""
+    cand = lists[words[0]]["ids"]
+    for w in words[1:]:
+        cand = cand[np.isin(cand, lists[w]["ids"], assume_unique=True)]
+    return cand
+
+
+def _positions(lst: dict, cand: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(dense candidate index, position) per position of each ``cand``
+    doc in a positions-decoded list holding every candidate, as uint64."""
+    sel = np.searchsorted(lst["ids"], cand)
+    lens = lst["tfs"][sel]
+    flat = codec.gather_segments(lst["pos"], lst["pstart"][sel], lens)
+    docidx = np.repeat(np.arange(len(cand), dtype=np.uint64), lens)
+    return docidx, flat.astype(np.uint64)
 
 
 def _phrase_doc_ids(per_word: dict[str, dict], words: list[str]) -> np.ndarray:
@@ -342,22 +322,13 @@ def _phrase_doc_ids(per_word: dict[str, dict], words: list[str]) -> np.ndarray:
     across words: word i at position p contributes start p − i. No
     per-doc Python loop.
     """
-    cand = per_word[words[0]]["ids"]
-    for w in words[1:]:
-        cand = cand[np.isin(cand, per_word[w]["ids"], assume_unique=True)]
+    cand = _candidates(per_word, words)
     if not len(cand):
         return cand
     L = np.uint64(len(words))  # offset keeps starts strictly positive
 
     def keys(w: str, i: int) -> np.ndarray:
-        ids, plists = per_word[w]["ids"], per_word[w]["plists"]
-        sel = np.searchsorted(ids, cand)
-        lens = np.fromiter((len(plists[j]) for j in sel), dtype=np.int64,
-                           count=len(sel))
-        if not lens.sum():
-            return np.zeros(0, dtype=np.uint64)
-        flat = np.concatenate([plists[j] for j in sel]).astype(np.uint64)
-        docidx = np.repeat(np.arange(len(cand), dtype=np.uint64), lens)
+        docidx, flat = _positions(per_word[w], cand)
         return (docidx << np.uint64(32)) | (flat - np.uint64(i) + L)
 
     surv = keys(words[0], 0)
@@ -368,58 +339,77 @@ def _phrase_doc_ids(per_word: dict[str, dict], words: list[str]) -> np.ndarray:
     return cand[np.unique((surv >> np.uint64(32)).astype(np.int64))]
 
 
-def _decode_positions_covering(grp: pd.DataFrame, targets: np.ndarray) -> dict:
-    """Position lists decoded ONLY for blocks that can contain a target
-    doc — a stopword's position blob (the largest index column by far)
-    is read a few blocks at a time, never end to end. Returned ids are
-    the covering superset of targets ∩ list (every returned posting is
-    real, so phrase intersection over coverings is exact)."""
-    if not len(targets):
-        return {"ids": np.zeros(0, np.int64), "plists": []}
-    ids_l, pos_l = [], []
-    for row in grp.to_dict("records"):
-        block_last = np.asarray(row["block_last"], dtype=np.int64)
-        if not len(block_last):
-            continue
-        blocks = np.unique(np.searchsorted(block_last, targets, side="left"))
-        blocks = blocks[blocks < len(block_last)]
-        if not len(blocks):
-            continue
-        ids, tfs, _ = codec.decode_blocks(row, blocks)
-        pos_l.extend(codec.decode_position_blocks(row, blocks, tfs))
-        ids_l.append(ids)
-    ids = np.concatenate(ids_l) if ids_l else np.zeros(0, np.int64)
-    order = np.argsort(ids, kind="stable")
-    return {"ids": ids[order], "plists": [pos_l[i] for i in order]}
+def _near_doc_ids(per_word: dict[str, dict], term_a: str, term_b: str,
+                  slop: int, ordered: bool) -> np.ndarray:
+    """doc_ids where b occurs within ``slop`` positions of a — the
+    proximity analog of :func:`_phrase_doc_ids`, fully vectorized.
+
+    Same uint64 (dense doc index << 32 | position) key trick: a's
+    positions form the key set; b contributes one shifted key set per
+    admissible offset d (pos_b − d), so a match is a nonempty key
+    intersection. 2·slop (or slop, ordered) shifted sets — slop is
+    small, so this stays O(postings · slop) with no per-doc loop."""
+    cand = _candidates(per_word, [term_a, term_b])
+    if not len(cand):
+        return cand
+
+    def keys(term: str, delta: int) -> np.ndarray:
+        # key = docidx << 32 | (pos − delta + slop + 1); the constant
+        # slop+1 keeps the low word positive (delta ≤ slop), so the
+        # addend slop+1−delta ≥ 1 and uint64 math never wraps
+        docidx, flat = _positions(per_word[term], cand)
+        return (docidx << np.uint64(32)) | (
+            flat + np.uint64(slop + 1 - delta)
+        )
+
+    deltas = (
+        range(1, slop + 1) if ordered
+        else [d for d in range(-slop, slop + 1) if d != 0]
+    )
+    ka = np.unique(keys(term_a, 0))
+    kb = np.unique(np.concatenate([keys(term_b, d) for d in deltas]))
+    surv = np.intersect1d(ka, kb, assume_unique=True)
+    return cand[np.unique((surv >> np.uint64(32)).astype(np.int64))]
 
 
-def _phrase_hits_segment(pdf: pd.DataFrame, words: list[str]) -> np.ndarray:
+def phrase_hits(batch: "object", words: list[str]) -> np.ndarray:
     """doc_ids of one scoring group matching the exact phrase.
 
     Two-phase: cheap full decode of doc-id/tf streams to intersect the
     candidate docs, then block-selective POSITION decode covering only
     those candidates, then the vectorized adjacency intersection."""
-    rows_by_word = {t: g for t, g in pdf.groupby("term", sort=False)}
-    if any(w not in rows_by_word for w in words):
+    run = PostingRun(batch, positions=True)
+    if not all(run.has(w) for w in words):
         return np.zeros(0, np.int64)
-    full = {w: _decode_full(rows_by_word[w]) for w in set(words)}
-    cand = full[words[0]]["ids"]
-    for w in words[1:]:
-        cand = cand[np.isin(cand, full[w]["ids"], assume_unique=True)]
+    uniq = list(dict.fromkeys(words))
+    cand = _candidates(run.decode(uniq), words)
     if not len(cand):
         return cand
-    per_word = {
-        w: _decode_positions_covering(rows_by_word[w], cand)
-        for w in set(words)
-    }
-    return _phrase_doc_ids(per_word, words)
+    return _phrase_doc_ids(run.decode(uniq, cand, positions=True), words)
+
+
+def near_hits(batch: "object", term_a: str, term_b: str, slop: int,
+              ordered: bool) -> np.ndarray:
+    """doc_ids of one scoring group matching the proximity query —
+    same two-phase shape as :func:`phrase_hits`: full doc-id stream
+    decode to intersect candidates, then block-selective POSITION
+    decode covering only those candidates."""
+    run = PostingRun(batch, positions=True)
+    if not (run.has(term_a) and run.has(term_b)):
+        return np.zeros(0, np.int64)
+    uniq = list(dict.fromkeys([term_a, term_b]))
+    cand = _candidates(run.decode(uniq), [term_a, term_b])
+    if not len(cand):
+        return cand
+    return _near_doc_ids(run.decode(uniq, cand, positions=True),
+                         term_a, term_b, slop, ordered)
 
 
 def make_composed_scorer(
     n_groups: int, phrases: list[list[str]], avgdl: float, k: int,
     nears: "list[tuple[str, str, int, bool]] | None" = None,
     deleted: "object | None" = None,
-) -> "Callable[[pd.DataFrame], pd.DataFrame]":
+) -> "Callable[[object], Scored]":
     """Scorer for one doc-space group of a composed query.
 
     Row columns carry the query roles, computed JVM-side and fully
@@ -435,169 +425,84 @@ def make_composed_scorer(
     phrase_words = {w for ph in phrases for w in ph} | {
         w for a, b, _, _ in nears for w in (a, b)
     }
+    positions = bool(phrases or nears)
 
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    def score_group(batch: "object") -> Scored:
+        run = PostingRun(batch, positions=positions)
         tombs = resolve_deleted(deleted)
-        meta = pdf.drop_duplicates("term").set_index("term")
-        gmask = meta["gmask"].astype("int64").to_dict()
-        is_neg = meta["is_neg"].astype(bool).to_dict()
-        idfs = meta["idf"].astype(float).to_dict()
-        scored = [t for t in meta.index
-                  if gmask.get(t, 0) or t in phrase_words]
+        gmask = run.meta("gmask")
+        is_neg = run.meta("is_neg")
+        idfs = run.meta("idf")
+        scored = [t for t in run.terms if gmask[t] or t in phrase_words]
         # a group with no member term present here admits no local docs
         covered = 0
         for t in scored:
-            covered |= gmask.get(t, 0)
+            covered |= gmask[t]
         if covered != full_mask or not scored:
-            return _empty_scores()
+            return _empty()
         for ph in phrases:
-            if any(w not in meta.index for w in ph):
-                return _empty_scores()
+            if not all(run.has(w) for w in ph):
+                return _empty()
         for a, b, _, _ in nears:
-            if a not in meta.index or b not in meta.index:
-                return _empty_scores()
-
-        rows_by_term = {t: g for t, g in pdf.groupby("term", sort=False)}
+            if not (run.has(a) and run.has(b)):
+                return _empty()
 
         # phrase words are scored terms too: decode their doc streams
         # fully ONCE (reused for scoring AND candidate intersection);
         # positions decode is block-selective over the candidates only
-        predecoded: dict[str, dict] = {
-            w: _decode_full(rows_by_term[w])
-            for w in phrase_words if w in rows_by_term
-        }
+        predecoded = run.decode([t for t in run.terms if t in phrase_words])
+
+        # phrases and proximity constraints conjoin into one position
+        # filter: candidates = docs holding every word, positions
+        # decoded block-selectively over them, checks fully vectorized
+        checks = [(ph, lambda pw, ph=ph: _phrase_doc_ids(pw, ph))
+                  for ph in phrases]
+        checks += [([a, b], lambda pw, a=a, b=b, s=s, o=o:
+                     _near_doc_ids(pw, a, b, s, o))
+                   for a, b, s, o in nears]
         phrase_ok: np.ndarray | None = None
-        for ph in phrases:
-            cand = predecoded[ph[0]]["ids"]
-            for w in ph[1:]:
-                cand = cand[np.isin(cand, predecoded[w]["ids"],
-                                    assume_unique=True)]
+        for words, match in checks:
+            cand = _candidates(predecoded, words)
             if len(cand):
-                per_word = {
-                    w: _decode_positions_covering(rows_by_term[w], cand)
-                    for w in set(ph)
-                }
-                docs = _phrase_doc_ids(per_word, ph)
+                docs = match(run.decode(list(dict.fromkeys(words)), cand,
+                                        positions=True))
             else:
                 docs = cand
             phrase_ok = docs if phrase_ok is None else docs[
                 np.isin(docs, phrase_ok, assume_unique=True)
             ]
             if not len(phrase_ok):
-                return _empty_scores()
+                return _empty()
 
-        # proximity constraints conjoin into the same position filter:
-        # candidates = docs holding both terms, positions decoded
-        # block-selectively over them, window check fully vectorized
-        for a, b, slop, ordered in nears:
-            cand = predecoded[a]["ids"]
-            cand = cand[np.isin(cand, predecoded[b]["ids"],
-                                assume_unique=True)]
-            if len(cand):
-                per_word = {
-                    w: _decode_positions_covering(rows_by_term[w], cand)
-                    for w in {a, b}
-                }
-                docs = _near_doc_ids(per_word, a, b, slop, ordered)
-            else:
-                docs = cand
-            phrase_ok = docs if phrase_ok is None else docs[
-                np.isin(docs, phrase_ok, assume_unique=True)
-            ]
-            if not len(phrase_ok):
-                return _empty_scores()
-
-        neg_terms = [t for t in meta.index if is_neg.get(t)]
+        neg_terms = [t for t in run.terms if is_neg[t]]
 
         def passes_filter(cand: np.ndarray, lists: dict) -> np.ndarray:
             ok = not_deleted_mask(tombs, cand)
             if n_groups:
                 cover = np.zeros(len(cand), dtype=np.int64)
                 for t in scored:
-                    m = gmask.get(t, 0)
+                    m = gmask[t]
                     if m and t in lists:
                         cover |= np.where(_member_mask(lists[t], cand), m, 0)
                 ok &= cover == full_mask
             if neg_terms:
+                have = {t: lists.get(t) for t in neg_terms
+                        if gmask[t] or t in phrase_words}
+                have.update(run.decode(
+                    [t for t in neg_terms if have.get(t) is None], cand
+                ))
                 negm = np.zeros(len(cand), dtype=bool)
                 for t in neg_terms:
-                    lst = (lists.get(t) if gmask.get(t, 0) or t in phrase_words
-                           else None)
-                    if lst is None:
-                        lst = _decode_covering(rows_by_term[t], cand)
-                    negm |= _member_mask(lst, cand)
+                    negm |= _member_mask(have[t], cand)
                 ok &= ~negm
             if phrase_ok is not None:
                 ok &= np.isin(cand, phrase_ok, assume_unique=True)
             return ok
 
-        groups = {t: rows_by_term[t] for t in scored}
         cand, scores = _maxscore_pass(
-            groups, idfs, avgdl, k,
+            run, scored, idfs, avgdl, k,
             passes_filter=passes_filter, predecoded=predecoded,
         )
         return _local_topk(cand, scores, k)
 
     return score_group
-
-
-def _near_doc_ids(per_word: dict[str, dict], term_a: str, term_b: str,
-                  slop: int, ordered: bool) -> np.ndarray:
-    """doc_ids where b occurs within ``slop`` positions of a — the
-    proximity analog of :func:`_phrase_doc_ids`, fully vectorized.
-
-    Same uint64 (dense doc index << 32 | position) key trick: a's
-    positions form the key set; b contributes one shifted key set per
-    admissible offset d (pos_b − d), so a match is a nonempty key
-    intersection. 2·slop (or slop, ordered) shifted sets — slop is
-    small, so this stays O(postings · slop) with no per-doc loop."""
-    cand = per_word[term_a]["ids"]
-    cand = cand[np.isin(cand, per_word[term_b]["ids"], assume_unique=True)]
-    if not len(cand):
-        return cand
-
-    def keys(term: str, delta: int) -> np.ndarray:
-        # key = docidx << 32 | (pos − delta + slop + 1); the constant
-        # slop+1 keeps the low word positive (delta ≤ slop), so the
-        # addend slop+1−delta ≥ 1 and uint64 math never wraps
-        ids, plists = per_word[term]["ids"], per_word[term]["plists"]
-        sel = np.searchsorted(ids, cand)
-        lens = np.fromiter((len(plists[j]) for j in sel), dtype=np.int64,
-                           count=len(sel))
-        if not lens.sum():
-            return np.zeros(0, dtype=np.uint64)
-        flat = np.concatenate([plists[j] for j in sel]).astype(np.uint64)
-        docidx = np.repeat(np.arange(len(cand), dtype=np.uint64), lens)
-        return (docidx << np.uint64(32)) | (
-            flat + np.uint64(slop + 1 - delta)
-        )
-
-    deltas = (
-        range(1, slop + 1) if ordered
-        else [d for d in range(-slop, slop + 1) if d != 0]
-    )
-    ka = np.unique(keys(term_a, 0))
-    kb = np.unique(np.concatenate([keys(term_b, d) for d in deltas]))
-    surv = np.intersect1d(ka, kb, assume_unique=True)
-    return cand[np.unique((surv >> np.uint64(32)).astype(np.int64))]
-
-
-def _near_hits_segment(pdf: pd.DataFrame, term_a: str, term_b: str,
-                       slop: int, ordered: bool) -> np.ndarray:
-    """doc_ids of one scoring group matching the proximity query —
-    same two-phase shape as :func:`_phrase_hits_segment`: full doc-id
-    stream decode to intersect candidates, then block-selective
-    POSITION decode covering only those candidates."""
-    rows_by_word = {t: g for t, g in pdf.groupby("term", sort=False)}
-    if term_a not in rows_by_word or term_b not in rows_by_word:
-        return np.zeros(0, np.int64)
-    full = {w: _decode_full(rows_by_word[w]) for w in {term_a, term_b}}
-    cand = full[term_a]["ids"]
-    cand = cand[np.isin(cand, full[term_b]["ids"], assume_unique=True)]
-    if not len(cand):
-        return cand
-    per_word = {
-        w: _decode_positions_covering(rows_by_word[w], cand)
-        for w in {term_a, term_b}
-    }
-    return _near_doc_ids(per_word, term_a, term_b, slop, ordered)

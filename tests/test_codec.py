@@ -6,6 +6,7 @@ import numpy as np
 from hypothesis import given, settings, strategies as st
 
 from glug_spark.index import codec
+from tests import reference_kernels
 
 
 @given(st.lists(st.integers(min_value=0, max_value=2**63 - 1), max_size=300))
@@ -68,6 +69,32 @@ def test_encode_decode_segment():
     assert len(enc["doc_gaps"]) < 500 * 8
 
 
+def _runs_batch(encs: list[dict], terms: list[str] | None = None,
+                blob_type: "object" = None) -> "object":
+    """Arrow batch of encoded runs, laid out as the posting table."""
+    import pyarrow as pa
+
+    blob_type = blob_type or pa.binary()
+    lst = pa.list_(pa.int64())
+    cols = {
+        "term": pa.array(terms or ["t"] * len(encs)),
+        "df_local": pa.array([e["df_local"] for e in encs], pa.int64()),
+    }
+    for c in ("doc_gaps", "tfs", "dls", "positions"):
+        cols[c] = pa.array([e[c] for e in encs], blob_type)
+    for c in ("block_last", "block_max_tf", "gap_offsets", "tf_offsets",
+              "dl_offsets", "pos_offsets"):
+        cols[c] = pa.array([e[c] for e in encs], lst)
+    return pa.RecordBatch.from_pydict(cols)
+
+
+def _block_rows(enc: dict) -> list[np.ndarray]:
+    """Row index ranges of each block of one run."""
+    n = enc["df_local"]
+    return [np.arange(b * codec.BLOCK, min((b + 1) * codec.BLOCK, n))
+            for b in range(len(enc["gap_offsets"]))]
+
+
 def test_decode_blocks_selective():
     rng = np.random.default_rng(7)
     n = 1000
@@ -77,19 +104,15 @@ def test_decode_blocks_selective():
     enc = codec.encode_segment(doc_ids, tfs, dls)
     n_blocks = len(enc["gap_offsets"])
     assert n_blocks == (n + codec.BLOCK - 1) // codec.BLOCK
+    pb = codec.PostingBlocks(_runs_batch([enc]))
 
     for blocks in ([0], [n_blocks - 1], [1, 3], list(range(n_blocks))):
-        ids, t, l = codec.decode_blocks(enc, np.array(blocks))
-        expect = np.concatenate(
-            [doc_ids[b * codec.BLOCK : (b + 1) * codec.BLOCK] for b in blocks]
-        )
-        assert np.array_equal(ids, expect), blocks
-        assert np.array_equal(
-            t, np.concatenate([tfs[b * codec.BLOCK : (b + 1) * codec.BLOCK] for b in blocks])
-        )
-        assert np.array_equal(
-            l, np.concatenate([dls[b * codec.BLOCK : (b + 1) * codec.BLOCK] for b in blocks])
-        )
+        expect = np.concatenate([_block_rows(enc)[b] for b in blocks])
+        for ids, t, l in (reference_kernels.decode_blocks(enc, np.array(blocks)),
+                          pb.decode(np.array(blocks)).values()):
+            assert np.array_equal(ids, doc_ids[expect]), blocks
+            assert np.array_equal(t, tfs[expect])
+            assert np.array_equal(l, dls[expect])
 
 
 def test_decode_position_blocks_selective():
@@ -105,18 +128,102 @@ def test_decode_position_blocks_selective():
     enc = codec.encode_segment(doc_ids, tfs, dls, positions_per_doc=plists)
     n_blocks = len(enc["gap_offsets"])
     assert len(enc["pos_offsets"]) == n_blocks
+    pb = codec.PostingBlocks(_runs_batch([enc]), positions=True)
 
     for blocks in ([0], [n_blocks - 1], [1, 4], list(range(n_blocks))):
-        _, tf_sel, _ = codec.decode_blocks(enc, np.array(blocks))
-        got = codec.decode_position_blocks(enc, blocks, tf_sel)
-        want = [
-            plists[i]
-            for b in blocks
-            for i in range(b * codec.BLOCK, min((b + 1) * codec.BLOCK, n))
-        ]
+        _, tf_sel, _ = reference_kernels.decode_blocks(enc, np.array(blocks))
+        got = reference_kernels.decode_position_blocks(enc, blocks, tf_sel)
+        rows = np.concatenate([_block_rows(enc)[b] for b in blocks])
+        want = [plists[i] for i in rows]
         assert len(got) == len(want), blocks
         for g, w in zip(got, want):
             assert np.array_equal(g, w), blocks
+        d = pb.decode(np.array(blocks), positions=True)
+        assert d["pos"].tolist() == np.concatenate(want).astype(np.int64).tolist()
+
+
+@st.composite
+def _encoded_runs(draw: "st.DrawFn") -> list[tuple[dict, np.ndarray, list]]:
+    """1-4 runs of 1-400 postings: multi-byte gaps (ids up to 2**40),
+    tfs past one varbyte byte, multi-byte positions, partial last
+    blocks."""
+    runs = []
+    for _ in range(draw(st.integers(1, 4))):
+        n = draw(st.integers(1, 400))
+        seed = draw(st.integers(0, 2**32 - 1))
+        rng = np.random.default_rng(seed)
+        span = 2 ** int(rng.integers(10, 41))
+        ids = np.unique(rng.integers(0, span, size=n)).astype(np.int64)
+        tfs = rng.integers(1, 4, size=len(ids)).astype(np.int64)
+        tfs[rng.random(len(ids)) < 0.02] = 200
+        dls = rng.integers(1, 10**6, size=len(ids)).astype(np.int64)
+        plists = [np.sort(rng.choice(10**5, size=int(t), replace=False))
+                  .astype(np.uint64) for t in tfs]
+        enc = codec.encode_segment(ids, tfs, dls, positions_per_doc=plists)
+        runs.append((enc, ids, plists))
+    return runs
+
+
+@given(_encoded_runs(), st.data())
+@settings(max_examples=60, deadline=None)
+def test_posting_blocks_match_reference(runs, data):
+    """Batched block-selective decode == per-row, per-block reference,
+    for random runs and random block subsets spanning every row, plus
+    the empty selection, each row's first block and each row's (often
+    partial) last block."""
+    import pyarrow as pa
+
+    encs = [r[0] for r in runs]
+    n_blocks = [len(e["gap_offsets"]) for e in encs]
+    total = sum(n_blocks)
+    starts = np.cumsum(n_blocks) - n_blocks
+    random_sel = sorted(data.draw(st.sets(st.integers(0, total - 1))))
+    selections = [[], list(starts), list(starts + n_blocks - 1), random_sel]
+    blob_type = data.draw(st.sampled_from([pa.binary(), pa.large_binary()]))
+    pb = codec.PostingBlocks(_runs_batch(encs, blob_type=blob_type),
+                             positions=True)
+    for sel in selections:
+        sel = np.asarray(sel, dtype=np.int64)
+        got = pb.decode(sel, positions=True)
+        want_ids, want_tfs, want_dls, want_pos = [], [], [], []
+        for r, enc in enumerate(encs):
+            local = sel[(sel >= starts[r]) & (sel < starts[r] + n_blocks[r])]
+            local = local - starts[r]
+            ids, tfs, dls = reference_kernels.decode_blocks(enc, local)
+            want_ids.append(ids)
+            want_tfs.append(tfs)
+            want_dls.append(dls)
+            want_pos += reference_kernels.decode_position_blocks(enc, local, tfs)
+        assert got["ids"].tolist() == np.concatenate(want_ids).tolist()
+        assert got["tfs"].tolist() == np.concatenate(want_tfs).tolist()
+        assert got["dls"].tolist() == np.concatenate(want_dls).tolist()
+        flat = (np.concatenate(want_pos).astype(np.int64).tolist()
+                if want_pos else [])
+        assert got["pos"].tolist() == flat
+
+
+@given(_encoded_runs(), st.lists(st.integers(0, 2**40), max_size=50))
+@settings(max_examples=40, deadline=None)
+def test_posting_blocks_covering_and_first(runs, targets):
+    """``covering`` keeps exactly the blocks the per-row searchsorted
+    rule picks; ``first`` is each row's true first id at block 0 and
+    block_last[b-1] + 1 after."""
+    encs = [r[0] for r in runs]
+    pb = codec.PostingBlocks(_runs_batch(encs))
+    targets = np.unique(np.array(targets + [int(r[1][-1]) for r in runs],
+                                 dtype=np.int64))
+    want, first = [], []
+    g = 0
+    for enc, ids, _ in runs:
+        last = np.asarray(enc["block_last"], dtype=np.int64)
+        hit = np.unique(np.searchsorted(last, targets, side="left"))
+        want += (g + hit[hit < len(last)]).tolist()
+        first += [int(ids[0])] + (last[:-1] + 1).tolist()
+        g += len(last)
+    everything = np.arange(g)
+    assert pb.covering(everything, targets).tolist() == want
+    assert pb.first().tolist() == first
+    assert pb.covering(everything[:0], targets).size == 0
 
 
 def test_encode_runs_pos_offsets_match_encode_segment():
@@ -195,3 +302,92 @@ def test_binary_stream_zero_copy_and_ndarray_decode():
     assert codec.varbyte_decode(s2).tolist() == [300, 2**40]
     # empty ndarray input
     assert len(codec.varbyte_decode(np.zeros(0, np.uint8))) == 0
+
+
+def test_binary_stream_large_types_and_bad_type():
+    """``large_binary`` / ``large_string`` arrays (Spark's
+    arrow.useLargeVarTypes) carry int64 offsets: read as int32 they
+    would decode garbage. Any non-binary type raises."""
+    import pyarrow as pa
+    import pytest
+
+    blobs = [codec.varbyte_encode(np.array([v], dtype=np.uint64))
+             for v in (1, 300, 2**40, 7)]
+    for typ in (pa.large_binary(), pa.binary()):
+        arr = pa.array(blobs, type=typ).slice(1, 3)
+        stream, offs = codec.binary_stream(arr)
+        assert codec.varbyte_decode(stream).tolist() == [300, 2**40, 7]
+        assert offs.tolist() == [0, 2, 8, 9]
+    for typ in (pa.large_string(), pa.string()):
+        stream, offs = codec.binary_stream(pa.array(["ab", "", "cde"], typ))
+        assert stream.tobytes() == b"abcde" and offs.tolist() == [0, 2, 2, 5]
+    with pytest.raises(TypeError, match="binary or string"):
+        codec.binary_stream(pa.array([1, 2], pa.int64()))
+
+
+def test_list_values_sliced_and_large():
+    import pyarrow as pa
+
+    for typ in (pa.list_(pa.int64()), pa.large_list(pa.int64())):
+        arr = pa.array([[1, 2], [3], [], [4, 5, 6]], type=typ).slice(1, 3)
+        vals, offs = codec.list_values(arr)
+        assert vals.tolist() == [3, 4, 5, 6]
+        assert offs.tolist() == [0, 1, 1, 4]
+
+
+@given(st.lists(st.integers(0, 2**62), min_size=1, max_size=40))
+@settings(max_examples=50, deadline=None)
+def test_first_doc_ids_matches_reference(firsts):
+    encs = [codec.encode_segment(np.array([f, f + 5], dtype=np.int64),
+                                 np.ones(2, np.int64), np.ones(2, np.int64))
+            for f in firsts]
+    arr = _runs_batch(encs).column("doc_gaps")
+    stream, offs = codec.binary_stream(arr)
+    got = codec.first_doc_ids(stream, offs[:-1])
+    assert got.tolist() == firsts
+    assert got.tolist() == [reference_kernels._first_doc_id(e["doc_gaps"])
+                            for e in encs]
+
+
+def _keyed_batch(grp: list[int], qid: list[str]) -> "object":
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_pydict({
+        "grp": pa.array(grp, pa.int64()),
+        "query_id": pa.array(qid),
+        "row": pa.array(np.arange(len(grp)), pa.int64()),
+    })
+
+
+def test_run_starts_int_and_string_keys():
+    b = _keyed_batch([1, 1, 1, 2, 2], ["a", "a", "b", "b", "b"])
+    assert codec.run_starts(b, ["grp"]).tolist() == [0, 3]
+    assert codec.run_starts(b, ["query_id"]).tolist() == [0, 2]
+    assert codec.run_starts(b, ["grp", "query_id"]).tolist() == [0, 2, 3]
+    assert codec.run_starts(b.slice(0, 0), ["grp"]).size == 0
+
+
+@given(st.lists(st.tuples(st.integers(0, 3), st.sampled_from("abc")),
+                min_size=1, max_size=60),
+       st.lists(st.integers(1, 7), min_size=1, max_size=30))
+@settings(max_examples=100, deadline=None)
+def test_complete_runs_recuts_at_run_boundaries(keys, cuts):
+    """Any split of a key-sorted batch into Arrow batches (empty ones
+    included) re-cuts into batches of COMPLETE runs, rows in order."""
+    keys = sorted(keys)
+    whole = _keyed_batch([g for g, _ in keys], [q for _, q in keys])
+    parts, at = [], 0
+    for c in cuts:
+        parts.append(whole.slice(at, c))
+        parts.append(whole.slice(at, 0))
+        at += c
+    parts.append(whole.slice(at))
+    out = list(codec.complete_runs(iter(parts), ["grp", "query_id"]))
+    rows = [r for b in out for r in b.column("row").to_pylist()]
+    assert rows == list(range(len(keys)))
+    seen = set()
+    for b in out:
+        run_keys = list(zip(b.column("grp").to_pylist(),
+                            b.column("query_id").to_pylist()))
+        assert not seen & set(run_keys), "a run was split across batches"
+        seen |= set(run_keys)

@@ -309,7 +309,7 @@ def test_default_min_groups_floor_preserves_parallelism(spark, tmp_path):
 
 def test_merge_kernel_matches_per_group_pandas(spark, tmp_path):
     """The batch Arrow merge kernel must emit BYTE-identical merged
-    runs to the per-group pandas `_merge_term` it replaced, over a real
+    runs to the per-group pandas `merge_term` it replaced, over a real
     fragmented multi-segment index — including small Arrow batches that
     force groups to straddle batch boundaries (the carry path)."""
     import numpy as np
@@ -318,6 +318,7 @@ def test_merge_kernel_matches_per_group_pandas(spark, tmp_path):
 
     from glug_spark.index import compact as cmod
     from glug_spark.index.pipeline import ENCODED_SCHEMA
+    from tests.reference_kernels import merge_term
 
     d = str(tmp_path / "idx_merge")
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
@@ -333,7 +334,7 @@ def test_merge_kernel_matches_per_group_pandas(spark, tmp_path):
     names = [f.name for f in ENCODED_SCHEMA]
 
     old = pd.concat(
-        [cmod._merge_term(pdf) for _, pdf in
+        [merge_term(pdf) for _, pdf in
          enc_g.toPandas().groupby(["bucket", "term", "grp"], sort=True)],
         ignore_index=True,
     )

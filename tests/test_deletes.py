@@ -664,13 +664,13 @@ def test_purge_rewriter_roundtrip_property(case):
 
 def test_first_doc_col_matches_python_decoder(spark):
     """The JVM first-doc expression (purge's scan-prune predicate) must
-    equal wand._first_doc_id for any varbyte width, including multi-byte
+    equal the reference _first_doc_id for any varbyte width, including multi-byte
     continuation chains up to 63-bit ids."""
     import numpy as np
 
     from glug_spark.index import codec
     from glug_spark.index.deletes import first_doc_col
-    from glug_spark.query.wand import _first_doc_id
+    from tests.reference_kernels import _first_doc_id
 
     ids = [0, 1, 126, 127, 128, 300, 16_383, 16_384, 2_097_151,
            2_097_152, 2**35, 2**42 + 12345, 2**55 + 7, 2**62 - 1]
@@ -699,6 +699,7 @@ def test_purge_rewriter_batch_matches_rowwise(spark, tmp_path):
     import pandas as pd
 
     from glug_spark.index import deletes as dmod
+    from tests.reference_kernels import make_purge_rewriter_rowwise
 
     idx = str(tmp_path / "idx_rw")
     _build(spark, SF_DIR, idx)
@@ -722,7 +723,7 @@ def test_purge_rewriter_batch_matches_rowwise(spark, tmp_path):
         return sorted(rows)
 
     old = pd.concat(
-        list(dmod._make_purge_rewriter_rowwise(deleted)(iter([enc]))),
+        list(make_purge_rewriter_rowwise(deleted)(iter([enc]))),
         ignore_index=True,
     )
     import pyarrow as pa

@@ -4,12 +4,14 @@ empty-input guards, file-reading helpers, parser conveniences."""
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 from glug_spark.index import codec
 from glug_spark.query.parser import glob_regexes, parse_query
 from glug_spark.semantics.lines import read_lines
 from glug_spark.semantics.tokenize import tokenize_with_positions
 from glug_spark.semantics.typetags import TypetagDatabase
+from tests import reference_kernels
 
 
 def test_read_lines_crlf(tmp_path):
@@ -86,10 +88,15 @@ def test_decode_blocks_empty_selection():
     dls = np.full(10, 7, dtype=np.int64)
     pos = np.zeros(10, dtype=np.uint64)
     runs = codec.encode_runs(np.zeros(10, dtype=np.int64), ids, tfs, dls, pos)
-    got_ids, got_tfs, got_dls = codec.decode_blocks(
+    got_ids, got_tfs, got_dls = reference_kernels.decode_blocks(
         runs[0], np.zeros(0, dtype=np.int64)
     )
     assert got_ids.size == got_tfs.size == got_dls.size == 0
+    batch = pa.RecordBatch.from_pylist([runs[0]])
+    got = codec.PostingBlocks(batch, positions=True).decode(
+        np.zeros(0, dtype=np.int64), positions=True
+    )
+    assert all(v.size == 0 for v in got.values())
 
 
 def test_typetag_db_explicit_tags():
@@ -159,3 +166,11 @@ def test_encode_runs_empty_input():
     z = np.zeros(0, dtype=np.int64)
     runs = codec.encode_runs(z, z, z, z, np.zeros(0, dtype=np.uint64))
     assert runs == []
+
+
+def test_encode_runs_without_positions():
+    """Rows owning no positions (tf 0) encode an empty position blob."""
+    ids = np.arange(3, dtype=np.int64)
+    z = np.zeros(3, dtype=np.int64)
+    runs = codec.encode_runs(z, ids, z, z + 5, np.zeros(0, dtype=np.uint64))
+    assert len(runs) == 1 and runs[0]["positions"] == b""

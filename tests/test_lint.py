@@ -5,11 +5,16 @@ tools/encoding.py; tools/lint_gate.py is the stdlib-only analog)."""
 from __future__ import annotations
 
 import io
+import os
 import sys
+
+TOOLS = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
+)
 
 
 def test_lint_gate_clean():
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import lint_gate
 
     buf = io.StringIO()
@@ -25,7 +30,7 @@ def test_lint_gate_clean():
 def test_type_gate_clean():
     """The strict-mypy-analog gate (annotation presence, implicit
     Optional ban, call-signature consistency) over all of glug_spark."""
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import type_gate
 
     buf = io.StringIO()
@@ -43,7 +48,7 @@ def test_type_gate_catches_violations():
     synthetic violation."""
     import ast
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import type_gate
 
     # 1. untyped parameter + missing return annotation

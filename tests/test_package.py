@@ -4,18 +4,21 @@ module (what executors do when spark-submit distributes the zip)."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def test_zip_imports_standalone(tmp_path):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from tools.package import build_zip
 
     zip_path = build_zip(str(tmp_path / "glug_spark.zip"))
     probe = (
         "import sys; sys.path = [sys.path[0]] + ['" + zip_path + "'] + "
-        "[p for p in sys.path[1:] if 'repo' not in p]\n"
+        "[p for p in sys.path[1:] if not p.startswith(" + repr(ROOT) + ")]\n"
         "import glug_spark.semantics.glob as g\n"
         "import glug_spark.semantics.filters\n"
         "import glug_spark.index.codec\n"

@@ -47,11 +47,31 @@ def test_explicit_topk_plan(spark, plan_index):
     # (LimitPushDownThroughWindow) — per-partition top-k heaps AND one
     # Spark job (the explicit orderBy().limit() form cost 3 jobs: AQE
     # stage materialization + CollectLimit). Exactly ONE data exchange
-    # (the groupBy co-location); stats ride a broadcast, not a shuffle.
+    # (the grp co-location); stats ride a broadcast, not a shuffle.
     assert "TakeOrderedAndProject" in plan
     assert re.search(r"\n\(\d+\) Window", plan), plan
     assert len(re.findall(r"\n\(\d+\) Exchange", plan)) == 1
     assert "BroadcastExchange" in plan
+
+
+def test_query_kernels_are_arrow_maps(spark, plan_index):
+    """Every index query kernel runs as ONE grouped Arrow map over the
+    grp exchange, straight on the Arrow rows — no grouped pandas map
+    (FlatMapGroupsInPandas) and no pandas conversion anywhere."""
+    with Searcher(spark, plan_index, n_buckets=8, persist=False) as s:
+        plans = {
+            "topk": _formatted(s.topk(["data", "join"], k=10)),
+            "topk_many": _formatted(
+                s.topk_many({"a": ["data"], "b": ["join", "scan"]}, k=10)
+            ),
+            "composed": _formatted(s.search('dat* -noise "table scan"', k=10)),
+            "phrase_docs": _formatted(s.phrase_docs(["table", "scan"])),
+        }
+    for name, plan in plans.items():
+        assert len(re.findall(r"\n\(\d+\) FlatMapGroupsInArrow", plan)) == 1, (
+            name, plan)
+        assert "FlatMapGroupsInPandas" not in plan, (name, plan)
+        assert "InPandas" not in plan, (name, plan)
 
 
 def test_glob_plan_distributed_expansion(spark, plan_index):

@@ -15,13 +15,15 @@ Prints one JSON line; numbers are recorded in BASELINE.md.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 from pyspark.sql import functions as F
 
 from glug_spark.operators.pathfilter import (

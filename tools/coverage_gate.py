@@ -38,7 +38,8 @@ import sys
 import trace
 from collections import defaultdict
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 LINE_FLOOR = 98.0
 BRANCH_FLOOR = 95.0
@@ -166,7 +167,7 @@ def main() -> int:
     if "--branch-floor" in sys.argv:
         branch_floor = float(sys.argv[sys.argv.index("--branch-floor") + 1])
 
-    os.chdir("/root/repo")
+    os.chdir(ROOT)
     import pytest
 
     abs_targets = {os.path.abspath(t) for t in TARGETS}

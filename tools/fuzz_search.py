@@ -17,12 +17,14 @@ Prints one line per divergence; exit 1 if any.
 
 from __future__ import annotations
 
+import os
 import random
 import shutil
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 VOCAB = ["data", "join", "scan", "table", "merge", "index", "sort",
          "row", "key", "hash", "dup", "the"]

@@ -18,6 +18,7 @@ import pandas as pd
 
 import os
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("ORACLE_CHECK_SF_DIR", "/root/testdata/sf0.01")
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -39,7 +40,7 @@ def _hash(df: pd.DataFrame) -> str:
 
 
 def main(names: list[str]) -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     import __spark_entry__ as entry
     from glug_spark.session import get_spark
 

@@ -7,11 +7,13 @@ Run: python tools/train_ivf.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pyarrow.parquet as pq
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 from glug_spark.operators.similarity import train_centroids  # noqa: E402
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
