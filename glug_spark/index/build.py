@@ -89,22 +89,6 @@ def postings(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def postings_with_positions(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(term, doc_id, tf, positions) — positions sorted ascending.
-
-    ``sort_array`` makes the array deterministic regardless of shuffle
-    arrival order (collect_list alone is not order-stable).
-    """
-    return (
-        tokens(docs, id_col)
-        .groupBy("term", "doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("tf"),
-            F.sort_array(F.collect_list("pos")).alias("positions"),
-        )
-    )
-
-
 def term_stats(postings_df: DataFrame) -> DataFrame:
     """(term, df, cf) — document frequency + collection frequency."""
     return postings_df.groupBy("term").agg(

@@ -549,15 +549,6 @@ class PostingBlocks:
             end[row_end] = roffs[1:][self.row[row_end]]
             self._spans[col] = (stream, start, end - start)
 
-    def first(self) -> np.ndarray:
-        """Smallest doc id each block can hold: exact for a row's first
-        block (its leading varbyte), ``block_last[b-1] + 1`` after."""
-        stream, start, _ = self._spans["doc_gaps"]
-        heads = np.flatnonzero(self.index == 0)
-        first = self.base.copy()
-        first[heads] = first_doc_ids(stream, start[heads])
-        return first
-
     def covering(self, blocks: np.ndarray, targets: np.ndarray) -> np.ndarray:
         """Those of ``blocks`` whose doc range (block_last[b-1],
         block_last[b]] holds at least one of the SORTED ``targets``."""

@@ -328,16 +328,6 @@ def resize_media(media: DataFrame, n_samples: int = RESIZE_SAMPLES) -> DataFrame
     return media.select("doc_id", "payload").mapInPandas(batches, schema=schema)
 
 
-def resize_digests(media: DataFrame, n_samples: int = RESIZE_SAMPLES) -> DataFrame:
-    """Hashable projection of :func:`resize_media` for the oracle."""
-    r = resize_media(media, n_samples)
-    return r.select(
-        "doc_id",
-        F.md5("resized").alias("resized_md5"),
-        F.length("resized").cast("long").alias("resized_len"),
-    )
-
-
 def resize_digests_sql(n_samples: int = RESIZE_SAMPLES) -> str:
     """Oracle twin (ASCII corpus: VARCHAR char == byte)."""
     return f"""

@@ -23,19 +23,6 @@ STOPWORDS = {
 }
 
 
-def token_count(docs: DataFrame) -> DataFrame:
-    return docs.select(
-        "doc_id", F.size(token_array()).cast("long").alias("n_tokens")
-    )
-
-
-TOKEN_COUNT_SQL = f"""
-SELECT doc_id,
-       CAST(len(regexp_extract_all(text, '{TOKEN_PATTERN}')) AS BIGINT) AS n_tokens
-FROM documents
-"""
-
-
 def _token_agg(docs: DataFrame) -> DataFrame:
     """Per-doc token counters from ONE tokenization pass.
 
@@ -234,20 +221,6 @@ FROM documents
 BPE_PATTERN = r"'(?:s|t|re|ve|m|ll|d)|[\p{L}]+|[\p{N}]+|[^\s\p{L}\p{N}]+|\s+"
 
 
-def bpe_token_count(docs: DataFrame) -> DataFrame:
-    """(doc_id, n_ws_tokens, n_bpe_tokens) — whitespace count vs a
-    BPE-ish pre-tokenizer count (the 'how many LLM tokens is this
-    corpus' estimator every training pipeline runs)."""
-    ws = F.size(F.split(F.trim(F.col("text")), r"\s+"))
-    bpe = F.size(F.regexp_extract_all(F.col("text"), F.lit(BPE_PATTERN), F.lit(0)))
-    return docs.select(
-        "doc_id",
-        F.when(F.length(F.trim(F.col("text"))) == 0, 0)
-        .otherwise(ws).cast("long").alias("n_ws_tokens"),
-        bpe.cast("long").alias("n_bpe_tokens"),
-    )
-
-
 def token_counts(docs: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, n_ws_tokens, n_bpe_tokens) — the engine
     tokenizer count, whitespace count, and BPE-ish pre-tokenizer count
@@ -269,19 +242,6 @@ def token_counts_sql() -> str:
 SELECT doc_id,
        CAST(len(regexp_extract_all(text, '{TOKEN_PATTERN}')) AS BIGINT)
            AS n_tokens,
-       CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-            ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS BIGINT)
-           AS n_ws_tokens,
-       CAST(len(regexp_extract_all(text, '{pattern}')) AS BIGINT)
-           AS n_bpe_tokens
-FROM documents
-"""
-
-
-def bpe_token_count_sql() -> str:
-    pattern = BPE_PATTERN.replace("'", "''")
-    return f"""
-SELECT doc_id,
        CAST(CASE WHEN length(trim(text)) = 0 THEN 0
             ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS BIGINT)
            AS n_ws_tokens,

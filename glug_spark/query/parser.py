@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from glug_spark.semantics.glob import split, to_regex
+from glug_spark.semantics.glob import split
 from glug_spark.semantics.typetags import TypetagDatabase
 
 _GLOB_CHARS = set("*?[")
@@ -125,12 +125,3 @@ def parse_query(
         if group:
             plan.groups.append(group)
     return plan
-
-
-def glob_regexes(plan: QueryPlan) -> dict[str, str]:
-    """Compile every glob in the plan to its portable full-match regex."""
-    out = {}
-    for _, glob in [g for grp in plan.groups for g in grp] + plan.negations:
-        if _GLOB_CHARS & set(glob):
-            out[glob] = to_regex(glob)
-    return out

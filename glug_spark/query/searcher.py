@@ -8,14 +8,20 @@ term_stats DataFrames analyzed, and optionally ``persist()``s them.
 Every query kind (plain, batched, composed, glob, phrase, NEAR) runs
 the same plan:
 
-1. term→bucket via the md5-derived bucket used at build
-   (``pipeline.python_bucket``, bucket count from ``params/``), so the
-   posting scan prunes to the query terms' bucket partitions; glob
-   members push a ``startswith`` conjunct instead (row-group skipping
-   on the term-sorted layout).
-2. term stats (idf, query roles) ride a broadcast join onto the posting
-   scan; glob members expand against term_stats JVM-side, never
+1. ONE compile step (:meth:`Searcher._compile`) turns a batch of
+   parsed plans — a top-k query is a batch of one; plain OR terms are
+   one group, AND terms one group each — into one JSON pattern literal.
+   term_stats is scanned once, pruned to the terms' bucket partitions
+   (term→bucket via the md5-derived bucket used at build,
+   ``pipeline.python_bucket``, bucket count from ``params/``) when
+   every member is a term, else by a pushable ``startswith`` conjunct
+   (row-group skipping on the term-sorted layout); each stats row
+   inlines the patterns into per-query role rows (idf, group bitmask,
+   negation and phrase flags) — glob members expand JVM-side, never
    collected to the driver.
+2. the role rows ride a broadcast join onto the posting scan, pruned
+   the same way; :func:`glug_spark.query.wand.make_composed_scorer`
+   is the one top-k scorer.
 3. posting rows are exchanged on their SCORING GROUP
    (:func:`scorer_partitions`) and a grouped Arrow map runs a
    :mod:`glug_spark.query.wand` kernel straight on each group's Arrow
@@ -39,6 +45,7 @@ A Searcher snapshots the index at open time: reopen after a rebuild,
 from __future__ import annotations
 
 import functools
+import json
 import operator
 from typing import Callable
 
@@ -54,7 +61,8 @@ from glug_spark.index.pipeline import (
     read_params,
 )
 from glug_spark.query import wand
-from glug_spark.query.parser import parse_query
+from glug_spark.query.parser import QueryPlan, parse_query
+from glug_spark.semantics.glob import full_match_regex, literal_prefix
 
 _SCORE_SCHEMA = "doc_id long, raw_score double"
 _QUERY_SCORE_SCHEMA = "query_id string, doc_id long, raw_score double"
@@ -155,17 +163,17 @@ def _ranked_top(rows: DataFrame, scorer: Kernel, k: int) -> DataFrame:
     )
 
 
-def _ranked_many(rows: DataFrame, scorer_for: Callable[[str], Kernel],
+def _ranked_many(rows: DataFrame, scorers: dict[str, Kernel],
                  k: int) -> DataFrame:
     """Batched tail shared by :meth:`Searcher.topk_many` and
     :meth:`Searcher.search_many`: the kernel node running
-    ``scorer_for(query_id)`` over each query's rows of a group, then a
+    ``scorers[query_id]`` over each query's rows of a group, then a
     per-query rank window → (query_id, rank, doc_id, score).
-    ``scorer_for`` ships to the Python workers: it must close over
+    ``scorers`` ships to the Python workers: they must close over
     plain values, never the Searcher."""
 
     def score_run(run: object) -> tuple:
-        return scorer_for(run.column("query_id")[0].as_py())(run)
+        return scorers[run.column("query_id")[0].as_py()](run)
 
     per_group = _kernel_node(rows, ["grp", "query_id"], score_run,
                              _QUERY_SCORE_SCHEMA)
@@ -192,83 +200,74 @@ def _sorted_docs(matched: DataFrame) -> DataFrame:
     return matched.repartition(1).sortWithinPartitions("doc_id")
 
 
-def _member_pred(members: Members) -> F.Column:
-    """stats/postings `term` column predicate for group members.
+#: type of the pattern literal a batch compiles to: per query, its
+#: members. A member matches a term exactly (kind ``term``) or as a glob
+#: (literal prefix, then the full-match regex), and carries its group
+#: bit, negation flag and phrase flag.
+_PATTERN_TYPE = (
+    "array<struct<query_id:string,members:array<struct<kind:string,"
+    "value:string,prefix:string,regex:string,bit:bigint,neg:boolean,"
+    "phrase:boolean>>>>"
+)
 
-    Glob members carry their literal prefix as a ``startswith``
-    conjunct: rlike can't reach the parquet scan, but StringStartsWith
-    can — with the term-sorted row-group layout the scan skips whole
-    groups for prefixed globs like ``dat*``."""
-    from glug_spark.semantics.glob import full_match_regex, literal_prefix
-
-    terms = [v for kind, v in members if kind == "term"]
-    pred = F.col("term").isin(terms) if terms else F.lit(False)
-    for kind, v in members:
-        if kind == "glob":
-            gp = F.col("term").rlike(full_match_regex(v))
-            prefix = literal_prefix(v)
-            if prefix:
-                gp = F.col("term").startswith(prefix) & gp
-            pred = pred | gp
-    return pred
-
-
-def _pushable_member_pred(members: Members) -> F.Column | None:
-    """Weakened member predicate made ONLY of parquet-pushable leaves
-    (In / StringStartsWith), or None when some member has no pushable
-    form (a prefixless glob). Redundant with the exact predicate — it
-    exists purely so the posting SCAN gets row-group skipping; the
-    broadcast join still applies the exact semantics."""
-    from glug_spark.semantics.glob import literal_prefix
-
-    terms = [v for kind, v in members if kind == "term"]
-    parts = []
-    if terms:
-        parts.append(F.col("term").isin(terms))
-    for kind, v in members:
-        if kind == "glob":
-            prefix = literal_prefix(v)
-            if not prefix:
-                return None
-            parts.append(F.col("term").startswith(prefix))
-    if not parts:
-        return None
-    return functools.reduce(operator.or_, parts)
+#: per term_stats row, one role row per query with a matching member: a
+#: fold over the query's members ORs their group bits into ``gmask`` and
+#: their flags into ``is_neg`` / ``is_phrase`` — no join, no aggregate
+_ROLE_ROWS = """inline(filter(transform(
+  from_json('%s', '""" + _PATTERN_TYPE + """'), q -> aggregate(q.members,
+    named_struct('query_id', q.query_id, 'gmask', 0L,
+                 'is_neg', false, 'is_phrase', false),
+    (r, m) -> IF(IF(m.kind = 'term', term = m.value,
+                    startswith(term, m.prefix) AND term RLIKE m.regex),
+                 named_struct('query_id', r.query_id,
+                              'gmask', r.gmask | m.bit,
+                              'is_neg', r.is_neg OR m.neg,
+                              'is_phrase', r.is_phrase OR m.phrase),
+                 r))),
+  r -> r.gmask != 0 OR r.is_neg OR r.is_phrase))"""
 
 
-def build_members(stats_df: DataFrame,
-                  groups: list[Members],
-                  negations: Members,
-                  phrase_words: list[str]) -> DataFrame:
-    """Per-term query roles as a DataFrame over term_stats: idf, group
-    bitmask, negation flag, phrase membership — computed JVM-side so
-    glob expansion never reaches the driver."""
-    if len(groups) > 62:
-        raise ValueError("too many conjunct groups (max 62)")
-    gmask_col = F.lit(0).cast("long")
-    for i, grp in enumerate(groups):
-        gmask_col = gmask_col + F.when(_member_pred(grp), F.lit(1 << i)
-                                       ).otherwise(F.lit(0)).cast("long")
-    is_neg_col = _member_pred(negations) if negations else F.lit(False)
-    is_phrase_col = (F.col("term").isin(phrase_words) if phrase_words
-                     else F.lit(False))
-    return (
-        stats_df.select(
-            "term", "idf",
-            gmask_col.alias("gmask"),
-            is_neg_col.alias("is_neg"),
-            is_phrase_col.alias("is_phrase"),
-        )
-        .where((F.col("gmask") != 0) | F.col("is_neg") | F.col("is_phrase"))
-    )
-
-
-def _position_words(phrases: list[list[str]],
-                    nears: list[tuple[str, str, int, bool]]) -> list[str]:
+def _position_words(plan: QueryPlan) -> list[str]:
     return list(dict.fromkeys(
-        [w for ph in phrases for w in ph]
-        + [w for a, b, _, _ in nears for w in (a, b)]
+        [w for ph in plan.phrases for w in ph] + plan.near_words
     ))
+
+
+def _members(plan: QueryPlan) -> list[dict]:
+    """The plan's pattern-literal members: every group member with its
+    group's bit, every negation, every phrase and NEAR word. More than
+    62 groups raise ``ValueError`` (the group bitmask is a long)."""
+    if len(plan.groups) > 62:
+        raise ValueError("too many conjunct groups (max 62)")
+    roles = [(kind, v, 1 << i, False, False)
+             for i, grp in enumerate(plan.groups) for kind, v in grp]
+    roles += [(kind, v, 0, True, False) for kind, v in plan.negations]
+    roles += [("term", w, 0, False, True) for w in _position_words(plan)]
+    return [
+        {"kind": kind, "value": v,
+         "prefix": literal_prefix(v) if kind == "glob" else None,
+         "regex": full_match_regex(v) if kind == "glob" else None,
+         "bit": bit, "neg": neg, "phrase": phrase}
+        for kind, v, bit, neg, phrase in roles
+    ]
+
+
+def _terms_plan(terms: list[str], conjunctive: bool) -> QueryPlan:
+    """A plain term query as a plan: its distinct terms as one OR group,
+    or (``conjunctive``) as one group each."""
+    members = [("term", t) for t in dict.fromkeys(terms)]
+    if conjunctive:
+        return QueryPlan(groups=[[m] for m in members])
+    return QueryPlan(groups=[members] if members else [])
+
+
+def _checked(plan: QueryPlan, query: str | None = None) -> QueryPlan:
+    """``plan``, or ``ValueError`` when it has no positive constraint."""
+    if not plan.groups and not plan.phrases and not plan.nears:
+        raise ValueError("composed query has no positive constraint"
+                         if query is None else
+                         f"query has no positive constraint: {query!r}")
+    return plan
 
 
 class Searcher:
@@ -358,33 +357,76 @@ class Searcher:
             "grp", F.coalesce("grp", F.col("segment"))
         )
 
-    def _pruned(self, df: DataFrame, terms: list[str]) -> DataFrame:
-        """Rows of ``terms`` from a bucket-partitioned table (postings or
+    def _term_pred(self, terms: list[str]) -> F.Column:
+        """Rows of ``terms`` in a bucket-partitioned table (postings or
         term_stats): partition pruning plus the parquet term IN-list."""
         buckets = sorted({python_bucket(t, self.n_buckets) for t in terms})
-        return df.where(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
+        return F.col("bucket").isin(buckets) & F.col("term").isin(terms)
 
-    def _member_rows(self, member_lists: list[Members], members: DataFrame,
-                     positions: bool) -> DataFrame:
-        """Posting rows joined to the broadcast query-role table
-        ``members`` (one member list per query), grp attached. The scan
-        prunes bucket partitions when EVERY member is an explicit term,
-        and takes the pushable (In|StartsWith) conjunct when every query
-        has one; the exact member semantics ride the join."""
-        postings = self.postings
-        flat = [m for lst in member_lists for m in lst]
-        if all(kind == "term" for kind, _ in flat):
-            buckets = sorted({
-                python_bucket(v, self.n_buckets) for _, v in flat
-            })
-            postings = postings.where(F.col("bucket").isin(buckets))
-        pushables = [_pushable_member_pred(lst) for lst in member_lists]
-        if all(p is not None for p in pushables):
-            postings = postings.where(functools.reduce(operator.or_, pushables))
+    def _scan_pred(self, members: list[dict]) -> F.Column | None:
+        """The scan pruning of a compiled batch, the same for term_stats
+        and postings: :meth:`_term_pred` when every member is a term,
+        else the pushable ``In | StartsWith`` conjunct (row-group
+        skipping on the term-sorted layout), or None when a glob has no
+        literal prefix. The exact member semantics ride the role rows."""
+        terms = sorted({m["value"] for m in members if m["kind"] == "term"})
+        prefixes = [m["prefix"] for m in members if m["kind"] == "glob"]
+        if not prefixes:
+            return self._term_pred(terms)
+        if not all(prefixes):
+            return None
+        parts = [F.col("term").isin(terms)] if terms else []
+        parts += [F.col("term").startswith(p) for p in sorted(set(prefixes))]
+        return functools.reduce(operator.or_, parts)
+
+    def _compile(self, plans: dict[str, QueryPlan]) -> DataFrame:
+        """The one compile step of every top-k query: a batch of plans →
+        posting rows carrying their role columns (query_id, idf, gmask,
+        is_neg, is_phrase), grp attached.
+
+        The plans become ONE JSON pattern literal (constant-folded by
+        ``from_json``). term_stats is scanned once; each stats row
+        ``inline``s the patterns into one role row per query whose
+        members match it (:data:`_ROLE_ROWS`), so glob expansion stays
+        JVM-side and never reaches the driver. The role rows ride a
+        broadcast join onto the posting scan, pruned like the stats
+        scan (:meth:`_scan_pred`); a term shared by several queries
+        fans out one posting row per query."""
+        patterns = [{"query_id": qid, "members": _members(plan)}
+                    for qid, plan in plans.items()]
+        pred = self._scan_pred([m for q in patterns for m in q["members"]])
+        stats, postings = (
+            df if pred is None else df.where(pred)
+            for df in (self.term_stats, self.postings)
+        )
+        # a SQL string literal: JSON's own escape for quotes, and every
+        # backslash doubled
+        literal = json.dumps(patterns).replace("'", "\\u0027")
+        roles = stats.select("term", "idf", F.expr(
+            _ROLE_ROWS % literal.replace("\\", "\\\\")
+        ))
+        positions = any(p.phrases or p.nears for p in plans.values())
         cols = _SCORING_COLS + (["positions", "pos_offsets"] if positions else [])
         return self._with_grp(
-            postings.select(*cols).join(F.broadcast(members), "term")
+            postings.select(*cols).join(F.broadcast(roles), "term")
         )
+
+    def _scorer(self, plan: QueryPlan, k: int) -> Kernel:
+        return wand.make_composed_scorer(
+            len(plan.groups), plan.phrases, self.avgdl, k, nears=plan.nears,
+            deleted=self.deleted,
+        )
+
+    def _top(self, plan: QueryPlan, k: int) -> DataFrame:
+        """One compiled query → (rank, doc_id, score)."""
+        return _ranked_top(self._compile({"": plan}), self._scorer(plan, k), k)
+
+    def _many(self, plans: dict[str, QueryPlan], k: int) -> DataFrame:
+        """A compiled batch → (query_id, rank, doc_id, score), one job."""
+        if not plans:
+            return self.spark.createDataFrame([], _MANY_SCHEMA)
+        scorers = {qid: self._scorer(plan, k) for qid, plan in plans.items()}
+        return _ranked_many(self._compile(plans), scorers, k)
 
     def _match_docs(self, terms: list[str],
                     hits: Callable[[object], np.ndarray]) -> DataFrame:
@@ -392,9 +434,9 @@ class Searcher:
         scoring group's posting rows to its matching doc ids (it ships
         to the workers, so it closes over plain values only); tombstoned
         docs are dropped in the kernel."""
-        rows = self._with_grp(
-            self._pruned(self.postings, list(dict.fromkeys(terms))).drop("bucket")
-        )
+        rows = self._with_grp(self.postings.where(
+            self._term_pred(list(dict.fromkeys(terms)))
+        ).drop("bucket"))
         deleted = self.deleted
 
         def match_segment(run: object) -> tuple:
@@ -458,22 +500,14 @@ class Searcher:
              with_urls: bool = False,
              with_snippets: bool = False) -> DataFrame:
         """Top-k (rank, doc_id, score), rank-identical to the full-scan
-        query.bm25.bm25_topk over the same corpus.
+        query.bm25.bm25_topk over the same corpus, in a single Spark job.
 
-        Single Spark job: idf rides a broadcast stats join instead of a
-        separate driver lookup (a vocab-absent term simply joins to
-        nothing; the conjunctive scorer already returns empty when a
-        term's list is missing from its group)."""
+        The distinct terms compile to one OR group, or with
+        ``conjunctive`` to one group per term (so at most 62 of them). A
+        vocabulary-absent term matches no stats row: it adds nothing to
+        an OR query and leaves an AND query's group uncovered (empty)."""
         uniq = list(dict.fromkeys(terms))
-        stats = self._pruned(self.term_stats, uniq).select("term", "idf")
-        rows = self._with_grp(
-            self._pruned(self.postings, uniq)
-            .select(*_SCORING_COLS)
-            .join(F.broadcast(stats), "term")
-        )
-        out = _ranked_top(rows, wand.make_segment_scorer(
-            uniq, self.avgdl, k, conjunctive, deleted=self.deleted
-        ), k)
+        out = self._top(_terms_plan(uniq, conjunctive), k)
         if with_urls or with_snippets:
             return self.attach_urls(
                 out, snippet_terms=uniq if with_snippets else None
@@ -485,33 +519,14 @@ class Searcher:
         (query_id, rank, doc_id, score).
 
         The per-query latency floor at local[*] is the Arrow kernel
-        round trip (~0.3 s regardless of data); batching amortizes it —
-        the rows of each query's terms are tagged with query_id via a
-        broadcast join (a term shared by multiple queries fans out one
-        row per query), one exchange co-locates (grp), and the scorer
-        runs the MaxScore kernel per (query, group). Each query's
-        result is rank-identical to :meth:`topk` (asserted by tests).
-        """
-        qitems = [(qid, t) for qid, terms in queries.items()
-                  for t in dict.fromkeys(terms)]
-        if not qitems:
-            return self.spark.createDataFrame([], _MANY_SCHEMA)
-        qterms = self.spark.createDataFrame(
-            qitems, "query_id string, term string"
-        )
-        all_terms = sorted({t for _, t in qitems})
-        stats = self._pruned(self.term_stats, all_terms).select("term", "idf")
-        rows = self._with_grp(
-            self._pruned(self.postings, all_terms)
-            .select(*_SCORING_COLS)
-            .join(F.broadcast(qterms), "term")
-            .join(F.broadcast(stats), "term")
-        )
-        terms_by_query = {qid: list(dict.fromkeys(t)) for qid, t in queries.items()}
-        avgdl, deleted = self.avgdl, self.deleted
-        return _ranked_many(rows, lambda qid: wand.make_segment_scorer(
-            terms_by_query[qid], avgdl, k, False, deleted=deleted,
-        ), k)
+        round trip (~0.3 s regardless of data); batching amortizes it.
+        Each query compiles to one OR group and the whole batch to one
+        pattern literal (:meth:`_compile`): one term_stats scan, one
+        posting scan, one exchange co-locating (grp), and the composed
+        MaxScore kernel per (query, group). Each query's result is
+        rank-identical to :meth:`topk` (asserted by tests)."""
+        return self._many({qid: _terms_plan(terms, False)
+                           for qid, terms in queries.items() if terms}, k)
 
     def composed_topk(self, groups: list[Members],
                       negations: Members | None = None,
@@ -523,28 +538,15 @@ class Searcher:
         minus negations, constrained by phrases and proximity windows).
 
         Fully distributed glob expansion: the matched vocabulary never
-        reaches the driver — term_stats rows matching any member
-        predicate are broadcast-joined onto the posting scan,
-        delivering idf and the per-term role flags as columns. (The
+        reaches the driver — the compiled role rows are the term_stats
+        rows matching some member, broadcast onto the posting scan. (The
         broadcast side is the MATCHED vocabulary — query-sized for
         explicit terms, at worst vocab-subset-sized for short-prefix
         globs; the posting side is never shuffled before the grp
         exchange.)"""
-        negations = negations or []
-        phrases = phrases or []
-        nears = nears or []
-        pos_words = _position_words(phrases, nears)
-        if not groups and not pos_words:
-            raise ValueError("composed query has no positive constraint")
-        members = build_members(self.term_stats, groups, negations, pos_words)
-        all_members = ([m for g in groups for m in g] + negations
-                       + [("term", w) for w in pos_words])
-        rows = self._member_rows([all_members], members,
-                                 positions=bool(phrases or nears))
-        return _ranked_top(rows, wand.make_composed_scorer(
-            len(groups), phrases, self.avgdl, k, nears=nears,
-            deleted=self.deleted,
-        ), k)
+        plan = QueryPlan(groups=groups, phrases=phrases or [],
+                         negations=negations or [], nears=nears or [])
+        return self._top(_checked(plan), k)
 
     def glob_topk(self, glob: str, k: int = 10) -> DataFrame:
         """Glob-pattern top-k: one single-member group through the
@@ -561,65 +563,26 @@ class Searcher:
         Snippets use the query's literal positive terms plus its phrase
         words (a glob's matched vocabulary is per-doc, so glob-only
         queries yield NULL snippets by the closed-form rule)."""
-        plan = parse_query(query)
-        if not plan.groups and not plan.phrases and not plan.nears:
-            raise ValueError(f"query has no positive constraint: {query!r}")
-        out = self.composed_topk(
-            groups=plan.groups, negations=plan.negations,
-            phrases=plan.phrases, k=k, nears=plan.nears,
-        )
+        plan = _checked(parse_query(query), query)
+        out = self._top(plan, k)
         if with_urls or with_snippets:
             terms = None
             if with_snippets:
                 terms = list(dict.fromkeys(
-                    plan.positive_terms
-                    + [w for p in plan.phrases for w in p]
-                    + plan.near_words
+                    plan.positive_terms + _position_words(plan)
                 ))
             return self.attach_urls(out, snippet_terms=terms)
         return out
 
     def search_many(self, queries: dict[str, str], k: int = 10) -> DataFrame:
         """MANY glug-dialect query strings in ONE Spark job:
-        (query_id, rank, doc_id, score). The composed analog of
-        :meth:`topk_many` — per-query role columns ride one unioned
-        broadcast members table; the exact filtered MaxScore kernel
+        (query_id, rank, doc_id, score). The parsed plans compile
+        together (:meth:`_compile`) — one pattern literal, one term_stats
+        scan, one posting scan — and the exact filtered MaxScore kernel
         runs per (query, doc-group). Each slice is rank-identical to
         :meth:`search` (asserted by tests)."""
-        plans = {}
-        for qid, q in queries.items():
-            plan = parse_query(q)
-            if not plan.groups and not plan.phrases and not plan.nears:
-                raise ValueError(f"query has no positive constraint: {q!r}")
-            plans[qid] = plan
-        if not plans:
-            return self.spark.createDataFrame([], _MANY_SCHEMA)
-
-        members = None
-        member_lists = []
-        for qid, plan in plans.items():
-            pw = _position_words(plan.phrases, plan.nears)
-            m = build_members(
-                self.term_stats, plan.groups, plan.negations, pw
-            ).withColumn("query_id", F.lit(qid))
-            members = m if members is None else members.unionByName(m)
-            member_lists.append(
-                [mm for g in plan.groups for mm in g] + plan.negations
-                + [("term", w) for w in pw]
-            )
-        rows = self._member_rows(
-            member_lists, members,
-            positions=any(p.phrases or p.nears for p in plans.values()),
-        )
-        meta = {
-            qid: (len(plan.groups), plan.phrases, plan.nears)
-            for qid, plan in plans.items()
-        }
-        avgdl, deleted = self.avgdl, self.deleted
-        return _ranked_many(rows, lambda qid: wand.make_composed_scorer(
-            meta[qid][0], meta[qid][1], avgdl, k, nears=meta[qid][2],
-            deleted=deleted,
-        ), k)
+        return self._many({qid: _checked(parse_query(q), q)
+                           for qid, q in queries.items()}, k)
 
     def phrase_docs(self, phrase: list[str]) -> DataFrame:
         """doc_ids containing the exact adjacent-token phrase, sorted;

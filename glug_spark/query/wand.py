@@ -13,22 +13,20 @@ matching 128-posting blocks of ALL those terms' rows at once and
 decodes them with one varbyte pass per column
 (:class:`glug_spark.index.codec.PostingBlocks`).
 
-Inside a group (vectorized):
+Inside a group (vectorized), every top-k query runs ONE scorer,
+:func:`make_composed_scorer`: MaxScore under filters.
 
-- conjunctive: block-level skip — only blocks whose doc ranges can
-  intersect every term's covered range are decoded, then exact id
-  intersection, full scoring.
-- disjunctive: MaxScore — score the highest-upper-bound term's docs
-  exactly to seed the threshold θ; terms whose upper-bound suffix sum
-  < θ become non-essential; only docs present in essential lists can
-  enter the top-k (docs absent from all essential lists are bounded by
+- MaxScore — score the highest-upper-bound term's docs exactly to seed
+  the threshold θ; terms whose upper-bound suffix sum < θ become
+  non-essential; only docs present in essential lists can enter the
+  top-k (docs absent from all essential lists are bounded by
   Σ non-essential ubs < θ). Exact, with whole lists of frequent terms
   skipped at the candidate-generation stage.
-- composed (``make_composed_scorer``): group/negation/phrase filters
-  are applied INSIDE the scorer, before θ-seeding and before the
-  per-group top-k — the returned top-k is exact under filtering (no
-  heuristic candidate pool; a selective filter can never starve the
-  result).
+- group (AND of OR groups; a plain AND query is one group per term),
+  negation, phrase, NEAR and tombstone filters are applied INSIDE the
+  scorer, before θ-seeding and before the per-group top-k — the
+  returned top-k is exact under filtering (no heuristic candidate pool;
+  a selective filter can never starve the result).
 - phrase / NEAR matching (:func:`phrase_hits`, :func:`near_hits`):
   doc-id intersection first, then block-selective position decode over
   the candidates only.
@@ -109,27 +107,6 @@ class PostingRun:
         if targets is not None:
             blocks = self.blocks.covering(blocks, targets)
         return self._split(blocks, terms, codes, positions)
-
-    def conjunctive(self, terms: list[str]) -> dict[str, dict] | None:
-        """Block-skip decode for AND queries (None when a term has no
-        posting here): a term's block is decoded only if its doc range
-        can intersect every other term's covered range.
-
-        The candidate doc range is [lo, hi] where lo = max over terms of
-        the term's smallest covered doc_id (true first id, decoded from
-        each run's first varbyte — no sentinel) and hi = min over terms
-        of the term's largest covered doc_id. Blocks outside [lo, hi]
-        are skipped without touching their bytes."""
-        if not all(self.has(t) for t in terms):
-            return None
-        codes = [self._code[t] for t in terms]
-        first, last = self.blocks.first(), self.blocks.last
-        lo = max(int(first[self.block_term == c].min()) for c in codes)
-        hi = min(int(last[self.block_term == c].max()) for c in codes)
-        blocks = np.flatnonzero(
-            np.isin(self.block_term, codes) & (last >= lo) & (first <= hi)
-        )
-        return self._split(blocks, terms, codes, False)
 
     def _split(self, blocks: np.ndarray, terms: list[str], codes: list[int],
                positions: bool) -> dict[str, dict]:
@@ -253,47 +230,6 @@ def _local_topk(cand: np.ndarray, scores: np.ndarray, k: int) -> Scored:
         order = np.lexsort((cand, -scores))[:k]
         cand, scores = cand[order], scores[order]
     return cand.astype(np.int64), scores.astype(np.float64)
-
-
-def make_segment_scorer(
-    terms: list[str], avgdl: float, k: int, conjunctive: bool,
-    deleted: "object | None" = None,
-) -> "Callable[[object], Scored]":
-    """Plain top-k scorer for one doc-space group's Arrow rows; idf is
-    read from the rows' ``idf`` column (stats delivered by a broadcast
-    join — saves a separate stats-lookup job). ``deleted`` is the
-    sorted tombstone set (merge-on-read) — a plain array or a Spark
-    Broadcast of it (see deletes.resolve_deleted): filtered BEFORE
-    θ-seeding and top-k selection, so a deleted doc can neither appear
-    nor shadow a live doc out of the exact top-k."""
-    uniq_terms = list(dict.fromkeys(terms))
-
-    def score_segment(batch: "object") -> Scored:
-        run = PostingRun(batch)
-        tombs = resolve_deleted(deleted)
-        idfs = run.meta("idf")
-        if not conjunctive:
-            tomb_filter = (
-                None if tombs is None
-                else (lambda cand, lists: not_deleted_mask(tombs, cand))
-            )
-            cand, scores = _maxscore_pass(
-                run, run.terms, idfs, avgdl, k, passes_filter=tomb_filter
-            )
-            return _local_topk(cand, scores, k)
-        lists = run.conjunctive(uniq_terms)
-        if lists is None or any(not len(p["ids"]) for p in lists.values()):
-            return _empty()
-        present = list(lists.values())
-        cand = present[0]["ids"]
-        for p in present[1:]:
-            cand = cand[np.isin(cand, p["ids"], assume_unique=True)]
-        if tombs is not None:
-            cand = cand[not_deleted_mask(tombs, cand)]
-        scores = _score_candidates(cand, lists, idfs, avgdl)
-        return _local_topk(cand, scores, k)
-
-    return score_segment
 
 
 def _candidates(lists: dict[str, dict], words: list[str]) -> np.ndarray:

@@ -204,25 +204,22 @@ def test_posting_blocks_match_reference(runs, data):
 
 @given(_encoded_runs(), st.lists(st.integers(0, 2**40), max_size=50))
 @settings(max_examples=40, deadline=None)
-def test_posting_blocks_covering_and_first(runs, targets):
+def test_posting_blocks_covering(runs, targets):
     """``covering`` keeps exactly the blocks the per-row searchsorted
-    rule picks; ``first`` is each row's true first id at block 0 and
-    block_last[b-1] + 1 after."""
+    rule picks."""
     encs = [r[0] for r in runs]
     pb = codec.PostingBlocks(_runs_batch(encs))
     targets = np.unique(np.array(targets + [int(r[1][-1]) for r in runs],
                                  dtype=np.int64))
-    want, first = [], []
+    want = []
     g = 0
-    for enc, ids, _ in runs:
+    for enc, _, _ in runs:
         last = np.asarray(enc["block_last"], dtype=np.int64)
         hit = np.unique(np.searchsorted(last, targets, side="left"))
         want += (g + hit[hit < len(last)]).tolist()
-        first += [int(ids[0])] + (last[:-1] + 1).tolist()
         g += len(last)
     everything = np.arange(g)
     assert pb.covering(everything, targets).tolist() == want
-    assert pb.first().tolist() == first
     assert pb.covering(everything[:0], targets).size == 0
 
 

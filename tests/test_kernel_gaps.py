@@ -7,7 +7,7 @@ import numpy as np
 import pyarrow as pa
 
 from glug_spark.index import codec
-from glug_spark.query.parser import glob_regexes, parse_query
+from glug_spark.query.parser import parse_query
 from glug_spark.semantics.lines import read_lines
 from glug_spark.semantics.tokenize import tokenize_with_positions
 from glug_spark.semantics.typetags import TypetagDatabase
@@ -31,16 +31,11 @@ def test_parser_unclosed_quote_keeps_tail():
     assert plan.groups == [[("term", "foo")]]
 
 
-def test_parser_plan_properties_and_glob_regexes():
+def test_parser_plan_properties():
     plan = parse_query("data dat* -tmp*")
     assert plan.positive_terms == ["data"]
     assert plan.positive_globs == ["dat*"]
-    regs = glob_regexes(plan)
-    assert set(regs) == {"dat*", "tmp*"}
-    import re
-
-    assert re.fullmatch(regs["dat*"], "database")
-    assert not re.fullmatch(regs["dat*"], "da/t")
+    assert plan.negations == [("glob", "tmp*")]
 
 
 def test_typetag_expand_expression_and_bool():

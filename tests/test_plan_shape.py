@@ -100,6 +100,37 @@ def test_search_many_scan_pruned(spark, plan_index):
     assert "In(term," in plan2
 
 
+def _term_stats_scans(plan: str) -> int:
+    return len(re.findall(
+        r"\n\(\d+\) Scan parquet[^\n]*\n"
+        r"Output \[\d+\]: [^\n]*\nBatched: \w+\n"
+        r"Location: InMemoryFileIndex \[[^\]]*/term_stats\]", plan))
+
+
+def test_batches_compile_to_one_term_stats_scan(spark, plan_index):
+    """A batch compiles to ONE pattern literal: the plan of 64 composed
+    queries scans term_stats once (not once per query), and no batch
+    plan holds a parallelized driver-side table (ExistingRDD)."""
+    words = ["data", "join", "scan", "table", "merge", "the", "noise", "dup"]
+    texts = {
+        f"q{i:02d}": (f"{words[i % 8]},{words[(i * 3 + 1) % 8]} "
+                      f"{words[(i + 2) % 8][:2]}* -{words[(i + 5) % 8]}"
+                      + (f' "{words[i % 8]} {words[(i + 1) % 8]}"'
+                         if i % 4 == 0 else ""))
+        for i in range(64)
+    }
+    terms = {f"t{i:02d}": [words[i % 8], words[(i * 5 + 3) % 8]]
+             for i in range(64)}
+    with Searcher(spark, plan_index, n_buckets=8, persist=False) as s:
+        many = _formatted(s.search_many(texts, k=10))
+        plain = _formatted(s.search_many({"a": "data join", "b": "scan"}))
+        topk_many = _formatted(s.topk_many(terms, k=10))
+    assert "Location: InMemoryFileIndex" in many, many
+    for plan in (many, plain, topk_many):
+        assert _term_stats_scans(plan) == 1, plan
+        assert "ExistingRDD" not in plan, plan
+
+
 def test_ivf_assignment_shuffle_free(spark):
     """Nearest-centroid assignment must be a per-row argmax over the
     broadcast centroid array — NO shuffle Exchange anywhere in the

@@ -130,6 +130,98 @@ def test_search_many_matches_individual(spark, searcher):
         assert got == want, (qid, q)
 
 
+def _fields(df):
+    return [(f.name, f.dataType.simpleString(), f.nullable)
+            for f in df.schema]
+
+
+def test_empty_queries_return_empty(searcher):
+    """No terms is an empty answer, not an error, with the schema of a
+    real answer (topk) or of the empty batch (topk_many)."""
+    for conjunctive in (False, True):
+        df = searcher.topk([], k=10, conjunctive=conjunctive)
+        assert _fields(df) == [("rank", "int", False),
+                               ("doc_id", "bigint", True),
+                               ("score", "double", True)]
+        assert df.collect() == []
+    for df in (searcher.topk_many({}, k=10),
+               searcher.topk_many({"q": []}, k=10),
+               searcher.search_many({}, k=10)):
+        assert _fields(df) == [("query_id", "string", True),
+                               ("rank", "int", True),
+                               ("doc_id", "bigint", True),
+                               ("score", "double", True)]
+        assert df.collect() == []
+
+
+def test_topk_absent_and_repeated_terms(spark, searcher):
+    """A vocabulary-absent term adds nothing to an OR query and empties
+    an AND query; a repeated term counts once in both."""
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+
+    def full_scan(terms, conjunctive):
+        return [tuple(r) for r in bm25.bm25_topk(
+            docs, terms, k=10, conjunctive=conjunctive).collect()]
+
+    def index(terms, conjunctive):
+        return [tuple(r) for r in searcher.topk(
+            terms, k=10, conjunctive=conjunctive).collect()]
+
+    assert index(["nosuchterm", "data", "data"], False) == full_scan(
+        ["data"], False)
+    # quotes, backslashes and % survive the compiled pattern literal
+    assert index(["o'k", "data", "a\\b", "x%sy"], False) == full_scan(
+        ["data"], False)
+    assert index(["nosuchterm", "data"], True) == []
+    assert index(["data", "join", "data"], True) == full_scan(
+        ["data", "join"], True)
+    assert index(["join", "data", "join"], False) == full_scan(
+        ["data", "join"], False)
+
+
+def _no_job_runs(spark, call):
+    """Run ``call`` in a fresh job group; return the group's job ids."""
+    import uuid
+
+    sc, group = spark.sparkContext, f"glug_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counts the jobs of one call")
+    try:
+        call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_search_over_62_conjuncts_raises_before_any_job(spark, searcher):
+    """The group bitmask is a long: 63 conjuncts raise ValueError on
+    the driver, before any Spark job is scheduled."""
+    query = " ".join(f"w{i}" for i in range(63))
+
+    def call():
+        with pytest.raises(ValueError, match="max 62"):
+            searcher.search(query, k=10)
+
+    assert _no_job_runs(spark, call) == []
+    assert _no_job_runs(spark, searcher.search("data", k=10).collect)
+    searcher.search(" ".join(f"w{i}" for i in range(62)), k=10)
+
+
+def test_conjunctive_topk_over_62_terms_raises(spark, searcher):
+    """A conjunctive topk is one group per distinct term, so it shares
+    the 62-group limit: 63 distinct terms raise before any job, 62
+    (repeats counted once) are answered."""
+    terms = [f"w{i}" for i in range(63)]
+
+    def call():
+        with pytest.raises(ValueError, match="max 62"):
+            searcher.topk(terms, k=10, conjunctive=True)
+
+    assert _no_job_runs(spark, call) == []
+    assert searcher.topk(["data"] * 2 + terms[:61], k=10,
+                         conjunctive=True).collect() == []
+    assert searcher.topk(terms, k=10).collect() == []
+
+
 def test_searcher_on_stream_ingested_index(spark, tmp_path):
     """A Searcher opened AFTER ingestion sees the union corpus and is
     rank-identical to the full scan (snapshot semantics: open after

@@ -1,14 +1,18 @@
 #!/usr/bin/env python
-"""Extended differential fuzz of the composed query engine.
+"""Extended differential fuzz of the index query compiler.
 
-Random corpora × random composed queries (groups, globs, negated globs,
-multi-phrases), compared across FOUR implementations that must agree
-exactly:
+Random corpora × random composed queries (groups, prefixed, prefixless
+and ``?`` globs, negated globs, multi-phrases, ordered and unordered
+NEAR), compared across FOUR implementations that must agree exactly:
 
   1. full-scan executor (execute.search)
   2. index path (Searcher.search) — uncompacted
   3. index path after compaction (mixed / fully-merged layouts)
   4. batched path (Searcher.search_many) slices
+
+Each corpus also draws plain term lists (repeats and a vocabulary-absent
+term included) and compares Searcher.topk, conjunctive topk and
+topk_many slices against the full-scan bm25.bm25_topk.
 
 Not part of the default suite (runtime-heavy); run ad hoc:
     python tools/fuzz_search.py [n_corpora] [queries_per_corpus] [seed0]
@@ -39,23 +43,51 @@ def random_docs(rng: random.Random, n: int):
     return rows
 
 
+def random_glob(rng: random.Random, word: str) -> str:
+    """A glob matching ``word``: a prefix (``da*``), a prefixless suffix
+    (``*ta``) or one ``?`` in place of a letter (``d?ta``)."""
+    kind = rng.choice(["prefix", "prefix", "suffix", "single"])
+    if kind == "prefix":
+        return word[: rng.randint(1, 2)] + "*"
+    if kind == "suffix":
+        return "*" + word[-rng.randint(1, 2):]
+    i = rng.randrange(len(word))
+    return word[:i] + "?" + word[i + 1:]
+
+
 def random_query(rng: random.Random) -> str:
     parts = []
     for _ in range(rng.randint(1, 3)):
         members = rng.sample(VOCAB, rng.randint(1, 3))
         if rng.random() < 0.35:
-            members[0] = members[0][: rng.randint(1, 2)] + "*"
+            members[0] = random_glob(rng, members[0])
         parts.append(",".join(members))
     for _ in range(rng.randint(0, 2)):
         neg = rng.choice(VOCAB)
         if rng.random() < 0.3:
-            neg = neg[:2] + "*"
+            neg = random_glob(rng, neg)
         parts.append("-" + neg)
     for _ in range(rng.randint(0, 2)):
-        words = rng.sample(VOCAB, rng.randint(2, 3))
-        parts.append('"' + " ".join(words) + '"')
+        if rng.random() < 0.4:
+            a, b = rng.sample(VOCAB, 2)
+            op = rng.choice(["~", "~>"])
+            parts.append(f'"{a} {b}"{op}{rng.randint(1, 4)}')
+        else:
+            words = rng.sample(VOCAB, rng.randint(2, 3))
+            parts.append('"' + " ".join(words) + '"')
     rng.shuffle(parts)
     return " ".join(parts)
+
+
+def random_terms(rng: random.Random) -> list[str]:
+    """A plain term list: 1-4 vocabulary terms, sometimes a repeat or a
+    term absent from every corpus."""
+    terms = rng.sample(VOCAB, rng.randint(1, 4))
+    if rng.random() < 0.3:
+        terms.append(rng.choice(terms))
+    if rng.random() < 0.2:
+        terms.insert(rng.randrange(len(terms) + 1), "nosuchterm")
+    return terms
 
 
 def main() -> int:
@@ -65,6 +97,7 @@ def main() -> int:
 
     from glug_spark.index.compact import compact_index
     from glug_spark.index.pipeline import build_index
+    from glug_spark.query import bm25
     from glug_spark.query.execute import search
     from glug_spark.query.searcher import Searcher
     from glug_spark.session import get_spark
@@ -131,6 +164,30 @@ def main() -> int:
                     bad += 1
                     print(f"DIVERGE corpus={c} search_many q={q!r}\n"
                           f"  want={expected}\n  got ={got}")
+
+            term_lists = {f"t{i}": random_terms(rng) for i in range(n_queries)}
+            with Searcher(spark, f"{tmp}/index", persist=False) as s:
+                many = s.topk_many(term_lists, k=7).collect()
+                for qid, terms in term_lists.items():
+                    for conj in (False, True):
+                        checked += 1
+                        want = [tuple(r) for r in bm25.bm25_topk(
+                            stored, terms, k=7, conjunctive=conj).collect()]
+                        got = [tuple(r) for r in s.topk(
+                            terms, k=7, conjunctive=conj).collect()]
+                        if got != want:
+                            bad += 1
+                            print(f"DIVERGE corpus={c} topk conjunctive={conj}"
+                                  f" terms={terms}\n  want={want}\n  got ={got}")
+                    checked += 1
+                    got = sorted((r["rank"], r["doc_id"], r["score"])
+                                 for r in many if r["query_id"] == qid)
+                    want = [tuple(r) for r in bm25.bm25_topk(
+                        stored, terms, k=7).collect()]
+                    if got != want:
+                        bad += 1
+                        print(f"DIVERGE corpus={c} topk_many terms={terms}\n"
+                              f"  want={want}\n  got ={got}")
 
             compact_index(spark, f"{tmp}/index",
                           min_run=rng.choice([8, 1000]),
