@@ -301,6 +301,13 @@ def _pos_deltas(p: np.ndarray) -> np.ndarray:
     return d
 
 
+#: the posting-row columns :func:`encode_runs_table` produces, one
+#: value per run
+RUN_COLUMNS = ("df_local", "cf_local", "doc_gaps", "tfs", "dls",
+               "positions", "block_last", "block_max_tf", "gap_offsets",
+               "tf_offsets", "dl_offsets", "pos_offsets")
+
+
 def encode_runs_table(
     term_codes: np.ndarray,
     doc_ids: np.ndarray,
@@ -324,15 +331,12 @@ def encode_runs_table(
     to :func:`encode_segment` output (gaps restart at each term run).
 
     Returns a columnar dict: ``run_start`` (np.ndarray) plus one list
-    per output column, aligned by run index.
+    per :data:`RUN_COLUMNS` output column, aligned by run index;
+    ``cf_local`` is each run's tf sum.
     """
     n = len(term_codes)
-    empty_cols = {
-        "run_start": np.zeros(0, np.int64), "df_local": [], "doc_gaps": [],
-        "tfs": [], "dls": [], "positions": [], "block_last": [],
-        "block_max_tf": [], "gap_offsets": [], "tf_offsets": [],
-        "dl_offsets": [], "pos_offsets": [],
-    }
+    empty_cols = {"run_start": np.zeros(0, np.int64),
+                  **{c: [] for c in RUN_COLUMNS}}
     if n == 0:
         return empty_cols
     starts = np.flatnonzero(np.diff(term_codes, prepend=term_codes[0] - 1))
@@ -396,6 +400,7 @@ def encode_runs_table(
     out = dict(empty_cols)
     out["run_start"] = starts
     out["df_local"] = run_lens.tolist()
+    out["cf_local"] = np.add.reduceat(tfs.astype(np.int64), starts).tolist()
     out["doc_gaps"] = [gblob[gcum[s]:gcum[e]] for s, e in zip(starts, ends)]
     out["tfs"] = [tblob[tcum[s]:tcum[e]] for s, e in zip(starts, ends)]
     out["dls"] = [dblob[dcum[s]:dcum[e]] for s, e in zip(starts, ends)]
@@ -419,6 +424,17 @@ def encode_runs_table(
         pos_off_all[a:b].tolist() for a, b in zip(run_b0, run_b1)
     ]
     return out
+
+
+def runs_to_arrow(runs: dict, schema: "object") -> "dict[str, object]":
+    """:data:`RUN_COLUMNS` of an :func:`encode_runs_table` result as
+    Arrow arrays, each typed like the same-named field of ``schema``
+    (so blobs come out ``large_binary`` when the input batch uses
+    Spark's ``arrow.useLargeVarTypes``)."""
+    import pyarrow as pa
+
+    return {c: pa.array(runs[c], type=schema.field(c).type)
+            for c in RUN_COLUMNS}
 
 
 def encode_runs(

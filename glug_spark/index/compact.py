@@ -41,13 +41,18 @@ tail runs and is skew-free (head terms skip the merge entirely).
 from __future__ import annotations
 
 import os
-import shutil
 
 import numpy as np
 from pyspark.sql import SparkSession, functions as F
 
 from glug_spark.index import codec
-from glug_spark.index.pipeline import ENCODED_SCHEMA
+from glug_spark.index.pipeline import (
+    ENCODED_SCHEMA,
+    dir_bytes,
+    read_params,
+    swap_dir,
+    write_postings,
+)
 
 SEGMAP_DIR = "segmap"
 
@@ -100,43 +105,21 @@ def _merge_rows_arrow(rows: "pa.RecordBatch",
     runs = codec.encode_runs_table(
         g_of_post[order], ids[order], tfs_o, dls[order], pos_merged
     )
-    cf = np.add.reduceat(tfs_o, runs["run_start"])
     head = pa.array(gstarts, type=pa.int64())
     n_groups = len(gstarts)
     grp = rows.column("grp").to_numpy(zero_copy_only=False).astype(np.int64)
-    built = {
+    built = codec.runs_to_arrow(runs, rows.schema)
+    built.update({
         "bucket": pc.take(rows.column("bucket"), head),
         "term": pc.take(rows.column("term"), head),
         "segment": pa.array(grp[gstarts], type=pa.int64()),
-        "df_local": pa.array(runs["df_local"], type=pa.int64()),
-        "cf_local": pa.array(cf.astype(np.int64), type=pa.int64()),
-        "doc_gaps": pa.array(runs["doc_gaps"], type=pa.binary()),
-        "tfs": pa.array(runs["tfs"], type=pa.binary()),
-        "dls": pa.array(runs["dls"], type=pa.binary()),
-        "positions": pa.array(runs["positions"], type=pa.binary()),
-        "block_last": pa.array(runs["block_last"],
-                               type=pa.list_(pa.int64())),
-        "block_max_tf": pa.array(runs["block_max_tf"],
-                                 type=pa.list_(pa.int64())),
-        "gap_offsets": pa.array(runs["gap_offsets"],
-                                type=pa.list_(pa.int64())),
-        "tf_offsets": pa.array(runs["tf_offsets"],
-                               type=pa.list_(pa.int64())),
-        "dl_offsets": pa.array(runs["dl_offsets"],
-                               type=pa.list_(pa.int64())),
-        "pos_offsets": pa.array(runs["pos_offsets"],
-                                type=pa.list_(pa.int64())),
         "lineage": pa.nulls(n_groups, type=rows.schema.field("lineage").type),
         "n_docs_batch": pa.array(np.zeros(n_groups, np.int64),
                                  type=pa.int64()),
-    }
-    arrays = [
-        built[n].cast(rows.schema.field(n).type)
-        if built[n].type != rows.schema.field(n).type else built[n]
-        for n in names
-    ]
+    })
     return pa.RecordBatch.from_arrays(
-        arrays, schema=pa.schema([rows.schema.field(n) for n in names])
+        [built[n] for n in names],
+        schema=pa.schema([rows.schema.field(n) for n in names]),
     )
 
 
@@ -388,38 +371,17 @@ def compact_index(
     before = enc.count()
     cols = [f.name for f in ENCODED_SCHEMA]
     tmp = os.path.join(index_dir, "postings_compacted")
-    from glug_spark.index.pipeline import (
-        consolidate_for_bucket_write,
-        dir_bytes,
-        read_params,
-    )
-
     n_buckets = int(read_params(spark, index_dir)["n_buckets"])
-    out_rows = consolidate_for_bucket_write(
-        untouched.select(cols).unionByName(merged.select(cols)),
-        n_buckets=n_buckets,
-        est_bytes=dir_bytes(src),
-    )
-    (
-        out_rows
-        .sortWithinPartitions("bucket", "term")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(tmp)
-    )
+    write_postings(untouched.select(cols).unionByName(merged.select(cols)),
+                   tmp, n_buckets, est_bytes=dir_bytes(src))
     after = spark.read.parquet(tmp).count()
 
     # --- 3. publish: segmap first (it is correct for BOTH layouts — the
     # old rows also group consistently under the coarser map), then swap
     segmap_tmp = os.path.join(index_dir, SEGMAP_DIR + "_tmp")
     segmap_df.write.mode("overwrite").parquet(segmap_tmp)
-    segmap_path = os.path.join(index_dir, SEGMAP_DIR)
-    if os.path.exists(segmap_path):
-        shutil.rmtree(segmap_path)
-    os.rename(segmap_tmp, segmap_path)
-
-    shutil.rmtree(src)
-    os.rename(tmp, src)
+    swap_dir(segmap_tmp, os.path.join(index_dir, SEGMAP_DIR))
+    swap_dir(tmp, src)
     return {
         "rows_before": before,
         "rows_after": after,

@@ -45,14 +45,23 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from glug_spark.index import codec
-from glug_spark.index.pipeline import ENCODED_SCHEMA, bucket_col
+from glug_spark.index.pipeline import (
+    ENCODED_SCHEMA,
+    dir_bytes,
+    docmap_n_buckets,
+    read_docmap,
+    read_params,
+    swap_dir,
+    write_postings,
+)
 
 DELETES_DIR = "deletes"
 #: append-only ledger of physical purges: (purge_id, n_docs_removed).
 #: n_docs accounting everywhere is ``params + stream manifest − ledger``
 #: — the manifest rows and build params are immutable lineage, so the
-#: ledger is the ONLY record that docs left the index. refresh_stats
-#: subtracts it; without that, the first post-purge ingest would fold
+#: ledger is the ONLY record that docs left the index. The stats
+#: writers of ``streaming.ingest`` subtract it; without that, the first
+#: post-purge ingest would fold
 #: stats against the pre-purge n_docs and silently resurrect the
 #: purged docs in every idf.
 PURGE_LEDGER = "purge_ledger"
@@ -110,7 +119,6 @@ def delete_by_url_glob(spark: SparkSession, index_dir: str,
     One column-pruned scan of the docmap's (doc_id, url) columns; the
     matched ids flow straight into the tombstone append without ever
     being collected to the driver."""
-    from glug_spark.index.pipeline import read_docmap
     from glug_spark.semantics.glob import full_match_regex
 
     dm = read_docmap(spark, index_dir)
@@ -173,34 +181,6 @@ def resolve_deleted(deleted: object) -> "np.ndarray | None":
         return None
     value = getattr(deleted, "value", None)
     return value if value is not None else deleted  # type: ignore[return-value]
-
-
-#: JVM varbyte decode depth for the first-doc prune: 9 × 7 bits = 63
-#: bits covers any int64 doc id
-_FIRST_DOC_BYTES = 9
-
-
-def first_doc_col(gaps_col: "F.Column") -> "F.Column":
-    """First doc_id of an encoded run, computed IN THE JVM from the
-    run's leading varbyte (first gap = doc_id + 1) — the expression
-    twin of ``codec.first_doc_ids``. Lets the purge prune rows
-    entirely above the deleted range out of the Python rewrite path
-    with a scan predicate instead of shipping them through Arrow."""
-    def byte(i: int) -> "F.Column":
-        # one byte → unsigned int (empty slice → 0 via coalesce)
-        return F.coalesce(
-            F.conv(F.hex(F.substring(gaps_col, i + 1, 1)), 16, 10)
-            .cast("long"),
-            F.lit(0).cast("long"),
-        )
-
-    n = _FIRST_DOC_BYTES
-    expr = F.shiftleft(byte(n - 1) % 128, 7 * (n - 1))
-    for i in range(n - 2, -1, -1):
-        expr = F.shiftleft(byte(i) % 128, 7 * i) + F.when(
-            byte(i) >= 128, expr
-        ).otherwise(F.lit(0).cast("long"))
-    return expr - F.lit(1).cast("long")
 
 
 def _gather_rows(stream: np.ndarray, offs: np.ndarray,
@@ -324,28 +304,10 @@ def _make_purge_rewriter(
                 dls[keep_r],
                 abs_pos[np.repeat(keep_r, tfs)].astype(np.int64),
             )
-            rstarts = runs["run_start"]
-            src_idx = pa.array(term_codes[rstarts], type=pa.int64())
-            cf = np.add.reduceat(tfs[keep_r], rstarts)
-            lst = pa.list_(pa.int64())
-            built = {
-                "df_local": pa.array(runs["df_local"], type=pa.int64()),
-                "cf_local": pa.array(cf.astype(np.int64), type=pa.int64()),
-                "doc_gaps": pa.array(runs["doc_gaps"], type=pa.binary()),
-                "tfs": pa.array(runs["tfs"], type=pa.binary()),
-                "dls": pa.array(runs["dls"], type=pa.binary()),
-                "positions": pa.array(runs["positions"], type=pa.binary()),
-                "block_last": pa.array(runs["block_last"], type=lst),
-                "block_max_tf": pa.array(runs["block_max_tf"], type=lst),
-                "gap_offsets": pa.array(runs["gap_offsets"], type=lst),
-                "tf_offsets": pa.array(runs["tf_offsets"], type=lst),
-                "dl_offsets": pa.array(runs["dl_offsets"], type=lst),
-                "pos_offsets": pa.array(runs["pos_offsets"], type=lst),
-            }
-            # built blobs are plain binary: match the input's Arrow types
-            # (large_binary under arrow.useLargeVarTypes)
+            built = codec.runs_to_arrow(runs, batch.schema)
+            src_idx = pa.array(term_codes[runs["run_start"]], type=pa.int64())
             arrays = [
-                built[f.name].cast(f.type) if f.name in built
+                built[f.name] if f.name in built
                 else pc.take(batch.column(f.name), src_idx)
                 for f in batch.schema
             ]
@@ -374,19 +336,16 @@ def purge_deletes(spark: SparkSession, index_dir: str) -> dict:
     and the docmap prune / stats write are plain overwrites.
     (Crash-injection tested: tests/test_deletes.py.)
 
-    I/O shape: one metadata-pruned pass over the postings —
-    rows whose ``block_last`` max is below the smallest deleted id
-    never reach the Python worker (JVM predicate), rows whose first
-    doc id exceeds the largest deleted id pass through undecoded; at
-    10^12 docs this runs per bucket partition, embarrassingly
-    parallel, no shuffle."""
+    I/O shape: one pass over the postings in which every row goes
+    through the ``mapInArrow`` rewriter. Its per-batch checks are
+    metadata-only: a batch whose ``block_last`` max is below the
+    smallest deleted id passes through as is, and a row with no
+    deleted id inside its [first doc, last doc] range passes through
+    undecoded; only runs that hold a deleted doc are decoded and
+    re-encoded. At 10^12 docs this runs per bucket partition,
+    embarrassingly parallel, no shuffle."""
     from glug_spark.index.compact import ensure_stream_consistent
-    from glug_spark.index.pipeline import (
-        docmap_n_buckets, read_docmap, read_params,
-    )
-    from glug_spark.streaming.ingest import (
-        _done_batches, _idf, _stream_manifest_path, _write_stats,
-    )
+    from glug_spark.streaming.ingest import recompute_stats
 
     deleted = read_deleted_ids(spark, index_dir)
     if deleted is None or not len(deleted):
@@ -418,40 +377,19 @@ def purge_deletes(spark: SparkSession, index_dir: str) -> dict:
         .select("doc_id").distinct().count()
     )
 
-    n_buckets = int(params["n_buckets"])
-
     # --- 1. rewrite the postings in ONE pass: every row flows through
     # the Arrow kernel, which passes clean batches/rows through as
     # C-level filters and re-encodes only runs that actually contain a
-    # deleted doc. (The previous untouched/touched JVM split evaluated
-    # a 9-byte varbyte WHEN-cascade per row and read + decoded the full
-    # postings parquet TWICE — one branch per side of the split.) ------
-    cols = [f.name for f in ENCODED_SCHEMA]
-    rewritten = enc.select(cols).mapInArrow(
+    # deleted doc ----------------------------------------------------
+    rewritten = enc.select([f.name for f in ENCODED_SCHEMA]).mapInArrow(
         _make_purge_rewriter(deleted), schema=ENCODED_SCHEMA
     )
     before = enc.count()
     tmp = os.path.join(index_dir, "postings_purged")
-    from glug_spark.index.pipeline import (
-        consolidate_for_bucket_write,
-        dir_bytes,
-    )
-
-    out_rows = consolidate_for_bucket_write(
-        rewritten,
-        n_buckets=n_buckets,
-        est_bytes=dir_bytes(src),
-    )
-    (
-        out_rows
-        .sortWithinPartitions("bucket", "term")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(tmp)
-    )
+    write_postings(rewritten, tmp, int(params["n_buckets"]),
+                   est_bytes=dir_bytes(src))
     after = spark.read.parquet(tmp).count()
-    shutil.rmtree(src)
-    os.rename(tmp, src)
+    swap_dir(tmp, src)
 
     # ledger row for this purge — keyed by a content hash of the
     # tombstone set, so a crashed purge re-run (tombstones are cleared
@@ -470,33 +408,10 @@ def purge_deletes(spark: SparkSession, index_dir: str) -> dict:
             "purge_id string, n_docs_removed long",
         ).write.mode("append").parquet(ledger_path)
 
-    # --- 2. exact stats from the purged index (metadata-scale aggs).
-    # n_docs derives from immutable lineage (build params + stream
-    # manifest) minus the ledger — NOT from the current collection row,
-    # which a crashed earlier run may already have reduced ------------
-    n_docs = int(params["n_docs"])
-    smp = _stream_manifest_path(index_dir)
-    if os.path.exists(smp):
-        n_docs += sum(
-            int(r["n_docs"] or 0)
-            for r in spark.read.parquet(smp).collect()
-        )
-    n_docs -= purged_docs_total(spark, index_dir)
-    enc2 = spark.read.parquet(src)
-    total_tokens = int(
-        enc2.agg(F.sum("cf_local")).collect()[0][0] or 0
-    )
-    stats = (
-        enc2.groupBy("term")
-        .agg(F.sum("df_local").alias("df"))
-        .withColumn("bucket", bucket_col(n_buckets=n_buckets))
-        .withColumn("idf", _idf(F.col("df"), n_docs))
-    )
-    # folded := every committed stream batch — the recomputed totals
-    # reflect all of them, so a later incremental refresh folds only
-    # batches ingested AFTER this purge
-    _write_stats(spark, index_dir, stats, _done_batches(spark, index_dir),
-                 total_tokens, n_docs)
+    # --- 2. exact stats from the purged index: the full recompute
+    # derives n_docs from immutable lineage minus the ledger, and counts
+    # every committed stream batch as folded ---------------------------
+    coll = recompute_stats(spark, index_dir)
 
     # --- 3. prune the docmap: dynamic-overwrite ONLY the (sb,
     # doc_bucket) partitions that can hold a deleted id ---------------
@@ -540,8 +455,8 @@ def purge_deletes(spark: SparkSession, index_dir: str) -> dict:
         "tombstones": int(len(deleted)),
         "rows_before": int(before),
         "rows_after": int(after),
-        "n_docs": int(n_docs),
-        "total_tokens": int(total_tokens),
+        "n_docs": int(coll["n_docs"]),
+        "total_tokens": int(coll["total_tokens"]),
     }
 
 

@@ -6,8 +6,11 @@ Physical layout under ``out_dir``:
   md5-derived(term) % n_buckets`` — a query's term lookup prunes to one
   bucket directory, and the bucket is computable driver-side in Python.
   Rows are (term, segment, df_local, cf_local, blobs, block metadata).
-- ``term_stats/`` parquet (term, df, idf, bucket) — same bucketing.
+- ``term_stats/`` parquet (term, df, idf, bucket) — same bucketing —
+  plus the ``_stats_state`` fold state incremental ingest reads.
 - ``collection/`` parquet single row (n_docs, avgdl, total_tokens).
+  Both are written by ``streaming.ingest.recompute_stats``, the one
+  full stats recompute build, purge and ingest share.
 - ``params/``     build parameters written BEFORE encoding starts so an
   interrupted build resumes with identical configuration.
 - ``manifest/``   parquet, one row per SEGMENT: lineage (input path) +
@@ -267,9 +270,10 @@ def _encode_doc_batch(pdf: pd.DataFrame, segment: int, n_buckets: int,
     """One batch of documents → encoded posting rows (segment = batch id).
 
     Tokenize + factorize in Arrow (C-level, parity-tested against the
-    Python/JVM patterns), build postings via lexsort + run-length,
-    varbyte-encode in two vectorized passes (codec.encode_runs). All
-    O(tokens) work is NumPy/Arrow.
+    Python/JVM patterns), build postings via lexsort + run-length, and
+    encode every term run in one :func:`codec.encode_runs_table` call
+    (one vectorized varbyte pass per column). All O(tokens) work is
+    NumPy/Arrow.
     """
     n_docs_batch = len(pdf)
     counts, codes, uniques = _tokenize_factorize(pdf["text"])
@@ -309,13 +313,10 @@ def _encode_doc_batch(pdf: pd.DataFrame, segment: int, n_buckets: int,
             bucket_of[term] = b
         terms.append(term)
         buckets.append(b)
-    # cf_local per term run = sum of the run's tf values (segmented sum)
-    cf = np.add.reduceat(tfs, first_posting) if len(first_posting) else []
     return pd.DataFrame({
         "bucket": buckets,
         "term": terms,
         "segment": segment,
-        "cf_local": np.asarray(cf, dtype=np.int64),
         "lineage": lineage,
         "n_docs_batch": n_docs_batch,
         **cols,
@@ -371,29 +372,54 @@ MIN_DOCS_PER_SEGMENT = 1_000
 CONSOLIDATE_BYTES_PER_CORE = 256 * 2**20
 
 
-def consolidate_for_bucket_write(
-    encoded: "DataFrame", n_buckets: int, est_bytes: "int | None"
-) -> "DataFrame":
-    """Coalesce an encoded-postings write into ~max(cores, n_buckets)
-    files when the tree is small (guide §6 small-files): N encode tasks
-    × partitionBy(bucket) otherwise writes N×n_buckets KB-sized files,
-    and every later query scan pays ~4 MB open-cost per file — measured
-    ~100 scheduled scan tasks per query on the 50-segment sf1.0 index.
-    The shuffle key is (bucket, xxhash64(term) % k): deterministic
-    (retry-safe, unlike rand-derived keys), keeps a (bucket, term)'s
-    runs in one file, and the per-task ``sortWithinPartitions(bucket,
-    term)`` after it keeps term row-group min/max stats tight. At scale
-    (est_bytes ≥ cores × 256 MB) this is a no-op — the zero-shuffle
-    write already produces well-sized files."""
-    spark = encoded.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    if est_bytes is None or est_bytes >= par * CONSOLIDATE_BYTES_PER_CORE:
-        return encoded
-    n_out = max(par, n_buckets)
-    k = max(1, n_out // n_buckets)
-    return encoded.repartition(
-        n_out, F.col("bucket"), F.pmod(F.xxhash64("term"), F.lit(k))
+def write_postings(encoded: "DataFrame", path: str, n_buckets: int,
+                   est_bytes: "int | None", mode: str = "overwrite") -> None:
+    """The one postings writer of build, ingest, compaction and purge:
+    bucket-partitioned parquet, term-sorted within every output task.
+
+    A small tree (``est_bytes`` below cores × 256 MB) is first coalesced
+    into ~max(cores, n_buckets) files (guide §6 small-files): N encode
+    tasks × partitionBy(bucket) otherwise write N×n_buckets KB-sized
+    files, and every later query scan pays ~4 MB open-cost per file —
+    measured ~100 scheduled scan tasks per query on the 50-segment
+    sf1.0 index. The shuffle key is (bucket, xxhash64(term) % k):
+    deterministic (retry-safe, unlike rand-derived keys) and keeps a
+    (bucket, term)'s runs in one file. At scale, and for
+    ``est_bytes=None`` (ingest's append), the zero-shuffle write stays
+    as it is: its files are big enough on their own. The local
+    (no-shuffle) ``(bucket, term)`` sort per output task makes the
+    row-group min/max on ``term`` tight, so term-IN / prefix scans skip
+    whole row groups; dictionary/RLE compression improves too."""
+    par = encoded.sparkSession.sparkContext.defaultParallelism
+    if est_bytes is not None and est_bytes < par * CONSOLIDATE_BYTES_PER_CORE:
+        n_out = max(par, n_buckets)
+        k = max(1, n_out // n_buckets)
+        encoded = encoded.repartition(
+            n_out, F.col("bucket"), F.pmod(F.xxhash64("term"), F.lit(k))
+        )
+    (
+        encoded.sortWithinPartitions("bucket", "term")
+        .write.mode(mode)
+        .partitionBy("bucket")
+        .parquet(path)
     )
+
+
+def swap_dir(stage: str, live: str) -> None:
+    """Publish the fully written ``stage`` directory as ``live``. The
+    old ``live`` is renamed ASIDE and deleted only after ``stage`` took
+    its place, so a live directory exists at all times except the
+    instant between the two renames — a concurrent reader's window
+    shrinks from an O(dir-size) delete to one rename (true reader
+    atomicity needs the Iceberg catalog swap this directory layout
+    stands in for)."""
+    bak = live + ".old"
+    if os.path.exists(bak):
+        shutil.rmtree(bak)
+    if os.path.exists(live):
+        os.rename(live, bak)
+    os.rename(stage, live)
+    shutil.rmtree(bak, ignore_errors=True)
 
 
 def dir_bytes(path: str) -> int:
@@ -510,42 +536,16 @@ def build_index(
     )
     # small-index file consolidation (docs × ~0.5 KB encoded is a safe
     # over-estimate for sizing); no-op at scale — see the helper
-    encoded = consolidate_for_bucket_write(
-        encoded, n_buckets, est_bytes=int(n_docs) * 512
-    )
-    (
-        # local (no-shuffle) term sort per output task: row-group
-        # min/max on `term` become tight, so term-IN / prefix scans
-        # skip whole row groups; dictionary/RLE compression improves too
-        encoded.sortWithinPartitions("bucket", "term")
-        .write.mode("append" if done_lineages else "overwrite")
-        .partitionBy("bucket")
-        .parquet(os.path.join(out_dir, "postings"))
-    )
+    write_postings(encoded, os.path.join(out_dir, "postings"), n_buckets,
+                   est_bytes=int(n_docs) * 512,
+                   mode="append" if done_lineages else "overwrite")
 
     # --- docmap: result join-back side table / forward doc store
     # (doc_id-bucketed so a k-row lookup prunes to ≤k partitions) ------
     write_docmap(docs, out_dir, sb=-1, doc_store=doc_store)
 
-    # --- stats + manifest from the encoded index (no corpus re-scan) ----
+    # --- manifest + stats from the encoded index (no corpus re-scan) ----
     enc_df = spark.read.parquet(os.path.join(out_dir, "postings"))
-    stats = (
-        enc_df.groupBy("term")
-        .agg(F.sum("df_local").alias("df"))
-        .withColumn("bucket", bucket_col(n_buckets=n_buckets))
-        .withColumn(
-            "idf",
-            F.log(
-                1.0
-                + (F.lit(n_docs) - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-            ),
-        )
-    )
-    stats.write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(out_dir, "term_stats")
-    )
-
     manifest = (
         enc_df.groupBy("segment")
         .agg(
@@ -579,24 +579,21 @@ def build_index(
             "rebuild without resume"
         )
 
+    # term_stats + collection + the fold state, so the first ingest
+    # after this build folds only its own segments
+    from glug_spark.streaming.ingest import recompute_stats
+
+    coll = recompute_stats(spark, out_dir)
     totals = spark.read.parquet(manifest_path).agg(
         F.sum("n_postings").alias("postings"),
-        F.sum("n_tokens").alias("tokens"),
         F.sum("encoded_bytes").alias("bytes"),
         F.count(F.lit(1)).alias("segments"),
     ).collect()[0]
-    total_tokens = int(totals["tokens"])
-    avgdl = float(total_tokens) / n_docs
-    spark.createDataFrame(
-        [(int(n_docs), avgdl, total_tokens)],
-        "n_docs long, avgdl double, total_tokens long",
-    ).write.mode("overwrite").parquet(os.path.join(out_dir, "collection"))
-
     return {
         "n_docs": n_docs,
         "n_postings": int(totals["postings"]),
         "encoded_bytes": int(totals["bytes"]),
         "segments": int(totals["segments"]),
-        "avgdl": avgdl,
+        "avgdl": coll["avgdl"],
         "resumed_segments_skipped": len(done_lineages),
     }

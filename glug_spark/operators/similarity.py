@@ -486,7 +486,7 @@ def build_ivf_index(
         "vec_id long, v array<double>, list_id int",
     )
     # small-index file consolidation (guide §6), the vector-side mirror
-    # of index.pipeline.consolidate_for_bucket_write: N assignment tasks
+    # of index.pipeline.write_postings: N assignment tasks
     # × partitionBy(list_id) otherwise write N×n_lists KB-sized files
     # (measured 3.9k files / 8.3 s for 100k vectors × 128 lists; one
     # file per list writes in ~2 s and every probe opens ~1 file per

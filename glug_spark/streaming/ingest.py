@@ -54,14 +54,16 @@ merged into term_stats via a vocab-sized outer join — never a full
 re-aggregation of all encoded rows per drain. The folded-batch state
 rides inside the term_stats directory (an ``_``-prefixed subdir, which
 parquet readers ignore) and is swapped atomically with the stats
-themselves, so a crash mid-refresh self-heals: a missing/partial
-term_stats dir simply triggers a full recompute on the next refresh.
+themselves. This module also owns the one FULL stats recompute,
+:func:`recompute_stats`: ``build_index`` and ``purge_deletes`` end with
+it, so a built or purged index already carries the fold state, and a
+refresh that finds no state (an index written before builds kept one,
+or a crash mid-swap that torched term_stats) falls back to it.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -75,7 +77,9 @@ from glug_spark.index.pipeline import (
     docmap_n_buckets,
     index_doc_store,
     read_params,
+    swap_dir,
     write_docmap,
+    write_postings,
 )
 
 #: stream micro-batches live far above any plausible resume attempt
@@ -101,8 +105,8 @@ def _attempt_marker(index_dir: str, batch_id: int) -> str:
 
 def _stats_state_path(index_dir: str) -> str:
     # inside term_stats/: the leading underscore hides it from parquet
-    # directory listings, and the refresh's directory swap moves state
-    # and stats together (atomically, via one os.rename)
+    # directory listings, and the stats writer's directory swap moves
+    # state and stats together
     return os.path.join(index_dir, "term_stats", "_stats_state")
 
 
@@ -221,32 +225,20 @@ def _doc_ranges(spark: SparkSession, index_dir: str) -> DocRanges:
 
 def _write_stats(spark: SparkSession, index_dir: str, stats: DataFrame,
                  folded: set[int], total_tokens: int, n_docs: int) -> dict:
-    """Stage merged term_stats + folded state, swap via rename-aside,
-    then rewrite the collection row. Crash anywhere → next refresh
-    either sees the OLD consistent state (refolds) or no term_stats at
-    all (full recompute); folded state can never outrun the stats it
-    describes because they move in the same rename. The old dir is
-    renamed ASIDE (not rmtree'd in place) so a live directory exists at
-    ``stats_path`` at all times except the instant between the two
-    renames — a concurrent reader's window shrinks from an O(dir-size)
-    delete to one rename (true reader atomicity needs the Iceberg
-    catalog swap this directory layout stands in for)."""
+    """Stage term_stats + folded state, publish both with one
+    :func:`swap_dir`, then rewrite the collection row. Crash anywhere →
+    next refresh either sees the OLD consistent state (refolds) or no
+    term_stats at all (full recompute); folded state can never outrun
+    the stats it describes because they move in the same rename."""
     stats_path = os.path.join(index_dir, "term_stats")
     stage = stats_path + ".stage"
-    bak = stats_path + ".old"
-    for leftover in (stage, bak):
-        if os.path.exists(leftover):
-            shutil.rmtree(leftover)
     stats.write.mode("overwrite").partitionBy("bucket").parquet(stage)
     state_rows = [(int(b), None) for b in sorted(folded)]
     state_rows.append((-1, int(total_tokens)))
     spark.createDataFrame(state_rows, _STATE_SCHEMA).write.mode(
         "overwrite"
     ).parquet(os.path.join(stage, "_stats_state"))
-    if os.path.exists(stats_path):
-        os.rename(stats_path, bak)
-    os.rename(stage, stats_path)
-    shutil.rmtree(bak, ignore_errors=True)
+    swap_dir(stage, stats_path)
     return _write_collection(spark, index_dir, n_docs, total_tokens)
 
 
@@ -260,11 +252,51 @@ def _write_collection(spark: SparkSession, index_dir: str,
     return {"n_docs": n_docs, "avgdl": avgdl, "total_tokens": total_tokens}
 
 
-def _idf(df_col: F.Column, n_docs: int) -> F.Column:
-    return F.log(
-        1.0
-        + (F.lit(n_docs) - df_col + F.lit(0.5)) / (df_col + F.lit(0.5))
+def _stats_inputs(spark: SparkSession,
+                  index_dir: str) -> tuple[int, int, set[int]]:
+    """(n_buckets, n_docs, committed stream batch ids). n_docs is build
+    params + stream manifest − purge ledger: params and manifest are
+    immutable lineage, so the ledger is the only record of the docs
+    purges removed — never the collection row, which a crashed purge
+    may already have reduced."""
+    from glug_spark.index.deletes import purged_docs_total
+
+    params = read_params(spark, index_dir)
+    n_docs = int(params["n_docs"])
+    done: set[int] = set()
+    smp = _stream_manifest_path(index_dir)
+    if os.path.exists(smp):
+        manifest = spark.read.parquet(smp).collect()
+        done = {int(r["batch_id"]) for r in manifest}
+        n_docs += sum(int(r["n_docs"] or 0) for r in manifest)
+    n_docs -= purged_docs_total(spark, index_dir)
+    return int(params["n_buckets"]), n_docs, done
+
+
+def _term_stats(dfs: DataFrame, n_buckets: int, n_docs: int) -> DataFrame:
+    """(term, df) rows → term_stats rows (term, df, bucket, idf)."""
+    df = F.col("df")
+    idf = F.log(1.0 + (F.lit(n_docs) - df + F.lit(0.5)) / (df + F.lit(0.5)))
+    return dfs.withColumn(
+        "bucket", bucket_col(n_buckets=n_buckets)
+    ).withColumn("idf", idf)
+
+
+def recompute_stats(spark: SparkSession, index_dir: str) -> dict:
+    """Full stats recompute over every encoded row: term_stats, the
+    fold state (every committed stream batch counts as folded) and the
+    collection row, from the n_docs rule of :func:`_stats_inputs`.
+    ``build_index`` and ``purge_deletes`` end with it, and
+    :func:`refresh_stats` falls back to it when there is no fold state.
+    Returns the collection row."""
+    n_buckets, n_docs, done = _stats_inputs(spark, index_dir)
+    enc = spark.read.parquet(os.path.join(index_dir, "postings"))
+    stats = _term_stats(
+        enc.groupBy("term").agg(F.sum("df_local").alias("df")),
+        n_buckets, n_docs,
     )
+    total = int(enc.agg(F.sum("cf_local")).collect()[0][0] or 0)
+    return _write_stats(spark, index_dir, stats, done, total, n_docs)
 
 
 def refresh_stats(spark: SparkSession, index_dir: str) -> dict:
@@ -273,9 +305,11 @@ def refresh_stats(spark: SparkSession, index_dir: str) -> dict:
     Incremental: aggregates ONLY the new batches' encoded rows (the scan
     is pushed down on their segment-id namespaces) and merges df counts
     into the existing vocab-sized term_stats with one outer join; idf is
-    recomputed column-wise for the new n_docs. Falls back to a full
-    recompute over all encoded rows when there is no usable state
-    (legacy index, or a crash torched term_stats mid-swap).
+    recomputed column-wise for the new n_docs. Falls back to
+    :func:`recompute_stats` when there is no fold state (an index
+    written before builds kept one, or a crash torched term_stats
+    mid-swap); that recompute writes the state, so every later refresh
+    is incremental.
 
     Ordering contract: fold BEFORE compacting — ``compact_index`` may
     rewrite an unfolded batch's rows under a merged segment id outside
@@ -284,45 +318,10 @@ def refresh_stats(spark: SparkSession, index_dir: str) -> dict:
     ``ingest_batch`` users). Compaction itself never changes df/cf
     totals, so already-folded stats stay exact under any layout.
     """
-    params = read_params(spark, index_dir)
-    n_buckets = int(params["n_buckets"])
-    n_docs = int(params["n_docs"])
-    done: set[int] = set()
-    smp = _stream_manifest_path(index_dir)
-    if os.path.exists(smp):
-        manifest = spark.read.parquet(smp).collect()
-        done = {int(r["batch_id"]) for r in manifest}
-        n_docs += sum(int(r["n_docs"] or 0) for r in manifest)
-    # docs physically removed by purges: params/manifest are immutable
-    # lineage, so the purge ledger is the only record they left
-    from glug_spark.index.deletes import purged_docs_total
-
-    n_docs -= purged_docs_total(spark, index_dir)
-
-    stats_path = os.path.join(index_dir, "term_stats")
-    state = (
-        _read_state(spark, index_dir) if os.path.exists(stats_path) else None
-    )
-    if state is None and os.path.exists(stats_path) and not done:
-        # batch-build-only index (build writes no state): nothing to fold
-        coll = spark.read.parquet(
-            os.path.join(index_dir, "collection")
-        ).collect()[0]
-        return {k: coll[k] for k in ("n_docs", "avgdl", "total_tokens")}
-
-    enc = spark.read.parquet(os.path.join(index_dir, "postings"))
+    state = _read_state(spark, index_dir)
     if state is None:
-        # no trustworthy state → full recompute (also writes state so
-        # every later refresh is incremental)
-        stats = (
-            enc.groupBy("term")
-            .agg(F.sum("df_local").alias("df"))
-            .withColumn("bucket", bucket_col(n_buckets=n_buckets))
-            .withColumn("idf", _idf(F.col("df"), n_docs))
-        )
-        total = int(enc.agg(F.sum("cf_local")).collect()[0][0] or 0)
-        return _write_stats(spark, index_dir, stats, done, total, n_docs)
-
+        return recompute_stats(spark, index_dir)
+    n_buckets, n_docs, done = _stats_inputs(spark, index_dir)
     folded, total = state
     new_batches = sorted(done - folded)
     if not new_batches:
@@ -335,6 +334,7 @@ def refresh_stats(spark: SparkSession, index_dir: str) -> dict:
     for b in new_batches:
         lo, hi = _batch_range(b)
         rng = rng | ((F.col("segment") >= lo) & (F.col("segment") < hi))
+    enc = spark.read.parquet(os.path.join(index_dir, "postings"))
     delta = (
         enc.where(rng)
         .groupBy("term")
@@ -345,7 +345,9 @@ def refresh_stats(spark: SparkSession, index_dir: str) -> dict:
     ).cache()
     try:
         delta_tokens = int(delta.agg(F.sum("cf_new")).collect()[0][0] or 0)
-        old = spark.read.parquet(stats_path).select("term", "df")
+        old = spark.read.parquet(
+            os.path.join(index_dir, "term_stats")
+        ).select("term", "df")
         merged = (
             old.join(delta.select("term", "df_new"), "term", "full_outer")
             .select(
@@ -353,12 +355,10 @@ def refresh_stats(spark: SparkSession, index_dir: str) -> dict:
                 (F.coalesce("df", F.lit(0))
                  + F.coalesce("df_new", F.lit(0))).alias("df"),
             )
-            .withColumn("bucket", bucket_col(n_buckets=n_buckets))
-            .withColumn("idf", _idf(F.col("df"), n_docs))
         )
         return _write_stats(
-            spark, index_dir, merged, folded | set(new_batches),
-            total + delta_tokens, n_docs,
+            spark, index_dir, _term_stats(merged, n_buckets, n_docs),
+            folded | set(new_batches), total + delta_tokens, n_docs,
         )
     finally:
         delta.unpersist()
@@ -464,9 +464,8 @@ def ingest_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
             _make_partition_encoder(n_buckets, set(), attempt),
             schema=ENCODED_SCHEMA,
         )
-        encoded.sortWithinPartitions("bucket", "term").write.mode(
-            "append"
-        ).partitionBy("bucket").parquet(os.path.join(index_dir, "postings"))
+        write_postings(encoded, os.path.join(index_dir, "postings"),
+                       n_buckets, est_bytes=None, mode="append")
     if ranges is not None:
         ranges.add(int(agg["lo"]), int(agg["hi"]))
     # docmap rows for this batch, BEFORE the manifest commit: the write

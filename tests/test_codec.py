@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from glug_spark.index import codec
@@ -249,6 +250,35 @@ def test_encode_runs_pos_offsets_match_encode_segment():
                     "block_max_tf", "gap_offsets", "tf_offsets",
                     "dl_offsets", "pos_offsets"):
             assert run[key] == single[key], key
+        assert run["cf_local"] == int(tfs[s:e].sum())
+
+
+@pytest.mark.parametrize("large", [False, True])
+def test_runs_to_arrow_types_follow_schema(large):
+    """Every run column of encode_runs_table converts to an Arrow array
+    typed like the target schema's field (large_binary / large_list
+    under Spark's arrow.useLargeVarTypes), with values unchanged."""
+    import pyarrow as pa
+
+    codes = np.array([0, 0, 1, 2, 2, 2], dtype=np.int64)
+    ids = np.array([3, 9, 4, 1, 5, 8], dtype=np.int64)
+    tfs = np.array([2, 1, 3, 1, 1, 2], dtype=np.int64)
+    dls = tfs + 4
+    pos = np.concatenate([np.arange(t) for t in tfs]).astype(np.uint64)
+    runs = codec.encode_runs_table(codes, ids, tfs, dls, pos)
+    assert runs["cf_local"] == [3, 3, 4]
+    blob = pa.large_binary() if large else pa.binary()
+    lst = pa.large_list(pa.int64()) if large else pa.list_(pa.int64())
+    types = {"df_local": pa.int64(), "cf_local": pa.int64(),
+             "doc_gaps": blob, "tfs": blob, "dls": blob, "positions": blob,
+             "block_last": lst, "block_max_tf": lst, "gap_offsets": lst,
+             "tf_offsets": lst, "dl_offsets": lst, "pos_offsets": lst}
+    schema = pa.schema([("term", pa.string()), *types.items()])
+    got = codec.runs_to_arrow(runs, schema)
+    assert set(got) == set(codec.RUN_COLUMNS) == set(types)
+    for c, arr in got.items():
+        assert arr.type == types[c], c
+        assert arr.to_pylist() == list(runs[c]), c
 
 
 def test_segmented_abs_decode_matches_per_segment():

@@ -5,6 +5,7 @@ runs escape the doc-space partitioning (the segmap invariant)."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -371,3 +372,54 @@ def test_merge_kernel_matches_per_group_pandas(spark, tmp_path):
         assert canon(new) == cold
     # sanity: merging actually happened (multi-segment index collapsed)
     assert len(old) < enc.count()
+
+
+def test_compaction_crash_between_swaps_converges(spark, tmp_path,
+                                                  monkeypatch):
+    """A crash between compaction's segmap swap and its postings swap
+    leaves the coarser segmap over the old postings. That index must
+    still rank identically to the full scan, and a re-run of
+    compact_index must succeed and rank identically too."""
+    import glug_spark.index.compact as compact_mod
+    from glug_spark.index.compact import fragmentation
+
+    d = str(tmp_path / "index")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "64")
+    try:
+        build_index(spark, SF_DIR, d, n_buckets=8)
+    finally:
+        spark.conf.set(key, prev)
+
+    real_swap = compact_mod.swap_dir
+    swapped = []
+
+    def crash_on_second(stage, live):
+        swapped.append(os.path.basename(live))
+        if len(swapped) == 2:
+            raise RuntimeError("injected crash before the postings swap")
+        real_swap(stage, live)
+
+    monkeypatch.setattr(compact_mod, "swap_dir", crash_on_second)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        compact_index(spark, d, min_run=8, merge_factor=4, min_groups=1)
+    monkeypatch.setattr(compact_mod, "swap_dir", real_swap)
+    assert swapped == ["segmap", "postings"]
+    frag = fragmentation(spark, d)
+    assert frag["n_groups"] < frag["n_segments"]  # new map, old rows
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+
+    def assert_rank_identical():
+        for terms, k, conj in QUERIES:
+            want = [tuple(r) for r in bm25.bm25_topk(
+                docs, terms, k=k, conjunctive=conj).collect()]
+            got = [tuple(r) for r in Searcher(spark, d, persist=False).topk(
+                terms, k=k, conjunctive=conj).collect()]
+            assert got == want, terms
+
+    assert_rank_identical()
+    compact_index(spark, d, min_run=8, merge_factor=4, min_groups=1)
+    assert not os.path.exists(os.path.join(d, "postings_compacted"))
+    assert_rank_identical()

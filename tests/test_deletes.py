@@ -483,15 +483,15 @@ def test_purge_crash_before_stats_write_converges(spark, tmp_path,
     deleted = [4, 40, 77, 120]
     delete_docs(spark, idx, deleted)
 
-    real_write = ingest_mod._write_stats
+    real_recompute = ingest_mod.recompute_stats
 
     def boom(*a, **k):
         raise RuntimeError("injected crash before stats write")
 
-    monkeypatch.setattr(ingest_mod, "_write_stats", boom)
+    monkeypatch.setattr(ingest_mod, "recompute_stats", boom)
     with pytest.raises(RuntimeError, match="injected crash"):
         purge_deletes(spark, idx)
-    monkeypatch.setattr(ingest_mod, "_write_stats", real_write)
+    monkeypatch.setattr(ingest_mod, "recompute_stats", real_recompute)
 
     # postings already rewritten, ledger already appended, tombstones
     # still present → the rerun must not double-count
@@ -660,34 +660,6 @@ def test_purge_rewriter_roundtrip_property(case):
     if len(expected) == len(doc_ids):
         assert got["doc_gaps"] == row["doc_gaps"]
         assert got["positions"] == row["positions"]
-
-
-def test_first_doc_col_matches_python_decoder(spark):
-    """The JVM first-doc expression (purge's scan-prune predicate) must
-    equal the reference _first_doc_id for any varbyte width, including multi-byte
-    continuation chains up to 63-bit ids."""
-    import numpy as np
-
-    from glug_spark.index import codec
-    from glug_spark.index.deletes import first_doc_col
-    from tests.reference_kernels import _first_doc_id
-
-    ids = [0, 1, 126, 127, 128, 300, 16_383, 16_384, 2_097_151,
-           2_097_152, 2**35, 2**42 + 12345, 2**55 + 7, 2**62 - 1]
-    rows = []
-    for i, first in enumerate(ids):
-        arr = np.array([first, first + 3, first + 10], dtype=np.int64)
-        enc = codec.encode_segment(arr, np.ones(3, np.int64),
-                                   np.ones(3, np.int64))
-        rows.append((i, bytearray(enc["doc_gaps"]), int(first)))
-        assert _first_doc_id(enc["doc_gaps"]) == first
-    df = spark.createDataFrame(
-        rows, "i int, doc_gaps binary, expected long"
-    )
-    got = df.select("i", "expected",
-                    first_doc_col(F.col("doc_gaps")).alias("got")).collect()
-    for r in got:
-        assert r["got"] == r["expected"], (r["i"], r["got"], r["expected"])
 
 
 def test_purge_rewriter_batch_matches_rowwise(spark, tmp_path):

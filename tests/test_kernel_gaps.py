@@ -56,6 +56,7 @@ def test_codec_empty_inputs():
         np.zeros(0, np.uint64),
     )
     assert all(len(v) == 0 for v in empty.values())
+    assert empty["cf_local"] == []
 
 
 # --- branch-gate closers (arc coverage: both edges of each branch) ------

@@ -133,6 +133,43 @@ def test_incremental_refresh_matches_full_recompute(spark, ingested):
     assert {int(r["batch_id"]) for r in state if r["batch_id"] >= 0} >= {0, 1}
 
 
+def test_build_writes_fold_state(spark, tmp_path, monkeypatch):
+    """A build leaves the fold state the incremental refresh reads: no
+    folded stream batch, and a running token total equal to the
+    collection row's. The first ingest after the build therefore folds
+    only its own segments — the full stats recompute never runs."""
+    from glug_spark.streaming import ingest as ing
+
+    initial = str(tmp_path / "initial")
+    arrivals = str(tmp_path / "arrivals")
+    index = str(tmp_path / "index")
+    os.makedirs(arrivals)
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    docs.where(F.col("doc_id") < 300).write.parquet(
+        os.path.join(initial, "documents.parquet")
+    )
+    build_index(spark, initial, index, n_buckets=8)
+
+    state = spark.read.parquet(f"{index}/term_stats/_stats_state").collect()
+    assert [int(r["batch_id"]) for r in state] == [-1]
+    coll = spark.read.parquet(f"{index}/collection").collect()[0]
+    assert state[0]["total_tokens"] == coll["total_tokens"]
+
+    def full_recompute(*a, **kw):
+        raise AssertionError("full stats recompute ran")
+
+    monkeypatch.setattr(ing, "recompute_stats", full_recompute)
+    docs.where(F.col("doc_id") >= 300).write.parquet(
+        os.path.join(arrivals, "wave.parquet")
+    )
+    s = ingest_available(spark, arrivals, index)
+    assert s["n_docs"] == docs.count()
+    total = spark.read.parquet(f"{index}/postings").agg(
+        F.sum("cf_local")
+    ).collect()[0][0]
+    assert s["total_tokens"] == total
+
+
 def _manual_append(spark, docs_df, batch_id, index, n_buckets=8):
     """Replicate ingest_batch's postings append WITHOUT the manifest row
     — the exact on-disk state a crash between the two leaves behind
