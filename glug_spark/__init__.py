@@ -16,6 +16,14 @@ query layer over web-scale document tables, built Spark-first:
   top-k, phrase matching, block-max WAND.
 - ``glug_spark.operators``  — dedup (exact/MinHash-LSH/SimHash/Jaccard),
   similarity search, text analysis, multimodal plumbing.
+
+Every engine kernel shipped to a Spark Python worker imports this
+package, so importing it there installs :mod:`glug_spark.zipcache`: the
+worker's later tasks stop re-reading ``pyspark.zip`` and the Spark jar.
 """
 
+from glug_spark import zipcache
+
 __version__ = "0.2.0"
+
+zipcache.install()

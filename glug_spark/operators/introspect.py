@@ -14,20 +14,9 @@ import os
 from pyspark.sql import SparkSession, functions as F
 
 
-def _dir_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    return total
-
-
 def index_stats(spark: SparkSession, index_dir: str) -> dict:
     """One JSON-able dict: corpus size, layout, vocab, stream state."""
-    from glug_spark.index.pipeline import read_params
+    from glug_spark.index.pipeline import dir_bytes, read_params
 
     params = read_params(spark, index_dir)
     coll_path = os.path.join(index_dir, "collection")
@@ -90,5 +79,5 @@ def index_stats(spark: SparkSession, index_dir: str) -> dict:
         "pending_tombstones": int(len(tombs)) if tombs is not None else 0,
         "purged_docs": purged,
         "avgdl": float(coll["avgdl"]) if coll else None,
-        "bytes_on_disk": _dir_bytes(index_dir),
+        "bytes_on_disk": dir_bytes(index_dir),
     }

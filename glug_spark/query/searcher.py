@@ -115,7 +115,10 @@ def _kernel_node(rows: DataFrame, keys: list[str],
     shuffle-partitions wide while a query touches a few groups, and
     Spark skips the Python round trip of an empty partition only for
     grouped maps — ``mapInArrow`` measured ~1 s slower per point query
-    (8 partitions, 4 groups, local[2])."""
+    (8 partitions, 4 groups, local[2]). That figure predates
+    :mod:`glug_spark.zipcache`: each empty Python task then paid
+    ~150-250 ms, mostly the worker re-reading ``pyspark.zip`` and the
+    Spark jar, so the gap is smaller now (not re-measured)."""
     carried = [k for k in keys if k != "grp"]
     order = [(k, "ascending") for k in keys + ["term"]]
     names = [f.split()[0] for f in schema.split(",")]
@@ -139,6 +142,12 @@ def _kernel_node(rows: DataFrame, keys: list[str],
     return scorer_partitions(rows).groupBy("grp").applyInArrow(
         kernel, schema=schema
     )
+
+
+def _echo(table: "pa.Table") -> "pa.Table":
+    """The warm-up kernel of :meth:`Searcher._warm`: module-level, so a
+    worker imports this module to unpickle it."""
+    return table
 
 
 def _ranked_top(rows: DataFrame, scorer: Kernel, k: int) -> DataFrame:
@@ -294,7 +303,24 @@ class Searcher:
 
         self.postings = spark.read.parquet(f"{index_dir}/postings")
         self.term_stats = spark.read.parquet(f"{index_dir}/term_stats")
-        self.segmap = read_segmap(spark, index_dir)
+        segmap = read_segmap(spark, index_dir)
+        #: the scoring-group key: the segment itself on an uncompacted
+        #: index, else the segment's entry in the segment→grp map
+        #: collected here (segments ingested after the last compaction
+        #: have none and keep their own), so all runs of a coarsened
+        #: group — merged or untouched — co-group
+        pairs = sorted(
+            (r["segment"], r["grp"])
+            for r in ([] if segmap is None else segmap.collect())
+        )
+        self._grp = F.col("segment")
+        if pairs:
+            keys, grps = (", ".join(f"{int(v)}L" for v in col)
+                          for col in zip(*pairs))
+            self._grp = F.expr(
+                f"coalesce(element_at(map_from_arrays(array({keys}), "
+                f"array({grps})), segment), segment)"
+            )
         coll = spark.read.parquet(f"{index_dir}/collection").collect()[0]
         self.avgdl = float(coll["avgdl"])
         self.n_docs = int(coll["n_docs"])
@@ -320,13 +346,15 @@ class Searcher:
         """Front-load the first query's fixed costs at open time (the
         service shape pays them once per handle, not on a user query):
         spin up the Arrow Python workers with a one-row grouped Arrow
-        map, the queries' kernel node, and touch the postings parquet footers via a metadata-only
-        count (column-pruned count-star — no posting blob is read, and
-        the persisted cache is NOT materialized)."""
+        map, the queries' kernel node (its function imports glug_spark,
+        so the workers install :mod:`glug_spark.zipcache`), and touch
+        the postings parquet footers via a metadata-only count
+        (column-pruned count-star — no posting blob is read, and the
+        persisted cache is NOT materialized)."""
         (
             self.spark.createDataFrame([(1,)], "x int")
             .groupBy("x")
-            .applyInArrow(lambda table: table, schema="x int")
+            .applyInArrow(_echo, schema="x int")
             .count()
         )
         self.spark.read.parquet(f"{self.index_dir}/postings").count()
@@ -348,14 +376,8 @@ class Searcher:
     # --- internals -------------------------------------------------------
 
     def _with_grp(self, rows: DataFrame) -> DataFrame:
-        """Attach the scoring-group key ``grp``: the segment itself on
-        an uncompacted index, else the broadcast ``segmap`` lookup, so
-        all runs of a coarsened group — merged or untouched — co-group."""
-        if self.segmap is None:
-            return rows.withColumn("grp", F.col("segment"))
-        return rows.join(F.broadcast(self.segmap), "segment", "left").withColumn(
-            "grp", F.coalesce("grp", F.col("segment"))
-        )
+        """Attach the scoring-group key ``grp`` pinned at open."""
+        return rows.withColumn("grp", self._grp)
 
     def _term_pred(self, terms: list[str]) -> F.Column:
         """Rows of ``terms`` in a bucket-partitioned table (postings or

@@ -222,6 +222,76 @@ def test_conjunctive_topk_over_62_terms_raises(spark, searcher):
     assert searcher.topk(terms, k=10).collect() == []
 
 
+def test_compacted_topk_runs_as_many_jobs_as_uncompacted(spark, searcher,
+                                                         tmp_path):
+    """The segment map is pinned at open: a point query on a compacted
+    index schedules no job beyond an uncompacted index's (no per-query
+    segmap scan and broadcast)."""
+    flat = str(tmp_path / "flat")
+    build_index(spark, SF_DIR, flat, n_buckets=8)
+    jobs = []
+    for d in (flat, searcher.index_dir):
+        with Searcher(spark, d, persist=False) as s:
+            s.topk(["data", "join"], k=10).collect()  # warm
+            jobs.append(len(_no_job_runs(
+                spark, s.topk(["data", "join"], k=10).collect)))
+    assert jobs[0] == jobs[1] > 0
+
+
+def test_worker_zip_caches_are_stat_keyed(spark, searcher):
+    """Once glug_spark is imported in a Spark Python worker, its
+    ``importlib.invalidate_caches()`` (PySpark's call before every task)
+    re-reads each unchanged zip archive on its path at most once, then
+    never — not once per zipimporter, as CPython < 3.13 does. The
+    driver's zipimporter stays unpatched."""
+    import zipimport
+
+    searcher.topk(["data"], k=10).collect()  # an engine kernel ran
+
+    def probe(table):
+        import importlib
+        import sys
+        import zipimport
+
+        import pyarrow as pa
+
+        import glug_spark  # noqa: F401  (a no-op where a kernel ran)
+
+        reads = []
+        original = zipimport._read_directory
+
+        def counting(archive):
+            reads.append(archive)
+            return original(archive)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+            first = len(reads)
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = original
+        zips = [imp for imp in sys.path_importer_cache.values()
+                if isinstance(imp, zipimport.zipimporter)]
+        return pa.table({
+            "first": [first], "second": [len(reads) - first],
+            "importers": [len(zips)],
+            "archives": [len({imp.archive for imp in zips})],
+        })
+
+    rows = (
+        spark.range(8).selectExpr("id % 4 AS g").groupBy("g")
+        .applyInArrow(probe, schema="first long, second long, "
+                                    "importers long, archives long")
+        .collect()
+    )
+    assert len(rows) == 4
+    for r in rows:
+        assert r["second"] == 0, r
+        assert r["first"] <= r["archives"], r
+    assert zipimport.zipimporter.invalidate_caches.__module__ == "zipimport"
+
+
 def test_searcher_on_stream_ingested_index(spark, tmp_path):
     """A Searcher opened AFTER ingestion sees the union corpus and is
     rank-identical to the full scan (snapshot semantics: open after

@@ -11,6 +11,7 @@ modules whose logic is pure Python and fully exercisable without a JVM:
     glug_spark/index/codec.py   (varbyte/delta/block codec)
     glug_spark/query/parser.py  (glug-dialect query parser)
     glug_spark/query/oracle.py  (composed-query oracle SQL builder)
+    glug_spark/zipcache.py      (stat-keyed zip caches of Spark workers)
 
 Line coverage: executed lines / executable lines (trace's lineno
 table). Branch coverage: for every ``if``/``while``/``for`` statement,
@@ -55,6 +56,7 @@ FAST_TESTS = [
     "tests/test_cli.py",
     "tests/test_oracle_builder.py",
     "tests/test_kernel_gaps.py",
+    "tests/test_zipcache.py",
 ]
 
 TARGETS = [
@@ -66,6 +68,7 @@ TARGETS = [
     "glug_spark/index/codec.py",
     "glug_spark/query/parser.py",
     "glug_spark/query/oracle.py",
+    "glug_spark/zipcache.py",
 ]
 
 
